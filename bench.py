@@ -235,8 +235,7 @@ def ensure_changelog(spark, out_dir: str, n_events: int) -> str:
 
 
 def cdc_apply(spark, changelog_dir: str, n_events: int, n_batches: int = 4,
-              n_buckets: int = 16, warmup: bool = True,
-              profile_mode: str = "fused") -> dict[str, float]:
+              n_buckets: int = 16, warmup: bool = True) -> dict[str, float]:
     """The primary metric: reduce + MERGE n_batches microbatches into a
     fresh snapshot table; report events/sec. A small warmup apply first
     pays JIT/codegen once (steady-state throughput is what a long-running
@@ -245,12 +244,7 @@ def cdc_apply(spark, changelog_dir: str, n_events: int, n_batches: int = 4,
     ``n_buckets`` is sized for the DATA, exactly as it would be at 100 TB
     (target ~100-500 MB per file): at the bench's few-hundred-k-row final
     state, 16 buckets measured ~40% faster than 64 — per-file fixed cost
-    (footer stats, commit bookkeeping) dominates once files get tiny.
-
-    ``profile_mode='fused'`` (SnapshotTable.merge) overlaps the
-    stats/lineage job with the merge-write — the right mode for this
-    key-diffuse steady state; measured +14-22%% events/sec at BOTH
-    local[8] and local[32] vs the synchronous pre-pass."""
+    (footer stats, commit bookkeeping) dominates once files get tiny."""
     from pyspark.sql import functions as F
 
     from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
@@ -258,14 +252,12 @@ def cdc_apply(spark, changelog_dir: str, n_events: int, n_batches: int = 4,
     changelog = spark.read.parquet(changelog_dir)
     if warmup:
         wroot = tempfile.mkdtemp(prefix="bench-warm-")
-        wpipe = MergePipeline(spark, wroot + "/tbl", n_buckets=n_buckets,
-                              profile_mode=profile_mode)
+        wpipe = MergePipeline(spark, wroot + "/tbl", n_buckets=n_buckets)
         wpipe.apply(changelog.filter(F.col("lsn") <= n_events // 10), batch_id=0)
         shutil.rmtree(wroot, ignore_errors=True)
 
     root = tempfile.mkdtemp(prefix="bench-tbl-")
-    pipe = MergePipeline(spark, root + "/tbl", n_buckets=n_buckets,
-                         profile_mode=profile_mode)
+    pipe = MergePipeline(spark, root + "/tbl", n_buckets=n_buckets)
     step = n_events // n_batches + 1
     t0 = time.time()
     for i in range(n_batches):
@@ -309,8 +301,7 @@ def reduce_strategy_comparison(spark, changelog_dir: str, limit: int = 200_000) 
 
 
 def streaming_apply(spark, changelog_dir: str, n_events: int,
-                    files_per_trigger: int = 16, n_buckets: int = 32,
-                    profile_mode: str = "fused") -> dict:
+                    files_per_trigger: int = 16, n_buckets: int = 32) -> dict:
     """The north star measured AS A STREAM: ChangelogTailer drains the
     changelog directory through readStream + foreachBatch into a fresh
     snapshot table (exactly-once ledger active), availableNow. Reports
@@ -324,7 +315,7 @@ def streaming_apply(spark, changelog_dir: str, n_events: int,
     root = tempfile.mkdtemp(prefix="bench-stream-", dir=_bench_tmpdir())
     table = SnapshotTable.create(spark, root + "/tbl", PAYLOAD_SCHEMA,
                                  n_buckets=n_buckets)
-    tailer = ChangelogTailer(spark, table, profile_mode=profile_mode)
+    tailer = ChangelogTailer(spark, table)
     t0 = time.time()
     q = tailer.start(changelog_dir, root + "/ckpt", available_now=True,
                      max_files_per_trigger=files_per_trigger)

@@ -4,7 +4,7 @@ plus its maintenance chores), as subcommands over the library surface:
 
     python -m data_hub_ejp_xml_pipeline_spark tail --changelog DIR \
         --table ROOT --checkpoint DIR [--mor --k-compact 8] \
-        [--processing-time "30 seconds"] [--profile-mode fused]
+        [--processing-time "30 seconds"]
     python -m data_hub_ejp_xml_pipeline_spark apply --changelog PATH \
         --table ROOT --batch-id N
     python -m data_hub_ejp_xml_pipeline_spark compact --table ROOT [--mor]
@@ -57,7 +57,6 @@ def _build_parser() -> argparse.ArgumentParser:
     t.add_argument("--key", default="doc_id",
                    help="key column when CREATING the table; an existing "
                         "table's manifest key always wins")
-    t.add_argument("--profile-mode", choices=("pre", "fused"), default="pre")
     t.add_argument("--mor", action="store_true", help="merge-on-read group commit")
     t.add_argument("--k-compact", type=int, default=8)
 
@@ -69,7 +68,6 @@ def _build_parser() -> argparse.ArgumentParser:
     a.add_argument("--key", default="doc_id",
                    help="key column when CREATING the table; an existing "
                         "table's manifest key always wins")
-    a.add_argument("--profile-mode", choices=("pre", "fused"), default="pre")
     a.add_argument("--inclusive-guard", action="store_true",
                    help="apply with s.lsn >= t._lsn (replication feeds "
                         "carrying row-DML changes at unchanged LSNs); "
@@ -360,14 +358,12 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
             pipe = MorPipeline(spark, args.table, key=args.key,
                                n_buckets=args.n_buckets,
                                k_compact=args.k_compact,
-                               profile_mode=args.profile_mode,
                                dedup_state=_dedup_state(),
                                dlq_state=_dlq_state(),
                                **_placeholder_kw())
         else:
             pipe = _attach_scd2(MergePipeline(spark, args.table, key=args.key,
                                               n_buckets=args.n_buckets,
-                                              profile_mode=args.profile_mode,
                                               dedup_state=_dedup_state(),
                                               ivm_state=_ivm_state(),
                                               dlq_state=_dlq_state(),
@@ -396,7 +392,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
         pipe = _attach_scd2(MergePipeline(spark, args.table, key=args.key,
                                           n_buckets=args.n_buckets,
-                                          profile_mode=args.profile_mode,
                                           dedup_state=_dedup_state(),
                                           ivm_state=_ivm_state(),
                                           dlq_state=_dlq_state(),

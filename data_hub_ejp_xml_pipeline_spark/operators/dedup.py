@@ -277,7 +277,6 @@ def incremental_minhash_flags(
     id_col: str = "doc_id",
     text_col: str = "text",
     persist_registry: list | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-dup flags for a NEW batch against the already-ingested corpus —
     the CDC-shaped dedup: per epoch, only the batch is shingled/minhashed;
@@ -309,11 +308,9 @@ def incremental_minhash_flags(
     bands_new = minhash_bands(sh_new, n_hashes, band_size)
 
     # broadcast is right while the batch band set fits the executor
-    # broadcast budget (any realistic microbatch); disable for extreme
-    # batches and let both sides shuffle on (band_no, band_hash)
-    bn = F.broadcast(bands_new) if broadcast_batch else bands_new
+    # broadcast budget (any realistic microbatch)
     cand_corpus = (
-        bn.alias("n")
+        F.broadcast(bands_new).alias("n")
         .join(
             corpus_bands.alias("c"),
             (F.col("n.band_no") == F.col("c.band_no"))

@@ -63,7 +63,6 @@ class MorPipeline:
         k_compact: int = 4,
         reduce_strategy: str = "agg",
         payload_schema: T.StructType = PAYLOAD_SCHEMA,
-        profile_mode: str = "pre",
         dedup_state=None,
         dlq_state=None,
         placeholder_cols: list[str] | None = None,
@@ -90,7 +89,6 @@ class MorPipeline:
         self.key = key
         self.k_compact = k_compact
         self.reduce_strategy = reduce_strategy
-        self.profile_mode = profile_mode
         self.dedup_state = dedup_state
         self.dlq_state = dlq_state
         if placeholder_cols and dedup_state is not None:
@@ -249,7 +247,6 @@ class MorPipeline:
             op_col="op",
             lsn_col=LSN_COL,
             stats_df=staged,
-            profile_mode=self.profile_mode,
         )
         self.delta.truncate()
         self._since_compact = 0

@@ -57,7 +57,6 @@ class MultiTablePipeline:
         n_buckets: int = 16,
         lsn_source: str = "lsn",
         json_col: str = "value",
-        profile_mode: str = "pre",
         pipeline_kwargs: dict[str, dict] | None = None,
         auto_evolve: bool = False,
         wire_dlq=None,
@@ -105,7 +104,6 @@ class MultiTablePipeline:
                 key=keys.get(t, "doc_id"),
                 n_buckets=n_buckets,
                 payload_schema=sch,
-                profile_mode=profile_mode,
                 **pipeline_kwargs.get(t, {}),
             )
             for t, sch in self.schemas.items()

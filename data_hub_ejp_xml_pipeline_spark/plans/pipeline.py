@@ -32,7 +32,6 @@ class MergePipeline:
         n_salts: int = 16,
         payload_schema: T.StructType = PAYLOAD_SCHEMA,
         files_per_bucket: int = 1,
-        profile_mode: str = "pre",
         dedup_state=None,
         ivm_state=None,
         scd2_state=None,
@@ -108,7 +107,6 @@ class MergePipeline:
         self.key = key
         self.reduce_strategy = reduce_strategy
         self.n_salts = n_salts
-        self.profile_mode = profile_mode
         if placeholder_cols and (
             dedup_state is not None
             or ivm_state is not None
@@ -294,7 +292,6 @@ class MergePipeline:
         if not jobs:
             return self.table.merge(
                 reduced, batch_id=batch_id, stats_df=changelog,
-                profile_mode=self.profile_mode,
                 inclusive_guard=self.inclusive_guard,
             )
         box: dict = {}
@@ -321,7 +318,6 @@ class MergePipeline:
         try:
             result = self.table.merge(
                 reduced, batch_id=batch_id, stats_df=changelog,
-                profile_mode=self.profile_mode,
                 inclusive_guard=self.inclusive_guard,
                 pre_commit_hook=_barrier,
             )

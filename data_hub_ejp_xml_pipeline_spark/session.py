@@ -51,7 +51,8 @@ def get_spark(
         # grouped-map / mapInPandas batches: bigger batches amortize Arrow
         # transfer for token-array payloads
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # no console progress bar: it interleaves with stdout and corrupts
         # machine-readable output (the bench contract is ONE JSON line)
@@ -65,6 +66,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 48g. A local-mode JVM grows its
+    heap toward the limit before collecting, so a limit above what the
+    machine has gets the process OOM-killed instead of garbage-collected;
+    the other half is left to Python workers and the page cache."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, kib // 2048)}m"
 
 
 def _master_threads(master: str, default: int) -> int:

@@ -43,7 +43,6 @@ class ChangelogTailer:
         n_salts: int = 16,
         metrics_path: str | None = None,
         fail_after_batches: int | None = None,  # test hook: simulated crash
-        profile_mode: str = "pre",
         pipeline=None,
         maintenance=None,
         maintenance_every: int = 8,
@@ -54,7 +53,7 @@ class ChangelogTailer:
         ``plans.mor_pipeline.MorPipeline`` for append-then-compact group
         commit, or ``plans.pipeline.MergePipeline``); exactly-once then
         rides THAT pipeline's ledger. On the pipeline path the tailer's
-        ``reduce_strategy``/``n_salts``/``profile_mode`` knobs are NOT
+        ``reduce_strategy``/``n_salts`` knobs are NOT
         consulted — the injected pipeline owns its reduce and merge
         configuration. A duck-typed pipeline without a ``base``/``table``
         attribute works too, but must then provide ``metrics_path``
@@ -82,10 +81,6 @@ class ChangelogTailer:
         self.table = table
         self.reduce_strategy = reduce_strategy
         self.n_salts = n_salts
-        # "fused" overlaps the stats/lineage job with the merge-write —
-        # right for a key-diffuse high-throughput tail; see
-        # SnapshotTable.merge
-        self.profile_mode = profile_mode
         self.metrics_path = metrics_path or os.path.join(
             self.table.root, "metrics.jsonl"
         )
@@ -121,8 +116,7 @@ class ChangelogTailer:
             # batch stats (count, max event time) come back from the
             # merge's own stats job — no extra persist/count/max actions
             # per microbatch
-            result = self.table.merge(reduced, batch_id=batch_id, stats_df=batch_df,
-                                      profile_mode=self.profile_mode)
+            result = self.table.merge(reduced, batch_id=batch_id, stats_df=batch_df)
         if result.n_events == 0 and not result.applied:
             return  # empty batch (or already-applied epoch) — reference F4
         elapsed = max(time.time() - t0, 1e-9)

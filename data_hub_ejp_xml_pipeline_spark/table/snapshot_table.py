@@ -51,7 +51,6 @@ import bisect
 import json
 import logging
 import os
-import threading
 import time
 from dataclasses import dataclass
 from typing import Any
@@ -104,31 +103,6 @@ class CommitResult:
 
 class SnapshotTable:
     """Iceberg-semantics table: create/append/merge/add_columns/time-travel."""
-
-    # Batches at or below this many events merge via a broadcast plan (the
-    # target side is scanned map-side — never shuffled, never sorted);
-    # above it, the sort-merge full-outer join runs. Default 0 = always
-    # sort-merge: measured in THIS sandbox (single JVM, tmpfs shuffle) SMJ
-    # wins at every batch size because a local shuffle is nearly free while
-    # the broadcast plan pays a second pruned target scan + a driver-side
-    # broadcast build. On a real cluster — network shuffle, 100 TB target,
-    # small steady-state microbatches — set this to the largest batch size
-    # whose reduced form fits executor memory (e.g. 500k rows) so the
-    # target side stops being shuffled+sorted every epoch.
-    broadcast_merge_max_rows: int = 0
-
-    # "smj" (default): sort-merge full-outer join — both sides shuffle on
-    # the key. "bucket_local": batch rows shuffle ONCE on the bucket id;
-    # each task reads its bucket's data files DIRECTLY via pyarrow and
-    # merges in pandas — the 100 TB target side never enters a Spark
-    # shuffle at all. Storage-aware: only possible because the table owns
-    # its bucketed layout. Semantically pinned equal to smj by tests.
-    # Measured in THIS sandbox (single JVM, tmpfs shuffle) smj wins
-    # (5.3s vs 6.1s best-of at 1M events/4 batches): the local shuffle is
-    # nearly free while the kernel pays Arrow→pandas→Arrow. On a cluster
-    # the trade reverses — the target side is the 100 TB term and it never
-    # crosses the network here.
-    merge_strategy: str = "smj"
 
     def __init__(self, spark: SparkSession, root: str, strict_ledger: bool = False):
         self.spark = spark
@@ -830,7 +804,6 @@ class SnapshotTable:
         lsn_col: str = "lsn",
         validate_unique: bool = False,
         stats_df: DataFrame | None = None,
-        profile_mode: str = "pre",
         commit_retries: int = 0,
         retry_backoff_sec: float = 0.5,
         inclusive_guard: bool = False,
@@ -858,24 +831,10 @@ class SnapshotTable:
         a fresh table, or construct with ``strict_ledger=True`` to raise on
         sub-watermark ids instead (a warning is logged either way).
 
-        ``profile_mode`` picks when the per-commit stats/lineage aggregation
-        runs relative to the merge-write:
-
-        * ``"pre"`` (default): a synchronous pre-pass job. Its per-bucket
-          key ranges feed the min/max FILE PRUNING — the right mode when
-          batches touch a localized key range, so most of the table is
-          carried forward unread.
-        * ``"fused"``: the same aggregation runs CONCURRENTLY with the
-          merge-write from a second driver thread (FIFO scheduling backfills
-          the write's straggler-idle cores with the narrow-column profile
-          scan), and the epoch pays ONE job's worth of wall clock instead of
-          two. Exact per-file lineage and batch stats are unchanged. The
-          trade: pruning needs the ranges BEFORE the write plan exists, so
-          fused mode rewrites every live file — only correct-AND-fast when
-          batches are key-diffuse (the uniform steady state of a
-          high-throughput CDC tail, where every file is touched anyway).
-          Implies the sort-merge path (the broadcast-vs-SMJ choice also
-          needs the pre-pass row count).
+        The plan: one synchronous stats/lineage pre-pass job (its
+        per-bucket key ranges drive the min/max FILE PRUNING, so files the
+        batch cannot touch carry forward unread), then a sort-merge full
+        outer join of the batch against the touched files and the write.
 
         ``inclusive_guard=True`` relaxes WHEN MATCHED to ``s.lsn >=
         t._lsn`` — for REPLICATION feeds (:meth:`changelog_between`),
@@ -921,8 +880,7 @@ class SnapshotTable:
                 return self._commit(
                     updates, operation="merge", batch_id=batch_id, merge=True,
                     op_col=op_col, lsn_col=lsn_col, stats_df=stats_df,
-                    profile_mode=profile_mode, inclusive_guard=inclusive_guard,
-                    pre_commit_hook=pre_commit_hook,
+                    inclusive_guard=inclusive_guard, pre_commit_hook=pre_commit_hook,
                 )
             except ConcurrentCommitError:
                 if attempt >= commit_retries:
@@ -945,14 +903,10 @@ class SnapshotTable:
         op_col: str = "op",
         lsn_col: str = "lsn",
         stats_df: DataFrame | None = None,
-        profile_mode: str = "pre",
         replace: bool = False,
         inclusive_guard: bool = False,
         pre_commit_hook=None,
     ) -> CommitResult:
-        if profile_mode not in ("pre", "fused"):
-            raise ValueError(f"profile_mode must be 'pre' or 'fused', got {profile_mode!r}")
-        fused = merge and profile_mode == "fused"
         m = self.manifest()
         applied_snap = self._ledger_lookup(m, batch_id)
         if applied_snap is not None:
@@ -974,8 +928,7 @@ class SnapshotTable:
         try:
             return self._commit_inner(
                 updates, operation, batch_id, merge, op_col, lsn_col,
-                stats_df, profile_mode, replace, inclusive_guard, m, fused,
-                pre_commit_hook,
+                stats_df, replace, inclusive_guard, m, pre_commit_hook,
             )
         finally:
             if owned_cache:
@@ -990,11 +943,9 @@ class SnapshotTable:
         op_col: str,
         lsn_col: str,
         stats_df: DataFrame | None,
-        profile_mode: str,
         replace: bool,
         inclusive_guard: bool,
         m: dict[str, Any],
-        fused: bool,
         pre_commit_hook=None,
     ) -> CommitResult:
 
@@ -1024,125 +975,50 @@ class SnapshotTable:
         payload_schema = T.StructType(
             [f for f in merged_schema.fields if f.name not in INTERNAL_COLS]
         )
-        if merge:
-            # Two jobs per commit: the single grouping-sets pre-pass
-            # (lineage + touched buckets + per-bucket key ranges + stats)
-            # and the merge-write. ``stats_df`` lets callers pass the RAW
-            # (un-reduced) batch for the pre-pass — a narrow projection with
-            # no reduce — so the expensive LWW reduce executes exactly once
-            # (in the write job). Recomputing beats caching: persisting
-            # array<int> payloads costs more in columnar cache
-            # serialization than the re-aggregation.
-            src = updates.withColumn("_bucket", bucket)
-            stats_src = (
-                stats_df.withColumn("_bucket", bucket) if stats_df is not None else src
+        # Two jobs per commit: the single grouping-sets pre-pass (lineage +
+        # touched buckets + per-bucket key ranges + stats) and the write.
+        # ``stats_df`` lets callers pass the RAW (un-reduced) batch for the
+        # pre-pass — a narrow projection with no reduce — so the expensive
+        # LWW reduce executes exactly once (in the write job). Recomputing
+        # beats caching: persisting array<int> payloads costs more in
+        # columnar cache serialization than the re-aggregation.
+        src = updates.withColumn("_bucket", bucket)
+        stats_src = (
+            stats_df.withColumn("_bucket", bucket) if stats_df is not None else src
+        )
+        lineage_rows, bucket_ranges, batch_stats = self._batch_profile(stats_src, key)
+        if batch_stats["n_events"] == 0:
+            # empty batch (reference F4): no data files, no new snapshot, no
+            # ledger advance, no count toward a MOR compaction trigger
+            return CommitResult(
+                m["snapshot_id"], m["version"], applied=False, n_events=0
             )
-            profile_thread: threading.Thread | None = None
-            profile_box: dict[str, Any] = {}
-            if fused:
-                def _run_profile() -> None:
-                    try:
-                        profile_box["result"] = self._batch_profile(stats_src, key)
-                    except BaseException as exc:  # surfaced on join below
-                        profile_box["error"] = exc
-
-                # start the profile FIRST so the empty-batch probe below
-                # overlaps it instead of serializing in front of it (the
-                # probe is a limit-1 job: one driver round-trip per epoch)
-                profile_thread = threading.Thread(
-                    target=_run_profile, name="batch-profile", daemon=True
-                )
-                profile_thread.start()
-                # touch-all mode must not rewrite the whole table for an
-                # empty batch — a limit-1 probe is the cheap guard the
-                # pre-pass count normally provides (reference F4)
-                if stats_src.isEmpty():
-                    profile_thread.join()  # profile of an empty batch: fast
-                    if "error" in profile_box:
-                        # a broken stats/profile pipeline must surface on
-                        # EVERY epoch, empty ones included — swallowing it
-                        # here would hide the failure until a non-empty batch
-                        raise profile_box["error"]
-                    return CommitResult(
-                        m["snapshot_id"], m["version"], applied=False, n_events=0
-                    )
-                lineage_rows, bucket_ranges, batch_stats = [], {}, None
-            else:
-                lineage_rows, bucket_ranges, batch_stats = self._batch_profile(
-                    stats_src, key
-                )
-                if batch_stats["n_events"] == 0:
-                    # empty batch: no data files, no new snapshot (reference F4)
-                    return CommitResult(
-                        m["snapshot_id"], m["version"], applied=False, n_events=0
-                    )
+        max_parts = m["n_buckets"] * m.get("files_per_bucket", 1)
+        if merge:
             src_full = src.select(
                 *[conform_col(src, f).alias(f.name) for f in payload_schema.fields],
                 F.col(lsn_col).cast("long").alias(LSN_COL),
                 F.col(op_col).alias("_op"),
                 F.col("_bucket"),
             )
-            if fused:
-                # ranges aren't known until the concurrent profile lands —
-                # after the write plan is built — so every live file is
-                # touched (see merge() docstring for when that's the right
-                # trade)
-                touched_entries, carried = list(m["files"]), []
-                est_rows = sum(f["rows"] for f in touched_entries)
-            else:
-                # file-level pruning: only files whose key range can contain
-                # a batch key are read and rewritten; the rest carry forward
-                touched_entries, carried = _split_touched_files(
-                    m["files"], bucket_ranges
-                )
-                est_rows = (
-                    sum(f["rows"] for f in touched_entries) + batch_stats["n_events"]
-                )
+            # file-level pruning: only files whose key range can contain a
+            # batch key are read and rewritten; the rest carry forward
+            touched_entries, carried = _split_touched_files(m["files"], bucket_ranges)
+            est_rows = sum(f["rows"] for f in touched_entries) + batch_stats["n_events"]
             target = self._read_file_entries(touched_entries, existing_schema)
             target = conform_to_schema(target, merged_schema).withColumn("_bucket", bucket)
-
-            broadcast_batch = (not fused) and (
-                batch_stats["n_events"] <= self.broadcast_merge_max_rows
+            # pre-shuffle both join inputs on the key into exactly max_parts
+            # partitions: the join reuses this exchange (ENSURE_REQUIREMENTS
+            # is satisfied) and — because the bucket function is the
+            # hash-partitioning function — the join output is bucket-aligned
+            # for the shuffle-free write below. REPARTITION_BY_NUM also stops
+            # AQE from coalescing the layout.
+            result = _merge_rows(
+                target.repartition(max_parts, F.col(key)),
+                src_full.repartition(max_parts, F.col(key)),
+                key, payload_schema, inclusive_guard=inclusive_guard,
             )
-            bucket_local = (
-                self.merge_strategy == "bucket_local" and not broadcast_batch
-            )
-            max_parts_pre = m["n_buckets"] * m.get("files_per_bucket", 1)
-            if bucket_local:
-                result = self._merge_rows_bucket_local(
-                    src_full, key, payload_schema, touched_entries,
-                    m["n_buckets"], inclusive_guard=inclusive_guard,
-                )
-            elif not broadcast_batch:
-                # pre-shuffle both SMJ inputs on the key into exactly
-                # n_buckets*fpb partitions: the join reuses this exchange
-                # (ENSURE_REQUIREMENTS is satisfied) and — because the
-                # bucket function is the hash-partitioning function — the
-                # join output is bucket-aligned for the shuffle-free write
-                # below. REPARTITION_BY_NUM also stops AQE from coalescing
-                # the layout.
-                src_full = src_full.repartition(max_parts_pre, F.col(key))
-                target = target.repartition(max_parts_pre, F.col(key))
-            if not bucket_local:
-                result = _merge_rows(
-                    target, src_full, key, payload_schema, broadcast_batch,
-                    inclusive_guard=inclusive_guard,
-                )
         else:
-            src = updates.withColumn("_bucket", bucket)
-            stats_src = (
-                stats_df.withColumn("_bucket", bucket) if stats_df is not None else src
-            )
-            lineage_rows, bucket_ranges, batch_stats = self._batch_profile(
-                stats_src, key
-            )
-            if batch_stats["n_events"] == 0:
-                # same reference-F4 no-op as the merge branch: an empty
-                # epoch must not mint a snapshot, advance the ledger, or
-                # count toward a MOR compaction trigger
-                return CommitResult(
-                    m["snapshot_id"], m["version"], applied=False, n_events=0
-                )
             carried = [] if replace else list(m["files"])
             est_rows = batch_stats["n_events"]
             # _lsn must be derived BEFORE the conforming projection — it
@@ -1167,19 +1043,10 @@ class SnapshotTable:
         # output fan-out ∝ rows being rewritten: a pruned merge that touches
         # one file must not spray its few rows over n_buckets*fpb fragments.
         # target file size derives from the steady-state table shape.
-        max_parts = m["n_buckets"] * m.get("files_per_bucket", 1)
         table_rows = sum(f["rows"] for f in m["files"])
         rows_per_file = max(1, -(-max(table_rows, est_rows) // max_parts))
         n_parts = min(max_parts, max(1, -(-est_rows // rows_per_file)))
-        if fused:
-            # batch size is unknown until the concurrent profile lands:
-            # full fan-out is the only safe layout (and the intended one —
-            # fused mode IS the touch-everything steady state)
-            n_parts = max_parts
-        aligned_hash = m.get("bucket_hash") == "murmur3"
-        if merge and not broadcast_batch and (
-            bucket_local or (n_parts == max_parts and aligned_hash)
-        ):
+        if merge and n_parts == max_parts and m.get("bucket_hash") == "murmur3":
             # FULL-fan-out merge (the streaming steady state): because the
             # bucket function IS Spark's hash-partitioning function, a
             # shuffle on the key into max_parts partitions is already
@@ -1200,16 +1067,6 @@ class SnapshotTable:
             .partitionBy("_bucket")
             .parquet(snap_dir)
         )
-
-        if fused and profile_thread is not None:
-            # the concurrent profile overlaps the write; by now it is done
-            # or nearly so. A profile failure aborts BEFORE the manifest
-            # commit — the written snap_dir is an orphan that
-            # expire_snapshots sweeps, never a visible snapshot.
-            profile_thread.join()
-            if "error" in profile_box:
-                raise profile_box["error"]
-            lineage_rows, _, batch_stats = profile_box["result"]
 
         new_files = _list_bucket_files(
             snap_dir, snap_rel, key, m.get("stats_cols", ())
@@ -1255,126 +1112,6 @@ class SnapshotTable:
             max_event_ts=batch_stats["max_event_ts"],
             max_lsn=batch_stats.get("max_lsn"),
         )
-
-    def _merge_rows_bucket_local(
-        self,
-        src_full: DataFrame,
-        key: str,
-        payload_schema: T.StructType,
-        touched_entries: list[dict[str, Any]],
-        n_buckets: int,
-        inclusive_guard: bool = False,
-    ) -> DataFrame:
-        """Zero-target-shuffle merge: shuffle the (small) batch ONCE on the
-        bucket id so each task owns whole buckets, then read that bucket's
-        data files directly with pyarrow inside the task and merge in
-        pandas. The 100 TB target side moves node-local storage → task,
-        never through a Spark exchange. Memory: one task buffers its
-        buckets' batch rows + touched files (size buckets/files
-        accordingly).
-
-        Semantics identical to ``_merge_rows`` (pinned by tests): LSN
-        guard, delete tombstones, inserts.
-        """
-        files_by_bucket: dict[int, list[str]] = {}
-        for f in touched_entries:
-            files_by_bucket.setdefault(int(f["bucket"]), []).append(
-                os.path.join(self.root, f["path"])
-            )
-        payload_cols = [f.name for f in payload_schema.fields]
-        # every integer column must survive the outer merge in a NULLABLE
-        # integer dtype: pandas promotes int64-with-NaN to float64, which
-        # corrupts values above 2^53 by up to the ulp (~1024 at 7.5e18)
-        int_cols = [LSN_COL] + [
-            f.name
-            for f in payload_schema.fields
-            if isinstance(f.dataType, (T.LongType, T.IntegerType))
-        ]
-        out_schema = T.StructType(
-            list(payload_schema.fields)
-            + [
-                T.StructField(LSN_COL, T.LongType()),
-                T.StructField(DELETED_COL, T.BooleanType()),
-                T.StructField("_bucket", T.IntegerType()),
-            ]
-        )
-        tgt_cols = payload_cols + [LSN_COL, DELETED_COL]
-
-        def merge_partition(it):
-            import numpy as np
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            # a partition's rows can span several Arrow batches — buffer
-            # them, else a bucket would be merged (and its files re-read)
-            # once per chunk
-            chunks = list(it)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            for b, src in pdf.groupby("_bucket", sort=False):
-                src = src.copy()
-                for c in int_cols:
-                    src[c] = src[c].astype("Int64")
-                frames = []
-                for p in files_by_bucket.get(int(b), []):
-                    t = pq.read_table(p).to_pandas()
-                    for c in tgt_cols:  # schema evolution: old files → nulls
-                        if c not in t.columns:
-                            t[c] = None
-                    t = t[tgt_cols].copy()
-                    for c in int_cols:
-                        t[c] = t[c].astype("Int64")
-                    frames.append(t)
-                tgt = (
-                    pd.concat(frames, ignore_index=True)
-                    if frames
-                    else pd.DataFrame(
-                        {c: pd.Series(dtype="Int64" if c in int_cols else "object")
-                         for c in tgt_cols}
-                    )
-                )
-                m = tgt.merge(
-                    src, on=key, how="outer", suffixes=("__t", "__s"),
-                    indicator=True,
-                )
-                has_s = (m["_merge"] != "left_only").to_numpy()
-                has_t = (m["_merge"] != "right_only").to_numpy()
-                lsn_t = m[LSN_COL + "__t"]
-                lsn_s = m[LSN_COL + "__s"]
-                # exact _merge_rows semantics: s wins iff target absent OR
-                # s.lsn > t._lsn — a NULL target LSN makes the predicate
-                # NULL, so the TARGET wins (matches the SQL three-valued
-                # logic of the smj path)
-                gt = (
-                    (lsn_s >= lsn_t) if inclusive_guard else (lsn_s > lsn_t)
-                ).fillna(False).to_numpy(dtype=bool)
-                s_wins = has_s & (~has_t | gt)
-                win = pd.Series(s_wins, index=m.index)
-                out = {key: m[key]}
-                for c in payload_cols:
-                    if c == key:
-                        continue
-                    if c in int_cols:
-                        # Series.where keeps the nullable-Int64 dtype exact
-                        out[c] = m[c + "__s"].where(win, m[c + "__t"])
-                    else:
-                        out[c] = np.where(s_wins, m[c + "__s"], m[c + "__t"])
-                out[LSN_COL] = (
-                    lsn_s.where(win, lsn_t).astype("Int64")
-                )
-                deleted_t = m[DELETED_COL].fillna(False).to_numpy(dtype=bool)
-                is_delete = (m["_op"] == "D").fillna(False).to_numpy(dtype=bool)
-                out[DELETED_COL] = np.where(s_wins, is_delete, deleted_t)
-                res = pd.DataFrame(out)
-                res["_bucket"] = np.int32(b)
-                yield res[[f.name for f in out_schema.fields]]
-
-        # ONE shuffle, on the bucket value: every bucket lands wholly in
-        # one task (hash collisions merge buckets into a task — handled by
-        # the groupby); the write below needs no further repartition
-        shuffled = src_full.repartition(n_buckets, F.col("_bucket"))
-        return shuffled.mapInPandas(merge_partition, schema=out_schema)
 
     # ------------------------------------------------------------- ledger
     def _ledger_lookup(self, m: dict[str, Any], batch_id: int | None) -> str | None:
@@ -2276,27 +2013,13 @@ def _merge_rows(
     src_full: DataFrame,
     key: str,
     payload_schema: T.StructType,
-    broadcast_batch: bool,
     inclusive_guard: bool = False,
 ) -> DataFrame:
-    """Produce the post-merge rows for the touched buckets.
-
-    Two physical strategies with identical semantics (pinned by tests):
-
-    * **broadcast** (small batches — the streaming steady state): a
-      full-outer join cannot use a broadcast hash join, so decompose into
-      (a) ``target LEFT JOIN broadcast(batch)`` — the 100 TB target side
-      is scanned map-side with NO shuffle and NO sort — plus (b) inserts =
-      ``batch ANTI JOIN broadcast(matched keys)``. Costs one extra
-      column-pruned target scan branch; saves the full shuffle+sort of the
-      target, which dominates at scale.
-    * **sort-merge full outer** (large batches): one pass, both sides
-      shuffle on the key; AQE handles skew splits.
-    """
+    """Produce the post-merge rows for the touched files: one sort-merge
+    full outer join of the target rows against the batch on the key."""
     t = target.alias("t")
-    s = (F.broadcast(src_full) if broadcast_batch else src_full).alias("s")
-    how = "left_outer" if broadcast_batch else "full_outer"
-    joined = t.join(s, on=F.col(f"t.{key}") == F.col(f"s.{key}"), how=how)
+    s = src_full.alias("s")
+    joined = t.join(s, on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="full_outer")
 
     outranks = (
         F.col(f"s.{LSN_COL}") >= F.col(f"t.{LSN_COL}")
@@ -2313,31 +2036,12 @@ def _merge_rows(
         F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False))
     )
     pick = lambda c: F.when(s_wins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))  # noqa: E731
-    merged = joined.select(
+    return joined.select(
         *[pick(f.name).alias(f.name) for f in payload_schema.fields],
         pick(LSN_COL).alias(LSN_COL),
         deleted.alias(DELETED_COL),
         F.when(s_wins, F.col("s._bucket")).otherwise(F.col("t._bucket")).alias("_bucket"),
     )
-    if not broadcast_batch:
-        return merged
-
-    # inserts: batch keys that matched no target row (phantom deletes are
-    # recorded as tombstones). matched-keys is bounded by the batch size →
-    # broadcastable anti-join; the extra target scan branch prunes to
-    # (key) columns only.
-    matched_keys = (
-        t.join(s, on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="inner")
-        .select(F.col(f"t.{key}").alias(key))
-        .distinct()
-    )
-    inserts = src_full.join(F.broadcast(matched_keys), on=key, how="left_anti").select(
-        *[F.col(f.name) for f in payload_schema.fields],
-        F.col(LSN_COL),
-        (F.col("_op") == F.lit("D")).alias(DELETED_COL),
-        F.col("_bucket"),
-    )
-    return merged.unionByName(inserts)
 
 
 def _with_key_bloom(writer, key: str, ndv_per_file: int):

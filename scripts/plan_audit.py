@@ -25,8 +25,7 @@ EXPECT = {
         "bucketed table files + tombstone filter, single codegen stage. "
         "The merge epoch's plan properties (map-side partial max_by, one "
         "exchange on doc_id reused by the SMJ, bucket-aligned shuffle-free "
-        "write) are pinned by tests/test_merge_strategies.py and measured "
-        "in scripts/profile_fused.py"
+        "write) are pinned by tests/test_merge_strategies.py"
     ),
     "lww_latest_event": (
         "partial_max_by -> Exchange hashpartitioning(doc_id) -> final agg; "

@@ -49,11 +49,11 @@ def run(threads: int, extra: dict) -> float:
     gen = os.path.join(_bench_tmpdir(), f"changelog_{N_EVENTS}")
     changelog = s.read.parquet(gen)
     w = tempfile.mkdtemp(prefix=f"cw-{threads}-", dir=_bench_tmpdir())
-    MergePipeline(s, w + "/t", n_buckets=32, profile_mode="fused").apply(
+    MergePipeline(s, w + "/t", n_buckets=32).apply(
         changelog.filter(F.col("lsn") <= N_EVENTS // 10), batch_id=0)
     shutil.rmtree(w, ignore_errors=True)
     root = tempfile.mkdtemp(prefix=f"ct-{threads}-", dir=_bench_tmpdir())
-    pipe = MergePipeline(s, root + "/t", n_buckets=32, profile_mode="fused")
+    pipe = MergePipeline(s, root + "/t", n_buckets=32)
     step = N_EVENTS // 2 + 1
     t0 = time.time()
     for i in range(2):

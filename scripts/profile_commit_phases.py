@@ -22,7 +22,7 @@ N_EVENTS = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
 THREADS = [int(x) for x in sys.argv[2:]] or [32, 8]
 
 
-def run(threads: int, profile_mode: str) -> dict[str, float]:
+def run(threads: int) -> dict[str, float]:
     from pyspark.sql import functions as F
 
     import data_hub_ejp_xml_pipeline_spark.table.snapshot_table as st
@@ -51,7 +51,7 @@ def run(threads: int, profile_mode: str) -> dict[str, float]:
     gen = os.path.join(_bench_tmpdir(), f"changelog_{N_EVENTS}")
     changelog = s.read.parquet(gen)
     root = tempfile.mkdtemp(prefix=f"cp-{threads}-", dir=_bench_tmpdir())
-    pipe = MergePipeline(s, root + "/t", n_buckets=32, profile_mode=profile_mode)
+    pipe = MergePipeline(s, root + "/t", n_buckets=32)
     # epoch 0 = warm + populate; epoch 1 = measured steady state
     half = N_EVENTS // 2
     pipe.apply(changelog.filter(F.col("lsn") <= half), batch_id=0)
@@ -75,9 +75,8 @@ def main() -> None:
     s = _fresh_spark(32)
     ensure_changelog(s, os.path.join(_bench_tmpdir(), f"changelog_{N_EVENTS}"), N_EVENTS)
     s.stop()
-    for mode in ("pre", "fused"):
-        for t in THREADS:
-            print(f"mode={mode} threads={t}: {run(t, mode)}", flush=True)
+    for t in THREADS:
+        print(f"threads={t}: {run(t)}", flush=True)
 
 
 if __name__ == "__main__":

@@ -22,7 +22,7 @@ def test_cli_tail_apply_show_expire(spark, tmp_path, changelog_dir, changelog_pd
     out = main(
         ["tail", "--changelog", changelog_dir, "--table", root,
          "--checkpoint", str(tmp_path / "ckpt"), "--max-files-per-trigger", "2",
-         "--n-buckets", "8", "--profile-mode", "fused"],
+         "--n-buckets", "8"],
         spark=spark,
     )
     expected = expected_final_state_pandas(changelog_pdf)

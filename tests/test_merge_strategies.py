@@ -1,6 +1,13 @@
-"""Broadcast-merge vs sort-merge full-outer: identical final state."""
+"""The single merge plan (pruned sort-merge full outer join) on the edges
+the shared-fixture suites do not reach: legacy bucket hashes, LSNs above
+2^53, and a failing stats pre-pass."""
 
 from __future__ import annotations
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.generator import spark_changelog_from_pandas
 from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
@@ -10,130 +17,6 @@ from data_hub_ejp_xml_pipeline_spark.oracle import (
 )
 from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
-
-
-def _apply_all(spark, tmp_path, changelog_pdf, name, broadcast_max):
-    table = SnapshotTable.create(spark, str(tmp_path / name), PAYLOAD_SCHEMA, n_buckets=8)
-    table.broadcast_merge_max_rows = broadcast_max
-    n = len(changelog_pdf)
-    edges = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        batch = spark_changelog_from_pandas(
-            spark, changelog_pdf.iloc[edges[i] : edges[i + 1]]
-        )
-        table.merge(reduce_latest(batch), batch_id=i, stats_df=batch)
-    return table
-
-
-def _hash(table):
-    return (
-        table.read()
-        .selectExpr("sum(pmod(xxhash64(doc_id, _lsn, n_tok, source), 1000000007)) h")
-        .first()
-        .h
-    )
-
-
-def test_broadcast_and_smj_merge_agree(spark, tmp_path, changelog_pdf):
-    bcast = _apply_all(spark, tmp_path, changelog_pdf, "bcast", broadcast_max=10**9)
-    smj = _apply_all(spark, tmp_path, changelog_pdf, "smj", broadcast_max=0)
-    expected = expected_final_state_pandas(changelog_pdf)
-    for table in (bcast, smj):
-        actual = (
-            table.read()
-            .selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn")
-            .toPandas()
-        )
-        assert_final_state_equal(actual, expected)
-    assert _hash(bcast) == _hash(smj)
-
-
-def test_broadcast_plan_has_no_smj(spark, tmp_path, changelog_pdf):
-    """The broadcast path must not shuffle-sort the target side."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import _merge_rows
-
-    table = _apply_all(spark, tmp_path, changelog_pdf, "t", broadcast_max=10**9)
-    target = table.read(include_tombstones=True).withColumn(
-        "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")
-    )
-    batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[:500])
-    src = reduce_latest(batch).select(
-        "doc_id", "tokens", "n_tok", "source",
-        F.col("lsn").alias("_lsn"), F.col("op").alias("_op"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("_bucket"),
-    )
-    payload = T.StructType([f for f in PAYLOAD_SCHEMA.fields])
-    plan = (
-        _merge_rows(target, src, "doc_id", payload, broadcast_batch=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan, plan[:1200]
-    assert plan.count("BroadcastHashJoin") >= 2  # left-outer + anti
-
-
-def test_bucket_local_and_smj_merge_agree(spark, tmp_path, changelog_pdf):
-    """The zero-target-shuffle kernel must produce byte-identical state."""
-    def apply_all(name, strategy):
-        table = SnapshotTable.create(
-            spark, str(tmp_path / name), PAYLOAD_SCHEMA, n_buckets=8
-        )
-        table.merge_strategy = strategy
-        n = len(changelog_pdf)
-        edges = [0, n // 3, 2 * n // 3, n]
-        for i in range(3):
-            batch = spark_changelog_from_pandas(
-                spark, changelog_pdf.iloc[edges[i] : edges[i + 1]]
-            )
-            table.merge(reduce_latest(batch), batch_id=i, stats_df=batch)
-        return table
-
-    bl = apply_all("bl", "bucket_local")
-    smj = apply_all("smj2", "smj")
-    expected = expected_final_state_pandas(changelog_pdf)
-    for table in (bl, smj):
-        actual = (
-            table.read()
-            .selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn")
-            .toPandas()
-        )
-        assert_final_state_equal(actual, expected)
-    assert _hash(bl) == _hash(smj)
-    # tombstones agree too (deletes must not resurrect under either path)
-    tomb_bl = sorted(r.doc_id for r in bl.read(include_tombstones=True).filter("_deleted").collect())
-    tomb_smj = sorted(r.doc_id for r in smj.read(include_tombstones=True).filter("_deleted").collect())
-    assert tomb_bl == tomb_smj
-
-
-def test_bucket_local_plan_never_scans_target_in_spark(spark, tmp_path, changelog_pdf):
-    """The bucket_local merge's Spark plan contains NO parquet scan of the
-    table and only the one batch-side exchange."""
-    table = SnapshotTable.create(
-        spark, str(tmp_path / "plan_bl"), PAYLOAD_SCHEMA, n_buckets=8
-    )
-    table.merge_strategy = "bucket_local"
-    table.merge(
-        reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:1000])),
-        batch_id=0,
-    )
-    src = reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[1000:1500]))
-    from pyspark.sql import functions as F
-    src_full = src.select(
-        "doc_id", "tokens", "n_tok", "source",
-        F.col("lsn").alias("_lsn"), F.col("op").alias("_op"),
-        F.pmod(F.hash("doc_id"), F.lit(8)).cast("int").alias("_bucket"),
-    )
-    result = table._merge_rows_bucket_local(
-        src_full, "doc_id", PAYLOAD_SCHEMA,
-        table.manifest()["files"], 8,
-    )
-    plan = result._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" not in plan, plan[:1500]
-    assert "MapInPandas" in plan
 
 
 def test_legacy_xxhash_table_still_merges(spark, tmp_path, changelog_pdf):
@@ -166,17 +49,14 @@ def test_legacy_xxhash_table_still_merges(spark, tmp_path, changelog_pdf):
     assert table.read().count() == table.read().select("doc_id").distinct().count()
 
 
-def test_bucket_local_preserves_lsns_above_2_53(spark, tmp_path):
-    """The pandas kernel must not round-trip LSNs through float64: the
-    engine's mtime-major LSNs (~7.5e18) exceed 2^53 and would be corrupted
-    by up to the float ulp (~1024)."""
-    from pyspark.sql import types as T
-
+def test_merge_preserves_lsns_above_2_53(spark, tmp_path):
+    """LSNs must never round-trip through float64: the engine's mtime-major
+    LSNs (~7.5e18) exceed 2^53 and would be corrupted by up to the float
+    ulp (~1024) — in the merge guard, the stored value and a replay."""
     payload = T.StructType(
         [T.StructField("doc_id", T.StringType()), T.StructField("v", T.StringType())]
     )
     table = SnapshotTable.create(spark, str(tmp_path / "big"), payload, n_buckets=2)
-    table.merge_strategy = "bucket_local"
     base = 7_500_000_000_000_000_001  # > 2^53, odd (not float-representable)
     b1 = spark.createDataFrame(
         [(base, "U", "k1", "old"), (base + 1, "U", "k2", "x")],
@@ -197,3 +77,30 @@ def test_bucket_local_preserves_lsns_above_2_53(spark, tmp_path):
     assert {r.doc_id: r._lsn for r in table.read().collect()} == {
         "k1": base + 2, "k2": base + 1
     }
+
+
+def test_stats_failure_leaves_no_visible_snapshot(spark, tmp_path):
+    """If the stats/lineage pre-pass fails, the commit must abort before
+    the manifest write — no new version."""
+    table = SnapshotTable.create(spark, str(tmp_path / "t"), PAYLOAD_SCHEMA, n_buckets=4)
+    good = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": ["a", "b"],
+                "tokens": [[1, 2], [3]],
+                "n_tok": [2, 1],
+                "source": ["s", "s"],
+                "op": ["U", "U"],
+                "lsn": [1, 2],
+            }
+        )
+    )
+    # stats_df whose evaluation raises: an ANSI divide-by-zero on the
+    # second row only, which the full profile aggregation must evaluate
+    bad_stats = good.withColumn(
+        "offset",
+        (F.lit(1) / F.when(F.col("lsn") == 2, F.lit(0)).otherwise(F.lit(1))).cast("long"),
+    ).withColumn("source_file", F.lit("f"))
+    with pytest.raises(Exception):
+        table.merge(good, batch_id=0, stats_df=bad_stats)
+    assert table.current_version() == 0
