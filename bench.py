@@ -275,31 +275,6 @@ def cdc_apply(spark, changelog_dir: str, n_events: int, n_batches: int = 4,
     }
 
 
-def reduce_strategy_comparison(spark, changelog_dir: str, limit: int = 200_000) -> dict[str, float]:
-    """Time each LWW-reduce strategy on the same slice. Shows WHY `agg` is
-    the default (JVM partial agg) and what the pandas paths cost."""
-    from pyspark.sql import functions as F
-
-    from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
-
-    sl = spark.read.parquet(changelog_dir).filter(F.col("lsn") <= limit)
-    # warm the Python worker pool once so pandas strategies aren't charged
-    # interpreter startup
-    reduce_latest(sl.limit(1000), strategy="hybrid").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out: dict[str, float] = {}
-    # "applyinpandas" is the GUARDED entry point (reroutes to hybrid above
-    # the size threshold); "applyinpandas!" would be the raw 50x shape.
-    # "salted" is excluded here: it's a skew tool (group count keys*salts)
-    # and this comparison slice is key-uniform — see lww.py docstring.
-    for strat in ("agg", "hybrid", "window", "applyinpandas"):
-        t0 = time.time()
-        reduce_latest(sl, strategy=strat).write.format("noop").mode("overwrite").save()
-        out[strat] = round(time.time() - t0, 3)
-    return out
-
-
 def streaming_apply(spark, changelog_dir: str, n_events: int,
                     files_per_trigger: int = 16, n_buckets: int = 32) -> dict:
     """The north star measured AS A STREAM: ChangelogTailer drains the
@@ -308,14 +283,12 @@ def streaming_apply(spark, changelog_dir: str, n_events: int,
     end-to-end events/sec including checkpoint + commit overhead.
     Env-gated (SPARK_GRAFT_BENCH_STREAMING=1): the batch cdc_apply above
     measures the same merge path without streaming machinery."""
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
     from data_hub_ejp_xml_pipeline_spark.streaming.tailer import ChangelogTailer
-    from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import SnapshotTable
-    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
 
     root = tempfile.mkdtemp(prefix="bench-stream-", dir=_bench_tmpdir())
-    table = SnapshotTable.create(spark, root + "/tbl", PAYLOAD_SCHEMA,
-                                 n_buckets=n_buckets)
-    tailer = ChangelogTailer(spark, table)
+    pipe = MergePipeline(spark, root + "/tbl", n_buckets=n_buckets)
+    tailer = ChangelogTailer(spark, pipe)
     t0 = time.time()
     q = tailer.start(changelog_dir, root + "/ckpt", available_now=True,
                      max_files_per_trigger=files_per_trigger)
@@ -325,7 +298,7 @@ def streaming_apply(spark, changelog_dir: str, n_events: int,
         "elapsed_sec": round(elapsed, 3),
         "events_per_sec": round(n_events / elapsed, 1),
         "n_epochs": len(tailer.metrics),
-        "final_rows": table.read().count(),
+        "final_rows": pipe.table.read().count(),
     }
     shutil.rmtree(root, ignore_errors=True)
     return out
@@ -421,7 +394,6 @@ def main() -> None:
         },
         "apply_trials_sec": [r["elapsed_sec"] for r in apply_trials],
         "kernel_trials_sec": kernel_trials,
-        "reduce_strategies_sec": reduce_strategy_comparison(spark, gen_dir),
     }
     if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "0") == "1":
         detail["streaming"] = min(

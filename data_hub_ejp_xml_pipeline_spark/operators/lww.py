@@ -6,30 +6,15 @@ Implements SURVEY.md §2.4 A7: the reference emits full-row images with a
 ``bq_data_service.py:23,35``). The engine makes it explicit: collapse a
 changelog batch to one row per ``doc_id`` — the event with max ``lsn``.
 
-Four strategies, all semantically identical (pinned by tests against the
-pandas oracle):
-
-* ``agg``       — ``groupBy(key).agg(max_by(struct(*), order))``. The
-  default and the fastest: a hash aggregate with **map-side partial
-  aggregation**, so replayed/hot keys are pre-collapsed on the map side
-  before the shuffle — this is what defuses skew for free, the reason the
-  default path needs no explicit salting.
-* ``window``    — ``row_number() over (partition by key order by lsn desc)``.
-  A full shuffle+sort per key; kept for comparison, never the scale pick.
-* ``applyinpandas`` — grouped-map pandas UDF (north-star mandated shape).
-  No partial aggregation: every replica of a hot key crosses the shuffle,
-  and pandas pays a per-group call — measured ~10x slower than ``agg`` at
-  1M events. Kept for parity; not the scale pick.
-* ``salted``    — two-phase: grouped-map partial reduce per ``(key, salt)``
-  where ``salt = pmod(xxhash64(source_file, offset), n)`` splits a hot key
-  across n reducers, then a JVM ``max_by`` final over ≤n rows per key.
-  This is the explicit skew fix for the grouped-map path (AQE splits
-  skewed *joins*, not grouped-map shuffles — SURVEY.md §4 custom piece #2).
-* ``hybrid``    — vectorized pandas partial + JVM final: ``mapInPandas``
-  does a partition-local ``drop_duplicates(keep=max-lsn)`` per Arrow batch
-  (ONE pandas call per batch — no per-group overhead, no shuffle), then
-  ``agg max_by`` finishes. The pandas path that actually scales: map-side
-  combine in pandas, skew-immune final in the JVM.
+One plan: ``groupBy(key).agg(max_by(struct(payload), order))``. It runs as
+a two-phase aggregate with **map-side partial aggregation**, so replayed
+and hot keys are collapsed on the map side before the shuffle: a key
+carrying 30% of a batch crosses the exchange as at most one row per map
+task. That is why the reduce needs no salting for skew (AQE splits
+skewed *joins*, not aggregates — SURVEY.md §4 custom piece #2). A
+grouped-map pandas UDF has no partial phase and pays a Python call per
+key (measured ~10x slower at 1M events); the grouped-map, window and
+salted shapes live on as ``lww_*`` queries in ``queries.py``.
 
 Ordering ties: replayed events are identical full-row images (reference
 replays whole files, ``dags/s3_xml_import_pipeline.py:149-170``), so a
@@ -39,62 +24,10 @@ order key is ``struct(lsn, offset, source_file)``.
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _ORDER_COLS = ["lsn", "offset", "source_file"]
-
-
-# above this many rows the plain grouped-map strategy (no partial
-# aggregation, one pandas call per key) is a measured ~50x scale-killer;
-# reduce_latest reroutes it to the salted two-phase variant
-APPLYINPANDAS_MAX_ROWS = 100_000
-
-
-def reduce_latest(
-    df: DataFrame,
-    key: str = "doc_id",
-    lsn_col: str = "lsn",
-    strategy: str = "agg",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Collapse a changelog to the latest event per key (schema preserved).
-
-    ``strategy='applyinpandas'`` is a parity shape, not a scale path: above
-    ``APPLYINPANDAS_MAX_ROWS`` (or on a streaming DataFrame, where the size
-    cannot be known) it routes through the ``hybrid`` variant — the pandas
-    kernel survives (ONE vectorized call per Arrow batch) but the per-group
-    python-call overhead does not. Pass ``strategy='applyinpandas!'`` to
-    force the raw shape regardless of size (tests/benchmarks only).
-
-    ``salted`` is a SKEW tool, not a general path: its group count is
-    keys×salts, so on uniform key distributions it multiplies the per-group
-    pandas overhead — use it when few hot keys dominate the batch.
-    """
-    if strategy == "agg":
-        return _reduce_agg(df, key, lsn_col)
-    if strategy == "window":
-        return _reduce_window(df, key, lsn_col)
-    if strategy == "applyinpandas!":
-        return _reduce_apply_in_pandas(df, key, lsn_col)
-    if strategy == "applyinpandas":
-        if df.isStreaming or _count_rows(df) > APPLYINPANDAS_MAX_ROWS:
-            return _reduce_hybrid(df, key, lsn_col)
-        return _reduce_apply_in_pandas(df, key, lsn_col)
-    if strategy == "salted":
-        return _reduce_salted(df, key, lsn_col, n_salts)
-    if strategy == "hybrid":
-        return _reduce_hybrid(df, key, lsn_col)
-    raise ValueError(f"unknown strategy: {strategy!r}")
-
-
-def _count_rows(df: DataFrame) -> int:
-    """One cheap count job guards a ~50x plan mistake; column-pruned to
-    nothing by Catalyst, so it reads no payload bytes from parquet."""
-    return df.count()
 
 
 def _order_struct(df: DataFrame, lsn_col: str) -> F.Column:
@@ -102,83 +35,12 @@ def _order_struct(df: DataFrame, lsn_col: str) -> F.Column:
     return F.struct(*[F.col(c) for c in cols])
 
 
-def _reduce_agg(df: DataFrame, key: str, lsn_col: str) -> DataFrame:
+def reduce_latest(
+    df: DataFrame, key: str = "doc_id", lsn_col: str = "lsn"
+) -> DataFrame:
+    """Collapse a changelog to the latest event per key (schema preserved)."""
     payload = [c for c in df.columns if c != key]
     reduced = df.groupBy(key).agg(
         F.max_by(F.struct(*payload), _order_struct(df, lsn_col)).alias("_latest")
     )
     return reduced.select(key, *[F.col(f"_latest.{c}").alias(c) for c in payload])
-
-
-def _reduce_window(df: DataFrame, key: str, lsn_col: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    order = [F.col(lsn_col).desc()] + [
-        F.col(c).desc() for c in _ORDER_COLS[1:] if c in df.columns
-    ]
-    w = W.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def _latest_rows_pandas(pdf: pd.DataFrame, key: str, lsn_col: str) -> pd.DataFrame:
-    order = [key, lsn_col] + [c for c in _ORDER_COLS[1:] if c in pdf.columns]
-    return pdf.sort_values(order, kind="mergesort").drop_duplicates([key], keep="last")
-
-
-def _reduce_apply_in_pandas(df: DataFrame, key: str, lsn_col: str) -> DataFrame:
-    schema = df.schema
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _latest_rows_pandas(pdf, key, lsn_col)
-
-    return df.groupBy(key).applyInPandas(reduce_group, schema=schema)
-
-
-def _reduce_salted(df: DataFrame, key: str, lsn_col: str, n_salts: int) -> DataFrame:
-    """Two-phase salted grouped-map reduce for hot-key skew.
-
-    Phase 1 groups on ``(key, _salt)`` so a key carrying 30% of all events
-    is split across ``n_salts`` reducers; phase 2 sees at most ``n_salts``
-    rows per key and runs as a JVM ``max_by`` (hash-partial, skew-immune) —
-    a grouped-map phase 2 would pay a pandas call per key.
-    """
-    schema = df.schema
-    salt_src = (
-        F.xxhash64("source_file", "offset")
-        if "source_file" in df.columns and "offset" in df.columns
-        else F.xxhash64(F.col(lsn_col))
-    )
-    salted = df.withColumn("_salt", F.pmod(salt_src, F.lit(n_salts)))
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _latest_rows_pandas(pdf, key, lsn_col)
-        return out.drop(columns=["_salt"])
-
-    partial = salted.groupBy(key, "_salt").applyInPandas(reduce_group, schema=schema)
-    return _reduce_agg(partial, key, lsn_col)
-
-
-def _reduce_hybrid(df: DataFrame, key: str, lsn_col: str) -> DataFrame:
-    """Vectorized pandas partial reduce + JVM final.
-
-    ``mapInPandas`` collapses each Arrow batch with ONE pandas
-    sort+drop_duplicates call (no shuffle, no per-group overhead) — the
-    pandas analog of map-side combine — then ``max_by`` finishes across
-    partitions. Replay-heavy and hot-key batches shrink before the only
-    shuffle.
-    """
-    schema = df.schema
-
-    def partial(it):
-        for pdf in it:
-            yield _latest_rows_pandas(pdf, key, lsn_col)
-
-    return _reduce_agg(df.mapInPandas(partial, schema=schema), key, lsn_col)
-
-
-def iter_reduce_strategies() -> Iterable[str]:
-    return ("agg", "window", "applyinpandas", "salted", "hybrid")

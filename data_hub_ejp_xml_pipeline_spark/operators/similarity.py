@@ -44,9 +44,10 @@ def _topk_per_query(scored: DataFrame, k: int, local_prefilter: bool) -> DataFra
     query_id)`` funnels EVERY scored candidate of a query through one
     reducer — rank windows do no partial aggregation, so at corpus scale
     that is the whole dataset through one task per query. With
-    ``local_prefilter=True`` a map-side pandas pass (same hybrid
-    partial-reduce idiom as ``operators.lww`` ``hybrid``) keeps only the
-    top-k per query per Arrow batch BEFORE any exchange — every global
+    ``local_prefilter=True`` a map-side pandas pass (a ``mapInPandas``
+    partial reduce: one vectorized sort per Arrow batch, the pandas
+    analog of map-side combine) keeps only the top-k per query per Arrow
+    batch BEFORE any exchange — every global
     top-k row is top-k in its own batch, so this is exact — and the window
     then sorts ≤ k × n_batches rows per query instead of the corpus.
 

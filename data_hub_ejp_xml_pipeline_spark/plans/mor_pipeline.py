@@ -61,7 +61,6 @@ class MorPipeline:
         key: str = "doc_id",
         n_buckets: int = 16,
         k_compact: int = 4,
-        reduce_strategy: str = "agg",
         payload_schema: T.StructType = PAYLOAD_SCHEMA,
         dedup_state=None,
         dlq_state=None,
@@ -88,7 +87,6 @@ class MorPipeline:
         self.spark = spark
         self.key = key
         self.k_compact = k_compact
-        self.reduce_strategy = reduce_strategy
         self.dedup_state = dedup_state
         self.dlq_state = dlq_state
         if placeholder_cols and dedup_state is not None:
@@ -207,9 +205,7 @@ class MorPipeline:
             finally:
                 pre.unpersist()
         else:
-            reduced = reduce_latest(
-                changelog, key=self.key, strategy=self.reduce_strategy
-            )
+            reduced = reduce_latest(changelog, key=self.key)
             if self.dedup_state is not None:
                 # fingerprint-then-reduce over the RAW batch (deleted keys'
                 # winners never enter the corpus state); the dedup shuffle

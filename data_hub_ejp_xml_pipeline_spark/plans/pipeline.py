@@ -28,8 +28,6 @@ class MergePipeline:
         table_root: str,
         key: str = "doc_id",
         n_buckets: int = 16,
-        reduce_strategy: str = "agg",
-        n_salts: int = 16,
         payload_schema: T.StructType = PAYLOAD_SCHEMA,
         files_per_bucket: int = 1,
         dedup_state=None,
@@ -105,8 +103,6 @@ class MergePipeline:
                 files_per_bucket=files_per_bucket,
             )
         self.key = key
-        self.reduce_strategy = reduce_strategy
-        self.n_salts = n_salts
         if placeholder_cols and (
             dedup_state is not None
             or ivm_state is not None
@@ -179,9 +175,7 @@ class MergePipeline:
                 return self._apply_reduced(changelog, reduced, batch_id)
             finally:
                 pre.unpersist()
-        reduced = reduce_latest(
-            changelog, key=self.key, strategy=self.reduce_strategy, n_salts=self.n_salts
-        )
+        reduced = reduce_latest(changelog, key=self.key)
         return self._apply_reduced(changelog, reduced, batch_id)
 
     def _apply_reduced(

@@ -27,37 +27,29 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
 from data_hub_ejp_xml_pipeline_spark.schemas import CHANGELOG_SCHEMA
-from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import SnapshotTable
 
 
 class ChangelogTailer:
-    """Tail a changelog directory into a SnapshotTable, exactly-once."""
+    """Tail a changelog directory through a pipeline, exactly-once."""
 
     def __init__(
         self,
         spark: SparkSession,
-        table: SnapshotTable | None = None,
-        reduce_strategy: str = "agg",
-        n_salts: int = 16,
+        pipeline,
         metrics_path: str | None = None,
         fail_after_batches: int | None = None,  # test hook: simulated crash
-        pipeline=None,
         maintenance=None,
         maintenance_every: int = 8,
     ):
-        """Pass EITHER ``table`` (per-epoch reduce + COW merge — the
-        default loop) OR ``pipeline`` — any object with
-        ``apply(batch_df, batch_id) -> CommitResult`` (e.g.
-        ``plans.mor_pipeline.MorPipeline`` for append-then-compact group
-        commit, or ``plans.pipeline.MergePipeline``); exactly-once then
-        rides THAT pipeline's ledger. On the pipeline path the tailer's
-        ``reduce_strategy``/``n_salts`` knobs are NOT
-        consulted — the injected pipeline owns its reduce and merge
-        configuration. A duck-typed pipeline without a ``base``/``table``
-        attribute works too, but must then provide ``metrics_path``
-        (there is no table root to derive it from).
+        """``pipeline``: any object with ``apply(batch_df, batch_id) ->
+        CommitResult`` — ``plans.pipeline.MergePipeline`` (per-epoch reduce
+        + COW merge), ``plans.mor_pipeline.MorPipeline`` (append-then-compact
+        group commit), ``plans.multi_table.MultiTablePipeline``, …;
+        exactly-once rides THAT pipeline's ledger, and the pipeline owns its
+        reduce and merge configuration. ``metrics_path`` defaults to
+        ``metrics.jsonl`` under the pipeline's ``base``/``table`` root; a
+        duck-typed pipeline without either attribute must pass it.
 
         ``maintenance``: an optional :class:`plans.maintenance.
         MaintenancePolicy` run inside ``foreachBatch`` every
@@ -65,25 +57,15 @@ class ChangelogTailer:
         policy's single-owner verbs (compaction/expiry/vacuum) can never
         race the stream's own writer. Maintenance outcomes land in the
         metrics stream beside the apply row."""
-        if (table is None) == (pipeline is None):
-            raise ValueError("pass exactly one of table= or pipeline=")
         self.spark = spark
         self.pipeline = pipeline
-        if table is None:
-            table = getattr(pipeline, "base", None) or getattr(
-                pipeline, "table", None
+        table = getattr(pipeline, "base", None) or getattr(pipeline, "table", None)
+        if table is None and metrics_path is None:
+            raise ValueError(
+                "pipeline has no base/table attribute to derive "
+                "metrics_path from — pass metrics_path= explicitly"
             )
-            if table is None and metrics_path is None:
-                raise ValueError(
-                    "pipeline has no base/table attribute to derive "
-                    "metrics_path from — pass metrics_path= explicitly"
-                )
-        self.table = table
-        self.reduce_strategy = reduce_strategy
-        self.n_salts = n_salts
-        self.metrics_path = metrics_path or os.path.join(
-            self.table.root, "metrics.jsonl"
-        )
+        self.metrics_path = metrics_path or os.path.join(table.root, "metrics.jsonl")
         self.metrics: list[dict[str, Any]] = []
         self._fail_after = fail_after_batches
         self._batches_seen = 0
@@ -99,24 +81,7 @@ class ChangelogTailer:
         self._batches_seen += 1
 
         t0 = time.time()
-        if self.pipeline is not None:
-            # injected pipeline owns its own reduce + exactly-once ledger
-            result = self.pipeline.apply(batch_df, batch_id=batch_id)
-        else:
-            # reduce on the TABLE's key (from its manifest), not a
-            # hard-coded column: a table keyed on anything else would
-            # otherwise receive an un-reduced batch and fan out duplicate
-            # rows through the merge
-            reduced = reduce_latest(
-                batch_df,
-                key=self.table.manifest()["key"],
-                strategy=self.reduce_strategy,
-                n_salts=self.n_salts,
-            )
-            # batch stats (count, max event time) come back from the
-            # merge's own stats job — no extra persist/count/max actions
-            # per microbatch
-            result = self.table.merge(reduced, batch_id=batch_id, stats_df=batch_df)
+        result = self.pipeline.apply(batch_df, batch_id=batch_id)
         if result.n_events == 0 and not result.applied:
             return  # empty batch (or already-applied epoch) — reference F4
         elapsed = max(time.time() - t0, 1e-9)

@@ -12,6 +12,7 @@ import zipfile
 
 from pyspark.sql import types as T
 
+from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
 from data_hub_ejp_xml_pipeline_spark.sources.xml_zip import (
     entities_to_changelog,
     read_zip_entities,
@@ -62,7 +63,7 @@ def test_zip_stream_to_table_end_to_end(spark, tmp_path):
     os.utime(f3, (now + 10, now + 10))
 
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD, n_buckets=4)
-    tailer = ChangelogTailer(spark, table)
+    tailer = ChangelogTailer(spark, MergePipeline(spark, table.root))
 
     stream = entities_to_changelog(
         read_zip_entities(spark, str(zips), streaming=True)

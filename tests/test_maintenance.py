@@ -10,7 +10,7 @@ from data_hub_ejp_xml_pipeline_spark.oracle import (
     assert_final_state_equal,
     expected_final_state_pandas,
 )
-from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
+from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA, MergePipeline
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
 
 
@@ -378,7 +378,8 @@ def test_tailer_runs_maintenance_on_cadence(spark, tmp_path, changelog_pdf):
         table, keep_snapshots=2, vacuum_slack_lsn=0, vacuum_every=2
     )
     tailer = ChangelogTailer(
-        spark, table=table, maintenance=policy, maintenance_every=2
+        spark, MergePipeline(spark, table.root), maintenance=policy,
+        maintenance_every=2,
     )
     tailer.run_to_completion(d, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     ran = [m["maintenance"] for m in tailer.metrics if "maintenance" in m]
@@ -441,7 +442,8 @@ def test_tailer_vacuum_uses_committed_offset(spark, tmp_path, changelog_pdf):
     )
     assert policy.derived_watermark() is None or True  # empty table: None
     tailer = ChangelogTailer(
-        spark, table=table, maintenance=policy, maintenance_every=2
+        spark, MergePipeline(spark, table.root), maintenance=policy,
+        maintenance_every=2,
     )
     tailer.run_to_completion(d, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert policy.derived_watermark() is None
@@ -469,7 +471,6 @@ def test_tailer_policy_maintains_sidecars_in_stream(spark, tmp_path):
     )
     from data_hub_ejp_xml_pipeline_spark.plans.ivm import IncrementalAggState
     from data_hub_ejp_xml_pipeline_spark.plans.maintenance import MaintenancePolicy
-    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
     from data_hub_ejp_xml_pipeline_spark.streaming.tailer import ChangelogTailer
 
     pdf = generate_changelog_pandas(

@@ -6,9 +6,10 @@ The reference ships as an installed package inside an Airflow worker image
 suite can't catch a packaging break — tests import the repo checkout
 straight off PYTHONPATH — so this test runs a real spark-submit in a
 scrubbed environment (no repo on PYTHONPATH, cwd outside the repo) and
-asserts the job imports the package FROM THE ZIP, runs a grouped-map
-pandas UDF (Python workers must zipimport the package too — cloudpickle
-pickles module-level functions by reference), and commits a merge.
+asserts the job imports the package FROM THE ZIP, parses a zip-of-XML
+through ``read_zip_entities`` (its ``mapInPandas`` UDF calls the
+module-level ``parse_zip_bytes``, which cloudpickle pickles by reference,
+so Python workers must zipimport the package too), and commits a merge.
 """
 from __future__ import annotations
 
@@ -17,6 +18,9 @@ import os
 import shutil
 import subprocess
 import sys
+
+from data_hub_ejp_xml_pipeline_spark.sources.xml_zip import parse_zip_bytes
+from tests.test_xml_zip import GO_XML, MANUSCRIPT_XML, PERSONS_XML, make_zip
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -30,19 +34,21 @@ assert "engine.zip" in (pkg.__file__ or ""), pkg.__file__
 from data_hub_ejp_xml_pipeline_spark.generator import generate_changelog_df
 from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
 from data_hub_ejp_xml_pipeline_spark.session import get_spark
+from data_hub_ejp_xml_pipeline_spark.sources.xml_zip import read_zip_entities
 
-table_root = sys.argv[1]
+table_root, zip_dir = sys.argv[1], sys.argv[2]
 spark = get_spark(app_name="submit-e2e", master="local[4]",
                   shuffle_partitions=8)
+# the parse UDF calls parse_zip_bytes by module reference: Python
+# workers must import it from the zip
+n_entities = read_zip_entities(spark, zip_dir).count()
 chg = generate_changelog_df(spark, 20000, events_per_file=20000)
-# applyinpandas forces a grouped-map UDF whose closure references the
-# package by module: Python workers must import it from the zip
-pipe = MergePipeline(spark, table_root, n_buckets=4,
-                     reduce_strategy="applyinpandas")
+pipe = MergePipeline(spark, table_root, n_buckets=4)
 res = pipe.apply(chg, batch_id=1)
 n = pipe.final_state().count()
 print("SUBMITRESULT " + json.dumps({"final_rows": n,
-                                    "merged_rows": res.rows_written}))
+                                    "merged_rows": res.rows_written,
+                                    "zip_entities": n_entities}))
 spark.stop()
 '''
 
@@ -64,12 +70,20 @@ def test_engine_zip_runs_via_spark_submit(tmp_path):
     job_path = tmp_path / "job.py"
     job_path.write_text(JOB)
     table_root = tmp_path / "table"
+    zip_dir = tmp_path / "zips"
+    zip_dir.mkdir()
+    zip_bytes = make_zip(
+        {"go.xml": GO_XML, "people.xml": PERSONS_XML, "ms.xml": MANUSCRIPT_XML}
+    )
+    (zip_dir / "batch.zip").write_bytes(zip_bytes)
+    n_entities = len(list(parse_zip_bytes(zip_bytes, "batch.zip")))
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the zip must be the ONLY package source
     env["SPARK_GRAFT_CPUS"] = "4"
     proc = subprocess.run(
-        [spark_submit, "--py-files", zip_path, str(job_path), str(table_root)],
+        [spark_submit, "--py-files", zip_path, str(job_path), str(table_root),
+         str(zip_dir)],
         cwd=str(tmp_path),  # repo checkout not importable from cwd either
         env=env,
         capture_output=True,
@@ -82,3 +96,5 @@ def test_engine_zip_runs_via_spark_submit(tmp_path):
     result = json.loads(lines[-1][len("SUBMITRESULT "):])
     assert result["final_rows"] > 0
     assert result["merged_rows"] > 0
+    assert n_entities > 0
+    assert result["zip_entities"] == n_entities

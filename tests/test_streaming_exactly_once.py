@@ -15,7 +15,7 @@ from data_hub_ejp_xml_pipeline_spark.oracle import (
     assert_final_state_equal,
     expected_final_state_pandas,
 )
-from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
+from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA, MergePipeline
 from data_hub_ejp_xml_pipeline_spark.streaming.tailer import ChangelogTailer
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
 
@@ -48,7 +48,7 @@ def _final_pdf(table):
 
 def test_available_now_replay_matches_oracle(spark, tmp_path, changelog_dir, changelog_pdf):
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=8)
-    tailer = ChangelogTailer(spark, table)
+    tailer = ChangelogTailer(spark, MergePipeline(spark, table.root))
     metrics = tailer.run_to_completion(
         changelog_dir, str(tmp_path / "ckpt"), max_files_per_trigger=2
     )
@@ -67,7 +67,9 @@ def test_crash_restart_is_exactly_once_and_byte_identical(
     ckpt = str(tmp_path / "ckpt")
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=8)
 
-    crashing = ChangelogTailer(spark, table, fail_after_batches=2)
+    crashing = ChangelogTailer(
+        spark, MergePipeline(spark, table.root), fail_after_batches=2
+    )
     q = crashing.start(changelog_dir, ckpt, max_files_per_trigger=1)
     with pytest.raises(Exception):
         q.awaitTermination()
@@ -76,7 +78,7 @@ def test_crash_restart_is_exactly_once_and_byte_identical(
     assert applied_before, "some batches applied before the crash"
 
     # restart from checkpoint — Spark re-delivers the failed epoch
-    tailer2 = ChangelogTailer(spark, table)
+    tailer2 = ChangelogTailer(spark, MergePipeline(spark, table.root))
     tailer2.run_to_completion(changelog_dir, ckpt, max_files_per_trigger=1)
     replayed_noops = [m for m in tailer2.metrics if not m["applied"]]
     assert len([m for m in tailer2.metrics if m["applied"]]) + len(applied_before) >= N_FILES
@@ -86,7 +88,7 @@ def test_crash_restart_is_exactly_once_and_byte_identical(
 
     # uninterrupted control run → identical state hash
     table2 = SnapshotTable.create(spark, str(tmp_path / "tbl2"), PAYLOAD_SCHEMA, n_buckets=8)
-    ChangelogTailer(spark, table2).run_to_completion(
+    ChangelogTailer(spark, MergePipeline(spark, table2.root)).run_to_completion(
         changelog_dir, str(tmp_path / "ckpt2"), max_files_per_trigger=2
     )
     assert _state_hash(table) == _state_hash(table2)
@@ -103,20 +105,16 @@ def test_second_replay_from_scratch_checkpoint_is_noop_state(
     table must not corrupt state (max-LSN guard absorbs every replayed
     event)."""
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=8)
-    ChangelogTailer(spark, table).run_to_completion(changelog_dir, str(tmp_path / "c1"))
+    ChangelogTailer(spark, MergePipeline(spark, table.root)).run_to_completion(
+        changelog_dir, str(tmp_path / "c1")
+    )
     h1 = _state_hash(table)
     # note: fresh checkpoint → new batch_ids → ledger does NOT dedupe; the
     # LSN guard must do the work
-    ChangelogTailer(spark, table).run_to_completion(changelog_dir, str(tmp_path / "c2"))
-    assert _state_hash(table) == h1
-    assert_final_state_equal(_final_pdf(table), expected_final_state_pandas(changelog_pdf))
-
-
-def test_salted_strategy_through_tailer(spark, tmp_path, changelog_dir, changelog_pdf):
-    table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=8)
-    ChangelogTailer(spark, table, reduce_strategy="salted", n_salts=4).run_to_completion(
-        changelog_dir, str(tmp_path / "ckpt")
+    ChangelogTailer(spark, MergePipeline(spark, table.root)).run_to_completion(
+        changelog_dir, str(tmp_path / "c2")
     )
+    assert _state_hash(table) == h1
     assert_final_state_equal(_final_pdf(table), expected_final_state_pandas(changelog_pdf))
 
 
@@ -140,7 +138,7 @@ def test_schema_evolution_mid_stream(spark, tmp_path, changelog_pdf):
         list(CHANGELOG_SCHEMA.fields) + [T.StructField("lang", T.StringType(), True)]
     )
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=8)
-    ChangelogTailer(spark, table).run_to_completion(
+    ChangelogTailer(spark, MergePipeline(spark, table.root)).run_to_completion(
         str(d), str(tmp_path / "ckpt"), schema=evolved, max_files_per_trigger=1
     )
     assert "lang" in [f.name for f in table.schema().fields]
@@ -179,7 +177,7 @@ def test_bootstrap_snapshot_then_tail_handoff(spark, tmp_path, changelog_pdf):
     tail_pdf = changelog_pdf[changelog_pdf["lsn"] > overlap_lo]
     d = str(tmp_path / "cl")
     write_changelog_files(tail_pdf, d, 4)
-    tailer = ChangelogTailer(spark, table)
+    tailer = ChangelogTailer(spark, MergePipeline(spark, table.root))
     tailer.run_to_completion(d, str(tmp_path / "ckpt"), max_files_per_trigger=2)
 
     assert_final_state_equal(

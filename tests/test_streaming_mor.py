@@ -72,6 +72,17 @@ def test_mor_tailer_crash_restart_exactly_once(
     assert_final_state_equal(_final(pipe2), expected_final_state_pandas(changelog_pdf))
 
 
-def test_tailer_rejects_ambiguous_construction(spark, tmp_path):
-    with pytest.raises(ValueError):
-        ChangelogTailer(spark)
+def test_tailer_needs_metrics_path_without_table_root(spark, tmp_path):
+    """A duck-typed pipeline with no base/table attribute leaves no root to
+    put metrics.jsonl under: the tailer refuses it unless metrics_path is
+    given."""
+
+    class Bare:
+        def apply(self, batch_df, batch_id=None):
+            raise AssertionError("not reached")
+
+    with pytest.raises(ValueError, match="metrics_path"):
+        ChangelogTailer(spark, Bare())
+    metrics = str(tmp_path / "metrics.jsonl")
+    tailer = ChangelogTailer(spark, Bare(), metrics_path=metrics)
+    assert tailer.metrics_path == metrics
