@@ -159,7 +159,7 @@ def fill_unavailable(
     fill with NULL — there is no previous value to keep). Path choice:
     ONE bounded driver job collects at most ``lookup_max_keys + 1`` fill
     keys (default cap: the table's ``LOOKUP_MAX_KEYS``) — at or under the
-    cap they go through the bucket/range/bloom-pruned
+    cap they go through the bucket/range-pruned, driver-side
     :meth:`SnapshotTable.lookup`, above it one equi-join against
     ``table.read()`` — O(batch + matched files), never O(table) on the
     driver.

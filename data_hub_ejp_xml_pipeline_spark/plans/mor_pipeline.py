@@ -339,7 +339,8 @@ class MorPipeline:
         explicit, bounded key set, correct between compactions. Both
         tables share the key and bucket layout, so the base AND the
         staged-delta side go through :meth:`SnapshotTable.lookup`'s
-        bucket/range/bloom file pruning; the LWW reduce then runs over
+        bucket/range file pruning and driver-side Arrow read; the LWW
+        reduce then runs over
         only the fetched rows — O(keys + staged matches), never a
         delta-table scan. Semantics: ``final_state().filter(key IN
         keys)``."""

@@ -1,7 +1,8 @@
 """Incrementally-maintained secondary index: non-key column → keys.
 
-The base CDC table serves point lookups by its key (bucket/range/bloom
-pruning in :meth:`SnapshotTable.lookup`); a predicate on any OTHER
+The base CDC table serves point lookups by its key (bucket/range
+pruning and a driver-side read in :meth:`SnapshotTable.lookup`); a
+predicate on any OTHER
 column is a full scan. This state maintains an inverted index —
 ``(index value, doc_id)`` postings — per epoch from the changelog, the
 same maintenance family as the aggregate view (``plans/ivm.py``) and

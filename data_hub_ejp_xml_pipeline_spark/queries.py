@@ -448,7 +448,8 @@ def q_cdc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-path end-to-end: events applied through the REAL snapshot
     table (2 incremental merges), then a deterministic md5-mod sample of
     keys is fetched back through :meth:`SnapshotTable.lookup` — the
-    bucket-pruned / range-pruned / bloom-assisted point-lookup path — and
+    bucket-pruned / range-pruned point-lookup path, read on the driver
+    with Arrow — and
     must equal the one-shot SQL LWW view restricted to the same sample.
     The sample predicate is the shared cross-engine idiom
     (functions/sampling.py), so the oracle reproduces the exact key set
@@ -803,7 +804,8 @@ def q_cdc_mor_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``cdc_point_lookup``'s serve-path check for the MERGE-ON-READ
     pipeline: after 2 compacted + 1 staged epochs, fetch the md5-mod key
     sample through :meth:`MorPipeline.lookup` — base AND staged-delta
-    reads both bucket/range/bloom file-pruned, LWW reconciled over only
+    reads both bucket/range file-pruned and read on the driver, LWW
+    reconciled over only
     the fetched rows — and match the one-shot SQL LWW view restricted to
     the same sample."""
     from pyspark.sql import types as T

@@ -404,9 +404,9 @@ class SnapshotTable:
         return self.spark.read.schema(schema).parquet(*paths)
 
     # --------------------------------------------------------------- lookup
-    #: lookup() builds a literal IN predicate; beyond this many keys the
-    #: expression tree and the driver-side pruning stop being "point"
-    #: lookups — use a join against read() (or merge machinery) instead.
+    #: lookup() reads the pruned files and collects the matching rows on
+    #: the driver; beyond this many keys that stops being a "point"
+    #: lookup — use a join against read() (or merge machinery) instead.
     LOOKUP_MAX_KEYS = 100_000
 
     def lookup(
@@ -416,30 +416,30 @@ class SnapshotTable:
         include_tombstones: bool = False,
     ) -> DataFrame:
         """Point-lookup serve path: the current (or time-traveled) rows for
-        an explicit, bounded set of keys, touching as few files as the
-        manifest allows.
+        an explicit, bounded set of keys, with no Spark job at all.
 
-        Three pruning layers, each independent of table size:
+        1. **bucket + range prune** (:meth:`_lookup_entries`) — only files
+           in the keys' buckets whose manifest ``key_min``/``key_max`` can
+           hold a key survive. O(total files) driver work.
+        2. **driver-side Arrow read** — ``pyarrow.dataset`` reads the
+           surviving files with ``key IN keys`` pushed into the scan
+           (row-group statistics skip), conforms each file onto the
+           looked-up version's schema (columns and nested fields an older
+           file lacks → null, widened scalars cast, like the explicit-
+           schema Spark read) and drops tombstones in Arrow.
 
-        1. **bucket prune** — the keys' buckets are computed with the
-           table's RECORDED hash (one tiny Spark job over the key list, so
-           the function is Spark's own, never a Python re-implementation);
-           only those buckets' files are considered. O(total files) driver
-           work, O(files-in-probed-buckets) read.
-        2. **range prune** — a candidate file is dropped when no key falls
-           inside its manifest ``key_min``/``key_max`` (tight after
-           compaction's range-partitioned rewrite).
-        3. **row-group prune** — the pushed ``key IN (...)`` filter meets
-           the parquet bloom filter every write attaches to the key column
-           (``_with_key_bloom``), skipping row groups inside files that
-           survive 1–2: within a bucket, every uncompacted epoch file
-           spans nearly the full key range, so only the bloom prunes there.
-
-        Semantics are exactly ``read(version=...).filter(key IN keys)``
-        (tombstones filtered the same way); the plan is what differs.
-        Raises on more than :attr:`LOOKUP_MAX_KEYS` keys — that is a join,
-        not a lookup.
+        The rows come back as a local relation, so ``collect()`` on the
+        result runs no job either. Semantics are exactly
+        ``read(version=...).filter(key IN keys)`` (tombstones filtered the
+        same way, same nullable schema); the plan is what differs. Raises
+        on more than :attr:`LOOKUP_MAX_KEYS` keys — that is a join, not a
+        lookup.
         """
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
         keys = list(keys)
         if len(keys) > self.LOOKUP_MAX_KEYS:
             raise ValueError(
@@ -451,40 +451,61 @@ class SnapshotTable:
             # match nothing; the key column is non-null by construction,
             # so surface the caller bug instead
             raise ValueError("lookup() keys must not contain None")
+        keys = list(dict.fromkeys(keys))
         m = self.manifest(version)
-        schema = T.StructType.fromJson(m["schema"])
-        key = m["key"]
-        if not keys:
-            df = self.spark.createDataFrame([], schema)
-            if include_tombstones:
-                return df
-            return df.filter(
-                ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            ).drop(DELETED_COL)
-        entries = self._lookup_entries(keys, m)
-        df = self._read_file_entries(entries, schema).filter(
-            F.col(key).isin(keys)
+        schema = _as_nullable(T.StructType.fromJson(m["schema"]))
+        key_field = _find_field(schema, m["key"])
+        in_keys = ds.field(key_field.name).isin(
+            pa.array(keys, to_arrow_type(key_field.dataType))
         )
-        if include_tombstones:
-            return df
-        return df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
+        # Spark writes TimestampType as INT96; read it at Spark's precision
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        target = to_arrow_schema(schema)
+        parts = []
+        for f in self._lookup_entries(keys, m) if keys else []:
+            t = ds.dataset(os.path.join(self.root, f["path"]), format=fmt).to_table(
+                filter=in_keys
+            )
+            if t.num_rows:
+                parts.append(_conform_arrow(t, schema).cast(target))
+        rows = pa.concat_tables(parts) if parts else target.empty_table()
+        if not include_tombstones:
+            live = pc.invert(pc.fill_null(rows[DELETED_COL], False))
+            rows = rows.filter(live).drop_columns([DELETED_COL])
+            schema = T.StructType([f for f in schema.fields if f.name != DELETED_COL])
+        # exactly one chunk per column: createDataFrame(pa.Table) drops every
+        # row from the first EMPTY record batch onward (a file whose matches
+        # were all tombstones leaves one behind), and rejects a nested
+        # column with no chunk at all (an empty result)
+        rows = pa.Table.from_arrays(
+            [c.combine_chunks() for c in rows.columns], schema=rows.schema
+        )
+        return self.spark.createDataFrame(rows, schema=schema)
 
     def _lookup_entries(self, keys: list, m: dict) -> list[dict[str, Any]]:
         """Manifest entries a :meth:`lookup` for ``keys`` must read —
         bucket-pruned with the table's recorded hash, then range-pruned
         against per-file key stats. Split out so tests can pin the pruning
-        without instrumenting the scan."""
+        without instrumenting the scan.
+
+        The buckets come from Spark's own hash function (never a Python
+        re-implementation) without a job: over a relation built from an
+        Arrow table, the optimizer evaluates the projection on the driver
+        (``ConvertToLocalRelation``). Dedup is a Python set — a
+        ``distinct()`` would plan an aggregate and run a job."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
         key = m["key"]
         key_field = _find_field(T.StructType.fromJson(m["schema"]), key)
         ktype = key_field.dataType if key_field is not None else T.StringType()
         kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField(key, ktype)])
+            pa.table({key: pa.array(keys, to_arrow_type(ktype))}),
+            T.StructType([T.StructField(key, ktype)]),
         )
-        n = m["n_buckets"]
-        fn = m.get("bucket_hash", "xxhash64")
-        hashed = F.hash(F.col(key)) if fn == "murmur3" else F.xxhash64(F.col(key))
-        bucket = F.pmod(hashed, F.lit(n)).cast("int")
-        probed = {r[0] for r in kdf.select(bucket).distinct().collect()}
+        probed = {r[0] for r in kdf.select(_bucket_col(key, m)).collect()}
         try:
             skeys = sorted(keys)
         except TypeError:  # mixed-type key list → skip the range prune
@@ -701,24 +722,9 @@ class SnapshotTable:
         round-1-format tables, which used xxhash64. (Tables written by the
         few intermediate development commits that used murmur3 unrecorded
         were never persisted across a release — the fallback targets the
-        released round-1 format.)"""
-        m = self.manifest()
-        n = m["n_buckets"]
-        fn = m.get("bucket_hash", "xxhash64")
-        # hash in the TABLE's key type, not the batch's: murmur3/xxhash64
-        # hash int and long values differently, so a batch whose key
-        # arrives wider (long 42 vs int 42) would otherwise compute a
-        # different bucket than the files holding that key — pruning then
-        # misses the existing row and the merge phantom-inserts a
-        # duplicate. The ANSI cast fails loudly on genuine overflow,
-        # which is the correct outcome (the key column never widens —
-        # see _commit).
-        key_field = _find_field(T.StructType.fromJson(m["schema"]), key)
-        kcol = F.col(key)
-        if key_field is not None:
-            kcol = kcol.cast(key_field.dataType)
-        hashed = F.hash(kcol) if fn == "murmur3" else F.xxhash64(kcol)
-        return F.pmod(hashed, F.lit(n)).cast("int")
+        released round-1 format.) This is :func:`_bucket_col` of the
+        current manifest."""
+        return _bucket_col(key, self.manifest())
 
     def add_columns(self, new_schema: T.StructType) -> CommitResult:
         """Add-only + widening recursive schema evolution (metadata-only
@@ -971,7 +977,7 @@ class SnapshotTable:
         snap_rel = _snap_dir_name(version)
         snap_dir = os.path.join(self.root, snap_rel)
 
-        bucket = self._bucket_expr(key)
+        bucket = _bucket_col(key, m)
         payload_schema = T.StructType(
             [f for f in merged_schema.fields if f.name not in INTERNAL_COLS]
         )
@@ -1062,11 +1068,7 @@ class SnapshotTable:
             writer = result.repartitionByRange(
                 n_parts, F.col("_bucket"), F.col(key)
             ).sortWithinPartitions("_bucket", key)
-        (
-            _with_key_bloom(writer.write.mode("overwrite"), key, rows_per_file)
-            .partitionBy("_bucket")
-            .parquet(snap_dir)
-        )
+        writer.write.mode("overwrite").partitionBy("_bucket").parquet(snap_dir)
 
         new_files = _list_bucket_files(
             snap_dir, snap_rel, key, m.get("stats_cols", ())
@@ -1307,28 +1309,18 @@ class SnapshotTable:
         key = m["key"]
         schema = T.StructType.fromJson(m["schema"])
         # the NEW bucket expression: same recorded hash fn, new modulus
-        fn = m.get("bucket_hash", "xxhash64")
-        key_field = _find_field(schema, key)
-        kc = F.col(key).cast(key_field.dataType) if key_field is not None else F.col(key)
-        hashed = F.hash(kc) if fn == "murmur3" else F.xxhash64(kc)
-        new_bucket = F.pmod(hashed, F.lit(n_buckets)).cast("int")
         df = self._read_file_entries(m["files"], schema).withColumn(
-            "_bucket", new_bucket
+            "_bucket", _bucket_col(key, {**m, "n_buckets": n_buckets})
         )
         version = m["version"] + 1
         snap_rel = _snap_dir_name(version)
         snap_dir = os.path.join(self.root, snap_rel)
-        total_rows = sum(f["rows"] for f in m["files"])
         (
-            _with_key_bloom(
-                df.repartitionByRange(
-                    max(n_buckets * fpb, 1), F.col("_bucket"), F.col(key)
-                )
-                .sortWithinPartitions("_bucket", key)
-                .write.mode("overwrite"),
-                key,
-                total_rows // max(n_buckets * fpb, 1) + 1,
+            df.repartitionByRange(
+                max(n_buckets * fpb, 1), F.col("_bucket"), F.col(key)
             )
+            .sortWithinPartitions("_bucket", key)
+            .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(snap_dir)
         )
@@ -1392,9 +1384,9 @@ class SnapshotTable:
         :meth:`read_range` skips whole files. The trade is explicit: the
         rewritten files' ``key_min``/``key_max`` go loose, weakening the
         KEY-range pruning inside each bucket until the next key-ordered
-        compaction (bucket pruning and the parquet key bloom are
-        unaffected — point lookups keep working). When given, EVERY
-        bucket is rewritten (a sort order is a whole-table property)."""
+        compaction (bucket pruning is unaffected — point lookups keep
+        working). When given, EVERY bucket is rewritten (a sort order is a
+        whole-table property)."""
         m = self.manifest()
         key = m["key"]
         fpb = (
@@ -1421,7 +1413,7 @@ class SnapshotTable:
         carried = [f for f in m["files"] if f["bucket"] not in victims]
         schema = T.StructType.fromJson(m["schema"])
         df = self._read_file_entries(victim_entries, schema).withColumn(
-            "_bucket", self._bucket_expr(key)
+            "_bucket", _bucket_col(key, m)
         )
         version = m["version"] + 1
         snap_rel = _snap_dir_name(version)
@@ -1429,21 +1421,15 @@ class SnapshotTable:
         (
             # fan out to the EFFECTIVE threshold (the override, when given)
             # so a caller-requested tighter file count actually converges
-            _with_key_bloom(
-                df.repartitionByRange(
-                    max(len(victims) * fpb, 1),
-                    F.col("_bucket"),
-                    F.col(cluster_by if cluster_by is not None else key),
-                )
-                .sortWithinPartitions(
-                    "_bucket", cluster_by if cluster_by is not None else key
-                )
-                .write.mode("overwrite"),
-                key,
-                sum(f["rows"] for f in victim_entries)
-                // max(len(victims) * fpb, 1)
-                + 1,
+            df.repartitionByRange(
+                max(len(victims) * fpb, 1),
+                F.col("_bucket"),
+                F.col(cluster_by if cluster_by is not None else key),
             )
+            .sortWithinPartitions(
+                "_bucket", cluster_by if cluster_by is not None else key
+            )
+            .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(snap_dir)
         )
@@ -1696,17 +1682,12 @@ class SnapshotTable:
         snap_rel = _snap_dir_name(version)
         snap_dir = os.path.join(self.root, snap_rel)
         out = transform(self._read_file_entries(touched, schema), match)
-        est_rows = sum(f["rows"] for f in touched)
         n_parts = max(len(touched), 1)  # preserve the rewritten files' fan-out
         (
-            _with_key_bloom(
-                out.withColumn("_bucket", self._bucket_expr(key))
-                .repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
-                .sortWithinPartitions("_bucket", key)
-                .write.mode("overwrite"),
-                key,
-                est_rows // n_parts + 1,
-            )
+            out.withColumn("_bucket", _bucket_col(key, m))
+            .repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
+            .sortWithinPartitions("_bucket", key)
+            .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(snap_dir)
         )
@@ -1879,7 +1860,7 @@ class SnapshotTable:
             df = self._read_file_entries(
                 m["files"], T.StructType.fromJson(m["schema"])
             ).withColumn("_file", F.input_file_name())
-            expect = self._bucket_expr(key)
+            expect = _bucket_col(key, m)
             # one scan: total rows + per-file wrong-bucket counts
             bad = (
                 df.withColumn("_expected", expect)
@@ -2044,18 +2025,83 @@ def _merge_rows(
     )
 
 
-def _with_key_bloom(writer, key: str, ndv_per_file: int):
-    """Attach a parquet bloom filter on the key column to a DataFrameWriter.
+def _bucket_col(key: str, m: dict[str, Any]) -> F.Column:
+    """THE bucket function of the table state ``m`` (a manifest):
+    ``pmod(hash(key), m["n_buckets"])`` with the hash the manifest
+    records (murmur3; manifests without the field are round-1 xxhash64
+    tables). The key is hashed in the TABLE's key type, not the caller's:
+    murmur3/xxhash64 hash int and long values differently, so a batch whose
+    key arrives wider (long 42 vs int 42) would otherwise land in a
+    different bucket than the files holding that key. The ANSI cast fails
+    loudly on genuine overflow (the key column never widens — see
+    _pin_key_type). Taking ``m`` rather than the current manifest keeps a
+    time-travel lookup across a ``rebucket`` on its own version's
+    ``n_buckets``."""
+    key_field = _find_field(T.StructType.fromJson(m["schema"]), key)
+    kcol = F.col(key)
+    if key_field is not None:
+        kcol = kcol.cast(key_field.dataType)
+    fn = m.get("bucket_hash", "xxhash64")
+    hashed = F.hash(kcol) if fn == "murmur3" else F.xxhash64(kcol)
+    return F.pmod(hashed, F.lit(m["n_buckets"])).cast("int")
 
-    The point-lookup serve path (:meth:`SnapshotTable.lookup`) pushes
-    ``key IN (...)`` into the scan; parquet-mr's row-group filter then
-    consults the bloom to skip row groups the min/max stats alone cannot —
-    hash-bucketed keys make every uncompacted epoch file span nearly the
-    full key range, so ranges never prune WITHIN a bucket. NDV is sized to
-    the target file shape; cost is a few KB per file."""
-    return writer.option(f"parquet.bloom.filter.enabled#{key}", "true").option(
-        f"parquet.bloom.filter.expected.ndv#{key}",
-        str(max(1024, min(int(ndv_per_file), 10_000_000))),
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the schema a
+    Spark file-source read reports (``DataType.asNullable``), which
+    :meth:`SnapshotTable.lookup` matches."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _conform_arrow(t, schema: T.StructType):
+    """Arrow twin of ``conform_to_schema`` for one file's rows: project the
+    pyarrow Table ``t`` onto ``schema`` by name (case-insensitive), at every
+    struct nesting level and through array elements — columns and nested
+    fields the file lacks become null, scalars are cast. A plain Arrow cast
+    cannot add struct fields (``struct fields don't match``), and an
+    explicit-schema ``pyarrow.dataset`` read fails the same way."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    def conform(arr, dt: T.DataType):
+        if isinstance(dt, T.StructType):
+            if not pa.types.is_struct(arr.type):
+                return pa.nulls(len(arr), to_arrow_type(dt))
+            idx = {arr.type.field(i).name.lower(): i for i in range(arr.type.num_fields)}
+            return pa.StructArray.from_arrays(
+                [
+                    conform(arr.field(idx[f.name.lower()]), f.dataType)
+                    if f.name.lower() in idx
+                    else pa.nulls(len(arr), to_arrow_type(f.dataType))
+                    for f in dt.fields
+                ],
+                names=dt.names,
+                mask=arr.is_null(),
+            )
+        if isinstance(dt, T.ArrayType) and pa.types.is_list(arr.type):
+            return pa.ListArray.from_arrays(
+                arr.offsets, conform(arr.values, dt.elementType), mask=arr.is_null()
+            )
+        return arr.cast(to_arrow_type(dt))
+
+    cols = {n.lower(): i for i, n in enumerate(t.column_names)}
+    return pa.Table.from_arrays(
+        [
+            conform(t.column(cols[f.name.lower()]).combine_chunks(), f.dataType)
+            if f.name.lower() in cols
+            else pa.nulls(t.num_rows, to_arrow_type(f.dataType))
+            for f in schema.fields
+        ],
+        names=schema.names,
     )
 
 

@@ -73,10 +73,11 @@ EXPECT = {
     ),
     "cdc_point_lookup": (
         "NOTE: the two merges execute while the query builds; this plan is "
-        "the SERVE path — a parquet scan whose file list was bucket- AND "
-        "range-pruned off the manifest before the plan exists (count the "
-        "files, not a filter), with the key IN (...) predicate pushed into "
-        "the scan where parquet-mr's bloom filter skips row groups"
+        "the SERVE path — a LocalTableScan of a LocalRelation: the files "
+        "were bucket- AND range-pruned off the manifest and read on the "
+        "driver with Arrow (key IN (...) pushed into that read) before the "
+        "plan exists, so no scan appears and collecting the rows runs no "
+        "Spark job"
     ),
     "cdc_zone_map_scan": (
         "NOTE: the merges + compaction execute while the query builds; "
