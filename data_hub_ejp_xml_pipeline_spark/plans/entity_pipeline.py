@@ -3,17 +3,25 @@
 The reference loads each entity type into its own BigQuery table
 (``dag_pipeline_config/xml_config.py:96-118`` maps Person/PersonV2/
 Manuscript/ManuscriptVersion → tables; ``etl.py`` writes one JSONL per
-type). The engine equivalent: ONE parsed changelog stream fanned into one
-``SnapshotTable`` per entity type inside the same ``foreachBatch`` epoch.
+type), one table after another. The engine equivalent: ONE parsed
+changelog stream fanned into one ``SnapshotTable`` per entity type inside
+the same ``foreachBatch`` epoch, the tables committed concurrently
+(``plans.pipeline.run_table_branches``) after one schema-inference job
+for all of them.
 
 Exactly-once across tables: every table keeps its own epoch ledger keyed
-by the same ``batch_id``. A crash between table commits leaves a partial
-epoch; on replay the already-committed tables no-op on their ledger and
-only the missing ones apply — the epoch converges without coordination
-(each merge is idempotent, so no cross-table transaction is needed).
+by the same ``batch_id``. A crash during the fan-out leaves any subset of
+the tables committed; on replay the already-committed tables no-op on
+their ledger and only the missing ones apply — the epoch converges
+without coordination (each merge is idempotent, so no cross-table
+transaction is needed).
 """
 
 from __future__ import annotations
+
+import json
+from functools import partial
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +29,7 @@ from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.config import ENTITY_TYPES, PipelineConfig
 from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
+from data_hub_ejp_xml_pipeline_spark.plans.pipeline import run_table_branches
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
 from data_hub_ejp_xml_pipeline_spark.table.schema_evolution import merge_schemas
 
@@ -51,22 +60,53 @@ _RESERVED = {
 }
 
 
-def infer_payload_schema(df: DataFrame, payload_col: str = "payload") -> T.StructType:
-    """Distributed JSON schema inference over a batch's payload strings —
-    the engine analog of the reference's per-batch ``generate_schema``
-    (``bq_data_service.py:191-201``, which feeds BigQuery autodetect-style
-    load schemas). One extra scan of the (persisted) batch; Spark's JSON
-    reader unions field sets and types across all rows, so a field present
-    in ANY row of the batch lands in the schema."""
-    strings = df.select(payload_col).where(F.col(payload_col).isNotNull())
-    inferred = strings.sparkSession.read.json(strings.rdd.map(lambda r: r[0]))
-    return T.StructType(
-        [
-            f
-            for f in inferred.schema.fields
-            if not f.name.startswith("_corrupt") and f.name.lower() not in _RESERVED
-        ]
+def infer_payload_schema(
+    df: DataFrame,
+    entities: Iterable[str],
+    payload_col: str = "payload",
+) -> dict[str, T.StructType]:
+    """Distributed JSON schema inference over a batch's payload strings,
+    ONE job for every entity — the engine analog of the reference's
+    per-batch ``generate_schema`` (``bq_data_service.py:191-201``, which
+    feeds BigQuery autodetect-style load schemas).
+
+    Each object payload is wrapped as ``{"<source>": payload}`` (rows whose
+    ``source`` is not in ``entities`` are dropped) and the wrapped strings
+    go through Spark's JVM JSON reader, so no row crosses into a Python
+    worker. The reader unions field sets and types across all rows, so a
+    field present in ANY row of an entity lands in that entity's struct —
+    the same struct a separate read of that entity's payloads infers. A
+    malformed payload makes its whole wrapped row a corrupt record, so it
+    contributes no field. Returns ``{entity: StructType}`` for every entity
+    (an empty struct for one absent from the batch), without reserved and
+    ``_corrupt*`` fields."""
+    entities = list(entities)
+    # entity → its JSON-quoted object key
+    key = F.create_map(
+        *[c for e in entities for c in (F.lit(e), F.lit(json.dumps(e)))]
+    )[F.col("source")]
+    wrapped = df.where(
+        F.col("source").isin(entities)
+        & F.ltrim(F.col(payload_col)).startswith("{")
+    ).select(F.concat(F.lit("{"), key, F.lit(":"), F.col(payload_col), F.lit("}")))
+    # DataFrameReader.json(Dataset[String]) has no Python binding for a
+    # DataFrame; the RDD binding would ship every row through a Python worker
+    spark = df.sparkSession
+    strings = getattr(wrapped._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    inferred = T.StructType.fromJson(
+        json.loads(spark.read._jreader.json(strings).schema().json())
     )
+    out = {}
+    for e in entities:
+        struct = inferred[e].dataType if e in inferred.names else T.StructType()
+        out[e] = T.StructType(
+            [
+                f
+                for f in struct.fields
+                if not f.name.startswith("_corrupt") and f.name.lower() not in _RESERVED
+            ]
+        )
+    return out
 
 
 class EntityPipeline:
@@ -122,12 +162,12 @@ class EntityPipeline:
                     n_buckets=n_buckets,
                 )
 
-    def _typed_batch(self, table: SnapshotTable, slice_df: DataFrame,
+    def _typed_batch(self, table: SnapshotTable, inferred: T.StructType,
                      reduced: DataFrame) -> DataFrame:
         """JSON payload strings → typed top-level columns for ONE batch.
 
-        Schema = existing table payload fields (existing-wins) ∪ fields
-        inferred from THIS batch's JSON — so ``from_json`` keeps every
+        Schema = existing table payload fields (existing-wins) ∪ the fields
+        ``inferred`` from THIS batch's JSON — so ``from_json`` keeps every
         previously-known column AND surfaces new ones; the merge commit
         then evolves the table schema additively (K3)."""
         existing = T.StructType(
@@ -138,12 +178,6 @@ class EntityPipeline:
                                           "_lsn", "_deleted")
             ]
         )
-        # infer from the UNREDUCED slice (already persisted upstream):
-        # re-running the LWW reduce just to infer would double the epoch's
-        # reduce cost, and a field seen only in LWW-losing rows still
-        # evolves the schema — same as the reference, which infers from
-        # the whole JSONL batch file
-        inferred = infer_payload_schema(slice_df)
         merged = merge_schemas(existing, inferred)
         if not merged.fields:
             return reduced.select("lsn", "op", "doc_id", "modified_timestamp")
@@ -157,47 +191,63 @@ class EntityPipeline:
         )
 
     def apply(self, changelog: DataFrame, batch_id: int | None = None) -> dict[str, int]:
-        """One epoch: reduce + merge each entity slice. The slice filter is
-        pushed into the shared scan; entity types absent from the batch are
-        empty-batch no-ops (F4)."""
+        """One epoch: reduce + merge each entity slice, the tables
+        concurrently. The slice filter is pushed into the shared scan;
+        entity types absent from the batch are empty-batch no-ops (F4)."""
         # the shared batch feeds 4 tables × 2 jobs each — without a persist
         # the upstream plan (e.g. the zip parse mapInPandas) would re-execute
         # 8 times per epoch
         changelog = changelog.persist()
-        if self.dedup_state is not None:
-            if batch_id is None:
-                raise ValueError(
-                    "dedup-on-ingest requires a monotone batch_id — the "
-                    "band/flags state tables commit exactly-once per epoch"
-                )
-            # near-dup flags over the epoch's LWW winners (live rows only:
-            # a deleted doc's payload should not enter the corpus state).
-            # The lineage cols ride along as the deterministic tie-break
-            # for equal (doc_id, lsn) rows — without them the persisted
-            # corpus/flags could differ between a run and its crash replay
-            live = reduce_latest(
-                changelog.select("lsn", "op", "doc_id", "payload",
-                                 "source_file", "offset")
-            ).filter(F.col("op") != "D")
-            self.dedup_state.apply(live, batch_id=batch_id, text_col="payload")
-        applied = {}
-        for entity, table in self.tables.items():
-            slice_df = changelog.filter(F.col("source") == entity).select(
-                "lsn", "op", "doc_id", "payload", "modified_timestamp",
-                "source_file", "offset",
+        try:
+            if self.dedup_state is not None:
+                if batch_id is None:
+                    raise ValueError(
+                        "dedup-on-ingest requires a monotone batch_id — the "
+                        "band/flags state tables commit exactly-once per epoch"
+                    )
+                # near-dup flags over the epoch's LWW winners (live rows
+                # only: a deleted doc's payload should not enter the corpus
+                # state). The lineage cols ride along as the deterministic
+                # tie-break for equal (doc_id, lsn) rows — without them the
+                # persisted corpus/flags could differ between a run and its
+                # crash replay
+                live = reduce_latest(
+                    changelog.select("lsn", "op", "doc_id", "payload",
+                                     "source_file", "offset")
+                ).filter(F.col("op") != "D")
+                self.dedup_state.apply(live, batch_id=batch_id, text_col="payload")
+            # one inference job for every table, from the UNREDUCED batch:
+            # re-running the LWW reduce just to infer would double the
+            # epoch's reduce cost, and a field seen only in LWW-losing rows
+            # still evolves the schema — same as the reference, which
+            # infers from the whole JSONL batch file. It also materializes
+            # the persisted batch once, before the table threads read it.
+            inferred = (
+                infer_payload_schema(changelog, self.tables)
+                if self.payload_mode == "typed"
+                else {}
             )
-            # reduce WITH the lineage cols (they are the deterministic
-            # tie-break), then drop them from the written payload — they
-            # feed the lineage/stats pre-pass via stats_df only, so the
-            # table keeps exactly ENTITY_PAYLOAD_SCHEMA (no surprise
-            # schema-evolution commit, smaller files)
-            reduced = reduce_latest(slice_df).drop("source_file", "offset")
-            if self.payload_mode == "typed":
-                reduced = self._typed_batch(table, slice_df, reduced)
-            res = table.merge(reduced, batch_id=batch_id, stats_df=slice_df)
-            applied[entity] = res.n_events
-        changelog.unpersist()
-        return applied
+
+            def branch(entity: str, table: SnapshotTable) -> int:
+                slice_df = changelog.filter(F.col("source") == entity).select(
+                    "lsn", "op", "doc_id", "payload", "modified_timestamp",
+                    "source_file", "offset",
+                )
+                # reduce WITH the lineage cols (they are the deterministic
+                # tie-break), then drop them from the written payload — they
+                # feed the lineage/stats pre-pass via stats_df only, so the
+                # table keeps exactly ENTITY_PAYLOAD_SCHEMA (no surprise
+                # schema-evolution commit, smaller files)
+                reduced = reduce_latest(slice_df).drop("source_file", "offset")
+                if self.payload_mode == "typed":
+                    reduced = self._typed_batch(table, inferred[entity], reduced)
+                return table.merge(reduced, batch_id=batch_id, stats_df=slice_df).n_events
+
+            return run_table_branches(
+                self.spark, {e: partial(branch, e, t) for e, t in self.tables.items()}
+            )
+        finally:
+            changelog.unpersist()
 
     def attach(self, changelog_stream: DataFrame, checkpoint: str,
                available_now: bool = False):

@@ -10,26 +10,33 @@ a merged firehose) carrying every table's envelopes.
 
 Exactly-once across N tables WITHOUT a cross-table transaction: every
 table commits the epoch under the SAME ``batch_id`` against its OWN
-ledger. A crash mid-loop leaves a prefix of tables committed; the
-replayed epoch no-ops exactly those and applies the rest — convergence
-per table, monotone, no coordination. (For an atomic all-tables-or-none
-boundary, stage through ``operators/txn.py``.)
+ledger, and the tables commit concurrently (``run_table_branches``). A
+crash mid-epoch leaves any subset of tables committed; the replayed
+epoch no-ops exactly those and applies the rest — convergence per table,
+monotone, no coordination. (For an atomic all-tables-or-none boundary,
+stage through ``operators/txn.py``.)
 
 Scale shape: the raw batch is persisted ONCE and each table's branch is
-a column filter over it (one materialization, N cheap scans); per-table
-decode/reduce/merge then follow MergePipeline's pinned plans. Undeclared
-or NULL table names land in the ``_unrouted`` quarantine counter rather
-than vanishing.
+a column filter over it (one materialization, N cheap scans). Routing,
+schema drift and decode run on the calling thread in table order (so
+``schemas`` and the wire-DLQ reject union are deterministic); each
+table's reduce + merge then runs on its own driver thread through
+MergePipeline's pinned plans. Undeclared or NULL table names land in the
+``_unrouted`` quarantine counter rather than vanishing.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+from data_hub_ejp_xml_pipeline_spark.plans.pipeline import (
+    MergePipeline,
+    run_table_branches,
+)
 from data_hub_ejp_xml_pipeline_spark.sources import debezium as dbz
 
 
@@ -111,7 +118,8 @@ class MultiTablePipeline:
 
     def apply(self, envelopes: DataFrame, batch_id: int | None = None) -> MultiCommitResult:
         """One epoch: route → decode → per-table reduce+merge, every
-        table ledgered under the same ``batch_id``."""
+        table ledgered under the same ``batch_id``; the tables' reduce +
+        merge branches run concurrently."""
         if batch_id is None:
             raise ValueError(
                 "MultiTablePipeline.apply requires a batch_id — per-table "
@@ -123,7 +131,7 @@ class MultiTablePipeline:
         try:
             routed = dbz.route_envelopes(raw, self.schemas, json_col=self.json_col)
             unrouted = routed["_unrouted"].count()  # also materializes raw
-            per_table = {}
+            branches = {}
             rejects = []
             for t, pipe in self.pipes.items():
                 sch = self.schemas[t]
@@ -148,7 +156,10 @@ class MultiTablePipeline:
                             F.col("_error").alias("reject_reason"),
                         )
                     )
-                per_table[t] = pipe.apply(dbz.changelog(decoded), batch_id=batch_id)
+                branches[t] = partial(
+                    pipe.apply, dbz.changelog(decoded), batch_id=batch_id
+                )
+            per_table = run_table_branches(self.spark, branches)
             if self.wire_dlq is not None and rejects:
                 allr = rejects[0]
                 for r in rejects[1:]:

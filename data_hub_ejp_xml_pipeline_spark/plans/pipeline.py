@@ -9,14 +9,50 @@ materialization (SURVEY.md §3.1 engine equivalent).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
+
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
 from data_hub_ejp_xml_pipeline_spark.schemas import TARGET_SCHEMA
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import CommitResult, SnapshotTable
 
 PAYLOAD_SCHEMA = T.StructType([f for f in TARGET_SCHEMA.fields if f.name != "_lsn"])
+
+R = TypeVar("R")
+
+
+def run_table_branches(
+    spark: SparkSession, branches: dict[str, Callable[[], R]]
+) -> dict[str, R]:
+    """Run one epoch's per-table branches (reduce + ledgered merge)
+    concurrently, one driver thread per table.
+
+    Safe without coordination because every table has its own ledger,
+    manifest CAS and data directories: a failed branch leaves the other
+    tables' commits in place, and replaying the epoch under the same
+    ``batch_id`` no-ops exactly the committed ones. Each thread inherits
+    the caller's Spark local properties (job group, description — e.g. a
+    streaming micro-batch's cancellable group) and tags.
+
+    Waits for every branch before returning or raising, so no thread
+    outlives the call; then raises the first failure in table order, or
+    returns the results in table order."""
+    if not branches:
+        return {}
+    wrap = inheritable_thread_target(spark)
+    if wrap is spark:  # pinned-thread mode off: nothing to inherit
+        wrap = lambda fn: fn  # noqa: E731
+    with ThreadPoolExecutor(
+        max_workers=len(branches), thread_name_prefix="table-branch"
+    ) as pool:
+        futures = {name: pool.submit(wrap(fn)) for name, fn in branches.items()}
+    # leaving the block joined every thread
+    return {name: fut.result() for name, fut in futures.items()}
 
 
 class MergePipeline:
@@ -297,10 +333,11 @@ class MergePipeline:
             except BaseException as exc:  # surfaced at the barrier / below
                 box["error"] = exc
 
-        import threading
-
-        th = threading.Thread(
-            target=_run_sidecars, name="sidecar-states", daemon=True
+        # inherits the caller's local properties, so the sidecar jobs stay
+        # in its job group (a plain Thread's jobs would leave it)
+        th = InheritableThread(
+            _run_sidecars, session=self.spark, name="sidecar-states",
+            daemon=True,
         )
         th.start()
 

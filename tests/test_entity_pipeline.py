@@ -3,8 +3,10 @@ engine equivalent of the reference's four BigQuery loads."""
 
 from __future__ import annotations
 
+import collections
 import io
 import os
+import threading
 import time
 import zipfile
 
@@ -118,14 +120,14 @@ def test_entity_tables_keep_declared_schema(spark, tmp_path):
 
 
 def test_partial_epoch_converges_on_retry(spark, tmp_path):
-    """A crash BETWEEN table commits leaves a partial epoch; retrying the
-    same batch_id no-ops the committed tables (their ledgers) and applies
-    only the missing ones — the epoch converges without cross-table
-    coordination."""
-    import os
-    import time
-
+    """One table's merge fails while the others commit concurrently: the
+    epoch re-raises only after every other table committed exactly one
+    version and no table thread is left running; the persisted batch is
+    released; retrying the same batch_id no-ops the committed tables
+    (their ledgers) and applies only the missing one — the epoch converges
+    without cross-table coordination, lineage exactly-once per table."""
     import pytest
+    from pyspark import StorageLevel
 
     zips = tmp_path / "zips"
     zips.mkdir()
@@ -137,8 +139,10 @@ def test_partial_epoch_converges_on_retry(spark, tmp_path):
     )
     pipe = EntityPipeline(spark, cfg, n_buckets=2)
     changelog = entities_to_changelog(read_zip_entities(spark, str(zips)))
+    versions0 = {e: t.current_version() for e, t in pipe.tables.items()}
 
-    # crash injection: manuscript_version's merge dies AFTER the others
+    # crash injection: manuscript_version's merge dies at once, while the
+    # other tables' commits are still in flight
     victim = pipe.tables["manuscript_version"]
     original_merge = victim.merge
 
@@ -149,18 +153,196 @@ def test_partial_epoch_converges_on_retry(spark, tmp_path):
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.apply(changelog, batch_id=0)
     victim.merge = original_merge
+    assert not [t for t in threading.enumerate() if t.name.startswith("table-branch")]
+    assert changelog.storageLevel == StorageLevel.NONE
 
-    # partial epoch: earlier tables committed, victim did not
+    # partial epoch: the other tables committed once, victim did not
+    for e, t in pipe.tables.items():
+        assert t.current_version() == versions0[e] + (e != "manuscript_version"), e
     assert pipe.read("person_v2").count() == 1
     assert pipe.read("manuscript_version").count() == 0
 
     # retry the SAME epoch: committed tables no-op via their ledgers
-    pipe.apply(changelog, batch_id=0)
+    assert pipe.apply(changelog, batch_id=0)["manuscript_version"] == 1
     assert pipe.read("manuscript_version").count() == 1
     assert pipe.read("person_v2").count() == 1
-    # ledgers: exactly one entry per table for batch 0
+    for e, t in pipe.tables.items():
+        assert t.current_version() == versions0[e] + 1, e
+        # ledgers: exactly one entry per table for batch 0
+        assert "0" in t.ledger()
+        files = collections.Counter(r["source_file"] for r in t.lineage())
+        assert files and set(files.values()) == {1}, (e, files)
+
+
+def test_table_merges_run_concurrently(spark, tmp_path):
+    """The four tables' merges are in flight at the same time (a serial
+    loop never gets all four past the barrier)."""
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    f = zips / "b0.zip"
+    f.write_bytes(_zip())
+    os.utime(f, (time.time() - 50, time.time() - 50))
+    cfg = PipelineConfig.from_dict(
+        {"zipPath": str(zips), "warehouseRoot": str(tmp_path / "wh")}, "x"
+    )
+    pipe = EntityPipeline(spark, cfg, n_buckets=2)
+    barrier = threading.Barrier(len(pipe.tables), timeout=60)
+    intervals = {}
+
+    def timed(entity, merge):
+        def wrapped(*args, **kwargs):
+            barrier.wait()
+            t0 = time.time()
+            try:
+                return merge(*args, **kwargs)
+            finally:
+                intervals[entity] = (t0, time.time())
+
+        return wrapped
+
+    for e, t in pipe.tables.items():
+        t.merge = timed(e, t.merge)
+    applied = pipe.apply(
+        entities_to_changelog(read_zip_entities(spark, str(zips))), batch_id=0
+    )
+    assert applied == {e: 1 for e in ENTITY_TYPES}
+    assert len(intervals) == len(ENTITY_TYPES)
+    assert max(s for s, _ in intervals.values()) < min(e for _, e in intervals.values())
+
+
+def _settled_job_ids(sc, group):
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_threads_keep_the_callers_job_group(spark, tmp_path, monkeypatch):
+    """Jobs started on the engine's driver threads stay in the caller's job
+    group: MergePipeline's sidecar thread, and the table threads of an
+    EntityPipeline epoch, whose typed payloads are inferred in ONE job."""
+    from data_hub_ejp_xml_pipeline_spark.generator import (
+        generate_changelog_pandas,
+        spark_changelog_from_pandas,
+    )
+    from data_hub_ejp_xml_pipeline_spark.plans import entity_pipeline
+    from data_hub_ejp_xml_pipeline_spark.plans.dlq import DlqState
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+    from data_hub_ejp_xml_pipeline_spark.schemas import CHANGELOG_SCHEMA
+
+    sc = spark.sparkContext
+    ungrouped = _settled_job_ids(sc, None)
+    try:
+        sc.setJobGroup("setup-group", "setup")
+        # the sidecar runs its DLQ append to completion before the base
+        # merge starts, so every job in the group by then is the sidecar's
+        dlq = DlqState(spark, str(tmp_path / "dlq"), payload_schema=CHANGELOG_SCHEMA,
+                       n_buckets=2)
+        pipe = MergePipeline(spark, str(tmp_path / "tbl"), n_buckets=2, dlq_state=dlq)
+        sidecar_done = threading.Event()
+        real_dlq_apply, real_merge = dlq.apply, pipe.table.merge
+        sidecar_jobs = []
+
+        def dlq_apply(*args, **kwargs):
+            try:
+                return real_dlq_apply(*args, **kwargs)
+            finally:
+                sidecar_done.set()
+
+        def merge(*args, **kwargs):
+            assert sidecar_done.wait(120)
+            sidecar_jobs.extend(_settled_job_ids(sc, "sidecar-group"))
+            return real_merge(*args, **kwargs)
+
+        dlq.apply, pipe.table.merge = dlq_apply, merge
+        batch = spark_changelog_from_pandas(
+            spark, generate_changelog_pandas(n_events=200, seed=5)
+        )
+        sc.setJobGroup("sidecar-group", "sidecar")
+        pipe.apply(batch, batch_id=0)
+        assert sidecar_jobs, "the sidecar's jobs left the caller's job group"
+
+        # a typed epoch: one inference job, table threads in the group
+        zips = tmp_path / "zips"
+        zips.mkdir()
+        f = zips / "b0.zip"
+        f.write_bytes(_zip())
+        os.utime(f, (time.time() - 50, time.time() - 50))
+        cfg = PipelineConfig.from_dict(
+            {"zipPath": str(zips), "warehouseRoot": str(tmp_path / "wh")}, "x"
+        )
+        epipe = EntityPipeline(spark, cfg, n_buckets=2, payload_mode="typed")
+        changelog = entities_to_changelog(read_zip_entities(spark, str(zips)))
+        real_infer = entity_pipeline.infer_payload_schema
+        infer_jobs = set()
+
+        def infer(*args, **kwargs):
+            sc.setJobGroup("infer-group", "infer")
+            try:
+                return real_infer(*args, **kwargs)
+            finally:
+                infer_jobs.update(_settled_job_ids(sc, "infer-group"))
+                sc.setJobGroup("epoch-group", "epoch")
+
+        monkeypatch.setattr(entity_pipeline, "infer_payload_schema", infer)
+        sc.setJobGroup("epoch-group", "epoch")
+        assert epipe.apply(changelog, batch_id=0) == {e: 1 for e in ENTITY_TYPES}
+        assert len(infer_jobs) == 1
+        assert _settled_job_ids(sc, "epoch-group")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    # (a subset: the status store may evict old jobs meanwhile)
+    assert _settled_job_ids(sc, None) <= ungrouped
+
+
+def test_one_job_inference_matches_per_entity_reads(spark, tmp_path):
+    """The one-job ``infer_payload_schema`` gives every entity the struct a
+    separate ``spark.read.json`` of its payloads infers: nested
+    ``array<struct>`` drift, an entity absent from the batch (empty
+    struct), a corrupt payload row (no field) and a foreign source
+    (dropped)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from data_hub_ejp_xml_pipeline_spark.plans.entity_pipeline import (
+        _RESERVED,
+        infer_payload_schema,
+    )
+
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("go.xml", GO)
+        zf.writestr("p.xml", XML_PERSONS_V2_DRIFT)
+        zf.writestr("m.xml", XML_MANUSCRIPT)
+    (zips / "b0.zip").write_bytes(buf.getvalue())
+    parsed = entities_to_changelog(read_zip_entities(spark, str(zips)))
+    batch = parsed.where(F.col("source") != "person").select("source", "payload").unionByName(
+        spark.createDataFrame(
+            [("person_v2", '{"broken": [1,'), ("elsewhere", '{"foreign": 1}'),
+             ("manuscript", None)],
+            "source string, payload string",
+        )
+    )
+    got = infer_payload_schema(batch, ENTITY_TYPES)
+
+    want = {}
     for e in ENTITY_TYPES:
-        assert "0" in pipe.tables[e].ledger()
+        strings = batch.where((F.col("source") == e) & F.col("payload").isNotNull())
+        inferred = spark.read.json(strings.select("payload").rdd.map(lambda r: r[0]))
+        want[e] = T.StructType(
+            [f for f in inferred.schema.fields
+             if not f.name.startswith("_corrupt") and f.name.lower() not in _RESERVED]
+        )
+    assert got == want
+    assert got["person"] == T.StructType()
+    addresses = got["person_v2"]["addresses"].dataType
+    assert isinstance(addresses, T.ArrayType)
+    assert isinstance(addresses.elementType, T.StructType)
+    assert "broken" not in got["person_v2"].names
+    assert "stages" in got["manuscript_version"].names
+    assert not any("foreign" in s.names for s in got.values())
 
 
 XML_PERSONS_V2_DRIFT = b"""<persons>
