@@ -124,8 +124,16 @@ class ChangelogTailer:
             # metrics.jsonl is the durable record; the in-memory list is a
             # convenience tail and must not grow for the query's lifetime
             del self.metrics[: -5_000]
-        with open(self.metrics_path, "a") as fh:
-            fh.write(json.dumps(row) + "\n")
+        line = json.dumps(row) + "\n"
+        with open(self.metrics_path, "ab+") as fh:
+            size = fh.seek(0, os.SEEK_END)
+            if size:
+                fh.seek(size - 1)
+                if fh.read(1) != b"\n":
+                    # a torn last line (crash mid-append) must not swallow
+                    # this row: end it first
+                    line = "\n" + line
+            fh.write(line.encode())
 
     # ------------------------------------------------------------------ start
     def start(

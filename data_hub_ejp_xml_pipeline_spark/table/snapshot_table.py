@@ -21,23 +21,29 @@ Design for 100 TB:
   not the bucket. Untouched files are carried forward by reference (no
   data movement). ``files_per_bucket`` controls write fan-out so buckets
   are multi-file in the first place.
-* **Atomic commits.** A commit = write immutable data files → create
-  ``meta/v{N}.json`` with ``O_CREAT|O_EXCL`` (the manifest file is the
-  CAS token between racing writers) → atomically swap the
-  ``meta/VERSION`` pointer (``os.replace``). Readers resolve the pointer
-  once and read an immutable snapshot; a crash mid-commit leaves garbage
-  files but a consistent table.
+* **One commit point.** A commit = write immutable data files → write
+  the whole manifest to a private, fsynced temp file in ``meta/`` →
+  ``os.link`` it to ``meta/v{N}.json``. The link is atomic and fails if
+  the name exists, so it is the CAS between racing writers, and no
+  ``v{N}.json`` is ever torn: the manifest file IS the commit (Iceberg's
+  file-system-table rule). ``meta/VERSION`` is only a hint refreshed
+  after the link; :meth:`SnapshotTable.current_version` rolls forward
+  past it while ``v{N+1}.json`` exists. A process crash anywhere leaves
+  garbage files (swept by ``expire_snapshots``) and a consistent table;
+  a crash after the link is a committed epoch whose replay is a ledger
+  no-op. (Spark's data-file writes are not fsynced, so a POWER loss
+  relies on the filesystem for the data files' durability.)
 * **Exactly-once with a BOUNDED ledger.** The manifest embeds a sliding
   window of recent ``{batch_id → snapshot_id}`` entries plus an
   ``evicted_below`` watermark: replays inside the window hit the map,
   older (monotone streaming) replays hit the watermark — O(window), not
   O(history), per commit.
-* **Lineage sidecar.** Per-source-file offset ranges (FIXTURES.md §5,
-  generalizing the reference's provenance struct ``ejp_zip.py:66-69``)
-  are APPENDED to ``meta/lineage.jsonl`` after the pointer swap — O(1)
-  per commit instead of rewriting cumulative history into the manifest.
-  Lineage is observability: a crash between swap and append loses that
-  epoch's lineage line but never correctness.
+* **Lineage in the manifest.** Per-source-file offset ranges
+  (FIXTURES.md §5, generalizing the reference's provenance struct
+  ``ejp_zip.py:66-69``) of THIS epoch only ride in the manifest the
+  commit publishes, so state, ledger and lineage land in one atomic
+  step. :meth:`SnapshotTable.lineage` reads the retained manifests;
+  lineage retention follows ``expire_snapshots``.
 * **One pre-pass per commit.** Lineage, touched buckets, per-bucket key
   ranges (for the file pruning) and batch stats all come out of a single
   ``GROUPING SETS ((source_file), (_bucket))`` aggregation over a narrow
@@ -52,6 +58,7 @@ import json
 import logging
 import os
 import time
+import uuid
 from dataclasses import dataclass
 from typing import Any
 
@@ -169,12 +176,28 @@ class SnapshotTable:
 
     @classmethod
     def exists(cls, root: str) -> bool:
-        return os.path.exists(os.path.join(root, "meta", "VERSION"))
+        """True once a manifest is published, with or without a hint."""
+        meta = os.path.join(root, "meta")
+        return os.path.exists(os.path.join(meta, "VERSION")) or _latest_manifest(meta) is not None
 
     # ------------------------------------------------------------- metadata
     def current_version(self) -> int:
-        with open(os.path.join(self.root, "meta", "VERSION")) as fh:
-            return int(fh.read().strip())
+        """The newest committed version: the ``VERSION`` hint, rolled
+        forward while the next manifest exists (a crash between the
+        manifest link and the hint refresh leaves the hint behind). With
+        no hint yet (a crash before the first one), the highest
+        ``v{N}.json`` — a listing paid only on that path."""
+        meta = os.path.join(self.root, "meta")
+        try:
+            with open(os.path.join(meta, "VERSION")) as fh:
+                v = int(fh.read().strip())
+        except FileNotFoundError:
+            v = _latest_manifest(meta)
+            if v is None:
+                raise FileNotFoundError(f"no table at {self.root}") from None
+        while os.path.exists(os.path.join(meta, f"v{v + 1:08d}.json")):
+            v += 1
+        return v
 
     def manifest(self, version: int | None = None) -> dict[str, Any]:
         v = self.current_version() if version is None else version
@@ -206,7 +229,7 @@ class SnapshotTable:
                 with open(os.path.join(meta, name)) as fh:
                     m = json.load(fh)
             except (json.JSONDecodeError, OSError):
-                continue  # torn/expiring manifest: history reports, never raises
+                continue  # expired mid-listing: history reports, never raises
             rows.append(
                 (
                     m["version"],
@@ -248,26 +271,15 @@ class SnapshotTable:
         return self.spark.createDataFrame(rows, schema)
 
     def lineage(self) -> list[dict[str, Any]]:
-        """Read the append-only lineage sidecar. A torn final line (crash
-        mid-append) is skipped; duplicate (snapshot_id, source_file) pairs
-        from a retried commit keep the first occurrence."""
-        path = os.path.join(self.root, "meta", "lineage.jsonl")
-        if not os.path.exists(path):
-            return []
-        out: list[dict[str, Any]] = []
-        seen: set[tuple[str, str]] = set()
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    row = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                dedup_key = (row.get("snapshot_id", ""), row.get("source_file", ""))
-                if dedup_key in seen:
-                    continue
-                seen.add(dedup_key)
-                out.append(row)
-        return out
+        """Per-source-file lineage of the RETAINED snapshots in version
+        order: ``(source_file, offset_min, offset_max, n_events,
+        snapshot_id)`` rows, each committed in its snapshot's manifest —
+        so rows of expired snapshots are gone with them."""
+        return [
+            {**r, "snapshot_id": m["snapshot_id"]}
+            for m in self._retained_manifests()
+            for r in m.get("lineage", [])
+        ]
 
     def diff(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Row-level changes between two snapshots (Iceberg changelog-scan
@@ -326,48 +338,19 @@ class SnapshotTable:
             .filter(F.col("_change_type").isNotNull())
         )
 
-    def compact_lineage(self, keep_snapshots: set[str] | None = None) -> dict[str, int]:
-        """Rewrite the append-only lineage sidecar keeping only the given
-        snapshot ids (default: snapshots still in the retained manifest
-        history). The sidecar is O(1) per commit to WRITE, but append-only
-        forever — run this with expire_snapshots as part of retention.
-
-        Like ``expire_snapshots``, this is a SINGLE-OWNER maintenance op:
-        run it from the maintenance job, not concurrently with a committer
-        (an append landing between the read and the replace would be lost —
-        the same discipline Iceberg documents for its maintenance actions).
-        """
-        if keep_snapshots is None:
-            keep_snapshots = {s["snapshot_id"] for s in self.snapshots()}
-        rows = self.lineage()
-        kept = [r for r in rows if r.get("snapshot_id") in keep_snapshots]
-        path = os.path.join(self.root, "meta", "lineage.jsonl")
-        tmp = path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            for r in kept:
-                fh.write(json.dumps(r) + "\n")
-        os.replace(tmp, path)
-        return {"kept": len(kept), "removed": len(rows) - len(kept)}
-
-    def _append_lineage(self, snapshot_id: str, rows: list[dict[str, Any]]) -> None:
-        if not rows:
-            return
-        path = os.path.join(self.root, "meta", "lineage.jsonl")
-        payload = "".join(
-            json.dumps({**r, "snapshot_id": snapshot_id}) + "\n" for r in rows
-        )
-        with open(path, "a") as fh:
-            fh.write(payload)
-
     def snapshots(self) -> list[dict[str, Any]]:
-        out = []
+        return [
+            {"version": m["version"], "snapshot_id": m["snapshot_id"],
+             "operation": m["operation"]}
+            for m in self._retained_manifests()
+        ]
+
+    def _retained_manifests(self):
         for v in range(self.current_version() + 1):
             try:
-                m = self.manifest(v)
+                yield self.manifest(v)
             except FileNotFoundError:
                 continue  # expired by expire_snapshots(); history starts later
-            out.append({"version": v, "snapshot_id": m["snapshot_id"], "operation": m["operation"]})
-        return out
 
     # ----------------------------------------------------------------- read
     def read(
@@ -718,11 +701,7 @@ class SnapshotTable:
         The hash function is RECORDED IN THE MANIFEST: a table's bucket
         assignment is part of its on-disk format, and silently changing it
         would make existing files invisible to the pruning (stale rows
-        resurface as phantom inserts). Manifests without the field are
-        round-1-format tables, which used xxhash64. (Tables written by the
-        few intermediate development commits that used murmur3 unrecorded
-        were never persisted across a release — the fallback targets the
-        released round-1 format.) This is :func:`_bucket_col` of the
+        resurface as phantom inserts). This is :func:`_bucket_col` of the
         current manifest."""
         return _bucket_col(key, self.manifest())
 
@@ -860,7 +839,7 @@ class SnapshotTable:
         orphans that ``expire_snapshots`` sweeps.
 
         ``pre_commit_hook`` — called AFTER the merge's data files are
-        written but BEFORE the manifest/pointer commit; if it raises,
+        written but BEFORE the manifest commit; if it raises,
         the commit is aborted (the written files are unreferenced
         orphans ``expire_snapshots`` sweeps). This is the overlap seam
         for sidecar states (``plans.pipeline.MergePipeline``): their
@@ -1052,7 +1031,7 @@ class SnapshotTable:
         table_rows = sum(f["rows"] for f in m["files"])
         rows_per_file = max(1, -(-max(table_rows, est_rows) // max_parts))
         n_parts = min(max_parts, max(1, -(-est_rows // rows_per_file)))
-        if merge and n_parts == max_parts and m.get("bucket_hash") == "murmur3":
+        if merge and n_parts == max_parts:
             # FULL-fan-out merge (the streaming steady state): because the
             # bucket function IS Spark's hash-partitioning function, a
             # shuffle on the key into max_parts partitions is already
@@ -1077,7 +1056,7 @@ class SnapshotTable:
 
         if pre_commit_hook is not None:
             # barrier: sidecar work overlapped with the write above must be
-            # durably committed before THIS table's pointer advances (a
+            # durably committed before THIS table's manifest lands (a
             # raise here leaves the written snap_dir an unreferenced orphan
             # for expire_snapshots — never a visible snapshot)
             pre_commit_hook()
@@ -1093,7 +1072,7 @@ class SnapshotTable:
             "key": key,
             "n_buckets": m["n_buckets"],
             "files_per_bucket": m.get("files_per_bucket", 1),
-            "bucket_hash": m.get("bucket_hash", "xxhash64"),
+            "bucket_hash": m["bucket_hash"],
             "stats_cols": m.get("stats_cols", []),
             "schema": json.loads(merged_schema.json()),
             "files": carried + new_files,
@@ -1102,9 +1081,7 @@ class SnapshotTable:
             "ledger_evicted_below": evicted_below,
             "ts": time.time(),
         }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        # after the pointer swap: the commit is durable, lineage is O(1) append
-        self._append_lineage(snapshot_id, lineage_rows)
+        self._write_manifest(manifest, expected_parent_version=m["version"], lineage=lineage_rows)
         return CommitResult(
             snapshot_id,
             version,
@@ -1193,14 +1170,11 @@ class SnapshotTable:
             return {}
 
     def _write_tags(self, tags: dict[str, int]) -> None:
-        # tmp + os.replace, mirroring the VERSION pointer: expire_snapshots
-        # trusts tags() for retention, so a crash mid-write must never
-        # leave a truncated tags.json that silently un-pins snapshots
+        # temp + os.replace: expire_snapshots trusts tags() for retention,
+        # so a crash mid-write must never leave a truncated tags.json that
+        # silently un-pins snapshots
         path = self._tags_path()
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, path)
+        os.replace(_write_temp(os.path.dirname(path), json.dumps(tags)), path)
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin a version under a name — a durable time-travel handle.
@@ -1235,8 +1209,12 @@ class SnapshotTable:
         retained time-travel window are untouched), and sweep ORPHAN files
         left by crashed/lost-the-CAS commits (referenced by no manifest at
         all). Single-owner maintenance op: must not run concurrently with
-        a committer, whose not-yet-committed data dir would look orphaned."""
+        a committer, whose not-yet-committed data dir would look orphaned.
+        Temp files of crashed commits in ``meta/`` are swept too."""
         current = self.current_version()
+        # pin the hint first: current_version() rolls forward from it and
+        # must never have to step over a manifest deleted below
+        self._write_hint(current)
         cutoff = max(current - keep_last + 1, 0)
         tagged = set(self.tags().values())
         retained_versions = set(range(cutoff, current + 1)) | tagged
@@ -1283,6 +1261,10 @@ class SnapshotTable:
                     os.remove(fp)  # stale Hadoop .crc sidecar
             if not os.listdir(dirpath) and dirpath != data_root:
                 os.rmdir(dirpath)
+        meta = os.path.join(self.root, "meta")
+        for fn in os.listdir(meta):
+            if fn.startswith("."):  # see _write_temp
+                os.remove(os.path.join(meta, fn))
         return {"removed_files": removed_files, "removed_manifests": removed_manifests,
                 "oldest_retained_version": cutoff}
 
@@ -1728,41 +1710,32 @@ class SnapshotTable:
         directory entry, never the shared inode). The clone's manifest
         chain is COLLAPSED to the cloned version (time travel below it is
         gone), but the LEDGER carries over verbatim so a replica that
-        resumes the same stream still no-ops already-applied epochs. Tags
-        are not copied — they point at versions the clone does not have."""
+        resumes the same stream still no-ops already-applied epochs; its
+        lineage is the cloned version's rows only. Tags are not copied —
+        they point at versions the clone does not have."""
         import shutil
 
         m = self.manifest(version)
-        if os.path.exists(os.path.join(dest_root, "meta", "VERSION")):
+        if SnapshotTable.exists(dest_root):
             raise ValueError(f"destination already holds a table: {dest_root}")
         os.makedirs(os.path.join(dest_root, "meta"), exist_ok=True)
         for f in m["files"]:
             src = os.path.join(self.root, f["path"])
             dst = os.path.join(dest_root, f["path"])
             os.makedirs(os.path.dirname(dst), exist_ok=True)
+            if os.path.exists(dst):  # left by a clone that crashed before its manifest
+                os.remove(dst)
             try:
                 os.link(src, dst)
             except OSError:  # cross-device / FS without hard links
                 shutil.copy2(src, dst)
-        lineage = os.path.join(self.root, "meta", "lineage.jsonl")
-        if os.path.exists(lineage):
-            shutil.copy2(lineage, os.path.join(dest_root, "meta", "lineage.jsonl"))
-        manifest = {
-            **m,
-            "parent": None,
-            "operation": f"clone:{self.root}@v{m['version']}",
-            "ts": time.time(),
-        }
-        meta = os.path.join(dest_root, "meta")
-        with open(
-            os.path.join(meta, f"v{m['version']:08d}.json"), "x"
-        ) as fh:
-            json.dump(manifest, fh)
-        tmp = os.path.join(meta, f".VERSION.tmp.{os.getpid()}")
-        with open(tmp, "w") as fh:
-            fh.write(str(m["version"]))
-        os.replace(tmp, os.path.join(meta, "VERSION"))
-        return SnapshotTable(self.spark, dest_root)
+        clone = SnapshotTable(self.spark, dest_root)
+        clone._write_manifest(
+            {**m, "parent": None, "operation": f"clone:{self.root}@v{m['version']}",
+             "ts": time.time()},
+            lineage=m.get("lineage", []),
+        )
+        return clone
 
     # ------------------------------------------------------------------ fsck
     def verify(self, deep: bool = False) -> dict[str, Any]:
@@ -1921,16 +1894,10 @@ class SnapshotTable:
                 .agg(F.grouping("_bucket").alias("_is_file_row"), *aggs)
                 .collect()
             )
-            file_rows = [r for r in rows if r["_is_file_row"] == 1]
             bucket_rows = [r for r in rows if r["_is_file_row"] == 0]
             lineage = [
-                {
-                    "source_file": r["source_file"],
-                    "offset_min": r["offset_min"],
-                    "offset_max": r["offset_max"],
-                    "n_events": r["n_events"],
-                }
-                for r in file_rows
+                {c: r[c] for c in ("source_file", "offset_min", "offset_max", "n_events")}
+                for r in rows if r["_is_file_row"] == 1
             ]
         else:
             bucket_rows = src.groupBy("_bucket").agg(*aggs).collect()
@@ -1950,13 +1917,19 @@ class SnapshotTable:
         return lineage, bucket_ranges, stats
 
     def _write_manifest(
-        self, manifest: dict[str, Any], expected_parent_version: int | None = None
+        self,
+        manifest: dict[str, Any],
+        expected_parent_version: int | None = None,
+        lineage: list[dict[str, Any]] | None = None,
     ) -> None:
+        """Publish ``manifest`` — carrying THIS commit's ``lineage`` rows
+        and no earlier ones — as ``v{N}.json``: the link of the complete
+        temp file is the commit; the ``VERSION`` hint follows it."""
         meta = os.path.join(self.root, "meta")
         if expected_parent_version is not None:
             # optimistic concurrency (Iceberg commit semantics): the commit
             # is based on a snapshot read at the start; if another writer
-            # advanced the pointer meanwhile, fail instead of losing their
+            # advanced the table meanwhile, fail instead of losing their
             # commit. (Streaming normally guarantees one writer via
             # checkpoint ownership — this guards misconfiguration.)
             current = self.current_version()
@@ -1965,28 +1938,28 @@ class SnapshotTable:
                     f"table advanced to v{current} while committing on top of "
                     f"v{expected_parent_version}; retry the merge"
                 )
-        path = os.path.join(meta, f"v{manifest['version']:08d}.json")
-        if expected_parent_version is not None:
-            # the manifest file itself is the CAS token: O_CREAT|O_EXCL makes
-            # exactly one of two racing same-parent writers win — the
-            # check-then-act pre-check above alone cannot (both can pass it,
-            # then the second silently overwrites the first's v{N}.json).
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                raise ConcurrentCommitError(
-                    f"manifest v{manifest['version']} already written by a "
-                    "concurrent committer; retry the merge"
-                ) from None
-            with os.fdopen(fd, "w") as fh:
-                json.dump(manifest, fh)
-        else:
-            with open(path, "w") as fh:
-                json.dump(manifest, fh)
-        tmp = os.path.join(meta, f".VERSION.tmp.{os.getpid()}")
-        with open(tmp, "w") as fh:
-            fh.write(str(manifest["version"]))
-        os.replace(tmp, os.path.join(meta, "VERSION"))  # atomic pointer swap
+        version = manifest["version"]
+        tmp = _write_temp(meta, json.dumps({**manifest, "lineage": lineage or []}))
+        try:
+            # the link is the CAS: atomic, and it fails if the name exists,
+            # so exactly one of two racing same-parent writers wins — the
+            # check-then-act pre-check above alone cannot (both can pass it)
+            os.link(tmp, os.path.join(meta, f"v{version:08d}.json"))
+        except FileExistsError:
+            raise ConcurrentCommitError(
+                f"manifest v{version} already written by a concurrent "
+                "committer; retry the merge"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        fd = os.open(meta, os.O_RDONLY)  # the link is durable before the hint
+        os.fsync(fd)
+        os.close(fd)
+        self._write_hint(version)
+
+    def _write_hint(self, version: int) -> None:
+        meta = os.path.join(self.root, "meta")
+        os.replace(_write_temp(meta, str(version)), os.path.join(meta, "VERSION"))
 
 
 def _merge_rows(
@@ -2027,12 +2000,11 @@ def _merge_rows(
 
 def _bucket_col(key: str, m: dict[str, Any]) -> F.Column:
     """THE bucket function of the table state ``m`` (a manifest):
-    ``pmod(hash(key), m["n_buckets"])`` with the hash the manifest
-    records (murmur3; manifests without the field are round-1 xxhash64
-    tables). The key is hashed in the TABLE's key type, not the caller's:
-    murmur3/xxhash64 hash int and long values differently, so a batch whose
-    key arrives wider (long 42 vs int 42) would otherwise land in a
-    different bucket than the files holding that key. The ANSI cast fails
+    ``pmod(murmur3(key), m["n_buckets"])``; the manifest must record that
+    hash as ``bucket_hash``. The key is hashed in the TABLE's key type, not
+    the caller's: murmur3 hashes int and long values differently, so a
+    batch whose key arrives wider (long 42 vs int 42) would otherwise land
+    in a different bucket than the files holding that key. The ANSI cast fails
     loudly on genuine overflow (the key column never widens — see
     _pin_key_type). Taking ``m`` rather than the current manifest keeps a
     time-travel lookup across a ``rebucket`` on its own version's
@@ -2041,9 +2013,35 @@ def _bucket_col(key: str, m: dict[str, Any]) -> F.Column:
     kcol = F.col(key)
     if key_field is not None:
         kcol = kcol.cast(key_field.dataType)
-    fn = m.get("bucket_hash", "xxhash64")
-    hashed = F.hash(kcol) if fn == "murmur3" else F.xxhash64(kcol)
-    return F.pmod(hashed, F.lit(m["n_buckets"])).cast("int")
+    if m.get("bucket_hash") != "murmur3":
+        raise ValueError(
+            f"manifest v{m['version']} records bucket_hash {m.get('bucket_hash')!r}; only "
+            "'murmur3' tables are read (rewrite a round-1 xxhash64 table into a fresh one)"
+        )
+    return F.pmod(F.hash(kcol), F.lit(m["n_buckets"])).cast("int")
+
+
+def _write_temp(meta: str, text: str) -> str:
+    """Write ``text`` to a fresh private file in ``meta`` and return its
+    path. The file is fsynced, so what is linked or renamed from it is
+    complete even after a power loss. Commit temps are the only hidden
+    (``.``-prefixed) files in ``meta/``; a crash leaves them for
+    ``expire_snapshots`` to sweep."""
+    tmp = os.path.join(meta, f".{uuid.uuid4().hex}.tmp")
+    with open(tmp, "x") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    return tmp
+
+
+def _latest_manifest(meta: str) -> int | None:
+    """The highest published version in ``meta`` (None when there is
+    none) — an O(manifests) listing, so only the missing-hint paths use it."""
+    names = os.listdir(meta) if os.path.isdir(meta) else []
+    return max((int(n[1:-5]) for n in names
+                if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()),
+               default=None)
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -2161,7 +2159,7 @@ def _pin_key_type(
     """Force the KEY column's type back to its existing definition after a
     schema merge — ONE implementation for both the merge path and the
     metadata-only add_columns path. A widened key would change bucket
-    hashing (murmur3/xxhash64 hash int and long differently) and strand
+    hashing (murmur3 hashes int and long differently) and strand
     every existing row in a stale-hash bucket."""
     existing_key = _find_field(existing, key)
     merged_key = _find_field(merged, key)

@@ -21,13 +21,13 @@ def test_stale_commit_detected(spark, tmp_path, changelog_pdf, monkeypatch):
     original = table._write_manifest
     interfered = {"done": False}
 
-    def interfering_write(manifest, expected_parent_version=None):
+    def interfering_write(manifest, expected_parent_version=None, **kwargs):
         if not interfered["done"] and manifest["operation"].startswith("merge"):
             interfered["done"] = True
             # second writer sneaks in a full commit first
             other = SnapshotTable(spark, table.root)
             other.merge(b2, batch_id=99)
-        original(manifest, expected_parent_version=expected_parent_version)
+        original(manifest, expected_parent_version=expected_parent_version, **kwargs)
 
     monkeypatch.setattr(table, "_write_manifest", interfering_write)
     with pytest.raises(ConcurrentCommitError):
@@ -40,27 +40,34 @@ def test_stale_commit_detected(spark, tmp_path, changelog_pdf, monkeypatch):
     assert res.applied
 
 
-def test_cas_manifest_create_is_atomic(spark, tmp_path, changelog_pdf):
-    """Two writers that BOTH pass the version pre-check race on writing the
-    same v{N}.json: O_CREAT|O_EXCL makes exactly one win."""
+def test_cas_manifest_create_is_atomic(spark, tmp_path, monkeypatch):
+    """Two writers that BOTH pass the version pre-check race on publishing
+    the same v{N}.json: the link of the temp manifest makes exactly one
+    win, and the loser leaves no temp file behind."""
     import json
     import os
 
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), PAYLOAD_SCHEMA, n_buckets=4)
-    b1 = reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:200]))
-    # simulate the loser: the other writer already created v1's manifest
-    # after our pre-check would have passed
-    path = os.path.join(table.root, "meta", "v00000001.json")
-    with open(path, "w") as fh:
-        json.dump({"version": 1, "snapshot_id": "snap-other", "winner": True}, fh)
+    meta = os.path.join(table.root, "meta")
+    path = os.path.join(meta, "v00000001.json")
+    real_current_version = table.current_version
+
+    def racer_publishes_after_precheck():
+        # our pre-check sees v0; the other writer's v1 lands right after
+        v = real_current_version()
+        with open(path, "w") as fh:
+            json.dump({"version": 1, "snapshot_id": "snap-other"}, fh)
+        return v
+
+    monkeypatch.setattr(table, "current_version", racer_publishes_after_precheck)
     with pytest.raises(ConcurrentCommitError):
         table._write_manifest(
             {"version": 1, "snapshot_id": "snap-mine"}, expected_parent_version=0
         )
-    # the winner's manifest is untouched
+    # the winner's manifest is untouched; no temp manifest is left over
     with open(path) as fh:
         assert json.load(fh)["snapshot_id"] == "snap-other"
-    del b1
+    assert not [fn for fn in os.listdir(meta) if fn.startswith(".")]
 
 
 def test_merge_commit_retries_win_after_concurrent_loss(spark, tmp_path, changelog_df):
@@ -88,7 +95,7 @@ def test_merge_commit_retries_win_after_concurrent_loss(spark, tmp_path, changel
     real_write = SnapshotTable._write_manifest
     fired = {"n": 0}
 
-    def racing_write(self, manifest, expected_parent_version=None):
+    def racing_write(self, manifest, expected_parent_version=None, **kwargs):
         # before the loser's FIRST commit lands, a competitor advances the
         # table through the other handle (real path, real CAS)
         if self is table and fired["n"] == 0:
@@ -99,7 +106,7 @@ def test_merge_commit_retries_win_after_concurrent_loss(spark, tmp_path, changel
                                "parent": other.manifest()["snapshot_id"],
                                "operation": "merge"},
                        expected_parent_version=other.current_version())
-        return real_write(self, manifest, expected_parent_version)
+        return real_write(self, manifest, expected_parent_version, **kwargs)
 
     SnapshotTable._write_manifest = racing_write
     try:
@@ -132,11 +139,11 @@ def test_dml_loses_cas_to_interleaved_merge(spark, tmp_path, changelog_pdf, monk
     original = table._write_manifest
     interfered = {"done": False}
 
-    def interfering_write(manifest, expected_parent_version=None):
+    def interfering_write(manifest, expected_parent_version=None, **kwargs):
         if not interfered["done"] and manifest["operation"] == "delete_where":
             interfered["done"] = True
             SnapshotTable(spark, table.root).merge(b2, batch_id=99)
-        original(manifest, expected_parent_version=expected_parent_version)
+        original(manifest, expected_parent_version=expected_parent_version, **kwargs)
 
     monkeypatch.setattr(table, "_write_manifest", interfering_write)
     with pytest.raises(ConcurrentCommitError):

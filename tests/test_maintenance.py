@@ -118,8 +118,8 @@ def test_vacuum_keeps_rows_with_null_deleted_flag(spark, tmp_path, changelog_pdf
 def test_ledger_eviction_bounds_manifest(spark, tmp_path, changelog_pdf):
     """The manifest stays O(window): old ledger entries evict into the
     evicted_below watermark; replays of evicted (monotone) epochs are
-    still exactly-once no-ops; lineage lives in the sidecar, not the
-    manifest."""
+    still exactly-once no-ops; a manifest's lineage is its own epoch's
+    rows, never the accumulated history."""
     import json
     import os
 
@@ -135,14 +135,16 @@ def test_ledger_eviction_bounds_manifest(spark, tmp_path, changelog_pdf):
         batch = spark_changelog_from_pandas(
             spark, changelog_pdf.iloc[(i - 1) * step : i * step]
         )
-        table.merge(reduce_latest(batch), batch_id=i)
+        # the raw batch feeds the pre-pass, so lineage counts every event
+        res = table.merge(reduce_latest(batch), batch_id=i, stats_df=batch)
         mp = os.path.join(table.root, "meta", f"v{table.current_version():08d}.json")
         sizes.append(os.path.getsize(mp))
 
     m = table.manifest()
     assert len(m["ledger"]) <= table.ledger_window + 1
     assert m["ledger_evicted_below"] is not None
-    assert "lineage" not in m
+    # only the last epoch's rows (a manifest that does not grow with history)
+    assert sum(r["n_events"] for r in m["lineage"]) == res.n_events == step
 
     # replay of an evicted epoch: recognized as applied via the watermark
     replay = reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:step]))
@@ -153,38 +155,24 @@ def test_ledger_eviction_bounds_manifest(spark, tmp_path, changelog_pdf):
     # the last manifest is not dramatically larger than the mid-loop one
     assert sizes[-1] < sizes[n_epochs // 2] * 3
 
-    # lineage sidecar accumulated every epoch and is readable
+    # lineage() gathers every retained epoch's rows
     lineage = table.lineage()
     assert len({r["snapshot_id"] for r in lineage}) >= n_epochs
 
 
-def test_lineage_sidecar_skips_torn_line(spark, tmp_path, changelog_pdf):
-    import os
-
-    table = _build(spark, tmp_path, changelog_pdf, n_batches=2)
-    path = os.path.join(table.root, "meta", "lineage.jsonl")
-    n = len(table.lineage())
-    assert n > 0
-    with open(path, "a") as fh:
-        fh.write('{"snapshot_id": "snap-torn", "source_fi')  # crash mid-append
-    assert len(table.lineage()) == n  # torn line ignored
-
-
-def test_compact_lineage_follows_retention(spark, tmp_path, changelog_pdf):
-    """Lineage compaction keeps only retained snapshots' rows; the
-    retained rows survive byte-identically."""
+def test_lineage_follows_retention(spark, tmp_path, changelog_pdf):
+    """Lineage lives in the manifests, so expire_snapshots alone retires
+    the rows of expired snapshots; the retained rows survive unchanged."""
     table = _build(spark, tmp_path, changelog_pdf, n_batches=4)
     all_rows = table.lineage()
     assert len({r["snapshot_id"] for r in all_rows}) == 4
     table.expire_snapshots(keep_last=2)
-    stats = table.compact_lineage()
-    assert stats["removed"] > 0
     kept = table.lineage()
     retained_snaps = {s["snapshot_id"] for s in table.snapshots()}
-    assert {r["snapshot_id"] for r in kept} <= retained_snaps
+    assert {r["snapshot_id"] for r in kept} == retained_snaps
+    assert len(kept) < len(all_rows)
     # the surviving rows are exactly the originals for those snapshots
-    orig = [r for r in all_rows if r["snapshot_id"] in retained_snaps]
-    assert kept == orig
+    assert kept == [r for r in all_rows if r["snapshot_id"] in retained_snaps]
 
 
 def test_compact_files_binpacks_grown_buckets(spark, tmp_path, changelog_pdf):
@@ -225,9 +213,9 @@ def test_compact_files_binpacks_grown_buckets(spark, tmp_path, changelog_pdf):
 
 
 def test_expire_sweeps_orphans_from_failed_commits(spark, tmp_path, changelog_pdf):
-    """A commit that lost the CAS (or crashed pre-swap) leaves a data dir
-    referenced by no manifest; expire_snapshots sweeps it without touching
-    retained files."""
+    """A commit that lost the CAS (or crashed before its manifest link)
+    leaves a data dir referenced by no manifest and temp files in meta/;
+    expire_snapshots sweeps them without touching retained files."""
     import glob
 
     table = _build(spark, tmp_path, changelog_pdf, n_batches=2)
@@ -238,10 +226,22 @@ def test_expire_sweeps_orphans_from_failed_commits(spark, tmp_path, changelog_pd
         fh.write(b"not really parquet")
     with open(os.path.join(orphan, "_SUCCESS"), "w") as fh:
         fh.write("")
+    # a commit that crashed mid-write leaves its temp files in meta/
+    meta = os.path.join(table.root, "meta")
+    with open(os.path.join(meta, ".0f1e2d.tmp"), "w") as fh:
+        fh.write('{"version": 3, "snapshot_id": "snap-torn", "fi')
+    with open(os.path.join(meta, ".VERSION.tmp.777"), "w") as fh:
+        fh.write("3")
+    # a stale VERSION hint: expiry must not strand the roll-forward
+    with open(os.path.join(meta, "VERSION"), "w") as fh:
+        fh.write("0")
 
     state = table.read().count()
+    version = table.current_version()
     table.expire_snapshots(keep_last=1)
     assert not os.path.exists(orphan), "orphan dir swept"
+    assert not [fn for fn in os.listdir(meta) if fn.startswith(".")], "temps swept"
+    assert table.current_version() == version
     assert table.read().count() == state  # retained files untouched
     assert not glob.glob(os.path.join(table.root, "data", "**", "_SUCCESS"),
                          recursive=True)

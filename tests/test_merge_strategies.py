@@ -1,6 +1,7 @@
 """The single merge plan (pruned sort-merge full outer join) on the edges
-the shared-fixture suites do not reach: legacy bucket hashes, LSNs above
-2^53, and a failing stats pre-pass."""
+the shared-fixture suites do not reach: the oracle over two merges, the
+refused round-1 bucket format, LSNs above 2^53, and a failing stats
+pre-pass."""
 
 from __future__ import annotations
 
@@ -19,10 +20,29 @@ from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
 
 
-def test_legacy_xxhash_table_still_merges(spark, tmp_path, changelog_pdf):
-    """A table whose manifest predates the bucket_hash field (round-1
-    format, xxhash64 buckets) must keep merging correctly — the hash
-    function is part of the on-disk format and is read from the manifest."""
+def test_two_merges_match_oracle(spark, tmp_path, changelog_pdf):
+    """Two merges of the changelog's halves into a murmur3-bucketed table
+    end at the oracle's final state with no key in two buckets."""
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "two"), PAYLOAD_SCHEMA, n_buckets=8
+    )
+    n = len(changelog_pdf)
+    for i, (lo, hi) in enumerate([(0, n // 2), (n // 2, n)]):
+        batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[lo:hi])
+        table.merge(reduce_latest(batch), batch_id=i)
+    assert table.manifest()["bucket_hash"] == "murmur3"  # carried forward
+    actual = (
+        table.read().selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn").toPandas()
+    )
+    assert_final_state_equal(actual, expected_final_state_pandas(changelog_pdf))
+    # no duplicate keys (the failure mode of a bucket-function change)
+    assert table.read().count() == table.read().select("doc_id").distinct().count()
+
+
+def test_manifest_without_bucket_hash_raises(spark, tmp_path, changelog_pdf):
+    """The round-1 table format (xxhash64 buckets, no ``bucket_hash`` in
+    the manifest) is not read: a write names the missing field instead of
+    bucketing rows with the wrong hash."""
     import json
     import os
 
@@ -32,21 +52,13 @@ def test_legacy_xxhash_table_still_merges(spark, tmp_path, changelog_pdf):
     v0 = os.path.join(table.root, "meta", "v00000000.json")
     with open(v0) as fh:
         m = json.load(fh)
-    del m["bucket_hash"]  # simulate the old manifest format
+    del m["bucket_hash"]
     with open(v0, "w") as fh:
         json.dump(m, fh)
-
-    n = len(changelog_pdf)
-    for i, (lo, hi) in enumerate([(0, n // 2), (n // 2, n)]):
-        batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[lo:hi])
-        table.merge(reduce_latest(batch), batch_id=i)
-    assert table.manifest()["bucket_hash"] == "xxhash64"  # carried forward
-    actual = (
-        table.read().selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn").toPandas()
-    )
-    assert_final_state_equal(actual, expected_final_state_pandas(changelog_pdf))
-    # no duplicate keys (the failure mode of a silent hash change)
-    assert table.read().count() == table.read().select("doc_id").distinct().count()
+    batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[:100])
+    with pytest.raises(ValueError, match="bucket_hash"):
+        table.merge(reduce_latest(batch), batch_id=0)
+    assert table.current_version() == 0
 
 
 def test_merge_preserves_lsns_above_2_53(spark, tmp_path):

@@ -86,3 +86,24 @@ def test_tailer_needs_metrics_path_without_table_root(spark, tmp_path):
     metrics = str(tmp_path / "metrics.jsonl")
     tailer = ChangelogTailer(spark, Bare(), metrics_path=metrics)
     assert tailer.metrics_path == metrics
+
+
+def test_tailer_metrics_row_survives_torn_line(spark, tmp_path):
+    """A crash mid-append leaves metrics.jsonl without a trailing newline;
+    the next epoch's row must start on its own line, not be glued onto
+    the torn one."""
+    import json
+
+    from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import CommitResult
+
+    class Stub:
+        def apply(self, batch_df, batch_id=None):
+            return CommitResult("snap-x", 1, applied=True, n_events=3)
+
+    metrics = tmp_path / "metrics.jsonl"
+    metrics.write_text(json.dumps({"batch_id": 0}) + "\n" + '{"batch_id": 1, "snap')
+    ChangelogTailer(spark, Stub(), metrics_path=str(metrics)).apply_epoch(None, 2)
+    lines = metrics.read_text().splitlines()
+    assert lines[1] == '{"batch_id": 1, "snap'  # the torn line, left as is
+    rows = [json.loads(x) for x in lines if x != lines[1]]
+    assert [r["batch_id"] for r in rows] == [0, 2]
