@@ -27,7 +27,6 @@ MergePipeline's pinned plans. Undeclared or NULL table names land in the
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,20 +37,7 @@ from data_hub_ejp_xml_pipeline_spark.plans.pipeline import (
     run_table_branches,
 )
 from data_hub_ejp_xml_pipeline_spark.sources import debezium as dbz
-
-
-@dataclass
-class MultiCommitResult:
-    """Duck-typed like CommitResult for the tailer's metrics row."""
-
-    snapshot_id: str
-    applied: bool
-    n_events: int
-    max_event_ts: object = None
-    rows_written: int = 0
-    version: int = -1
-    per_table: dict | None = None
-    unrouted: int = 0
+from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import CommitResult
 
 
 class MultiTablePipeline:
@@ -116,7 +102,7 @@ class MultiTablePipeline:
             for t, sch in self.schemas.items()
         }
 
-    def apply(self, envelopes: DataFrame, batch_id: int | None = None) -> MultiCommitResult:
+    def apply(self, envelopes: DataFrame, batch_id: int | None = None) -> CommitResult:
         """One epoch: route → decode → per-table reduce+merge, every
         table ledgered under the same ``batch_id``; the tables' reduce +
         merge branches run concurrently."""
@@ -167,13 +153,23 @@ class MultiTablePipeline:
                 self.wire_dlq.apply(allr, batch_id=batch_id)
         finally:
             raw.unpersist()
-        return MultiCommitResult(
+        results = per_table.values()
+
+        def newest(field: str):
+            return max((v for r in results if (v := getattr(r, field)) is not None),
+                       default=None)
+
+        return CommitResult(
             snapshot_id=",".join(
                 f"{t}:{r.snapshot_id}" for t, r in sorted(per_table.items())
             ),
-            applied=any(r.applied for r in per_table.values()),
-            n_events=sum(r.n_events for r in per_table.values()),
-            rows_written=sum(r.rows_written for r in per_table.values()),
+            version=-1,  # every table has its own
+            applied=any(r.applied for r in results),
+            rows_written=sum(r.rows_written for r in results),
+            n_events=sum(r.n_events for r in results),
+            # the stream's offset and freshness are the epoch's, over all tables
+            max_event_ts=newest("max_event_ts"),
+            max_lsn=newest("max_lsn"),
             per_table=per_table,
             unrouted=unrouted,
         )

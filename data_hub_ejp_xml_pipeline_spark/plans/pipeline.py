@@ -165,7 +165,7 @@ class MergePipeline:
         # max(base write, sidecar work) wall clock instead of the sum
         # (guide-§2.6 overlap: FIFO scheduling backfills straggler-idle
         # cores with the sidecar jobs).
-        self._sidecar_jobs: list = []
+        jobs: list = []
         if self.dlq_state is not None:
             if batch_id is None:
                 raise ValueError(
@@ -182,7 +182,7 @@ class MergePipeline:
             )
 
             changelog, rejects = split_changelog(changelog, key=self.key)
-            self._sidecar_jobs.append(
+            jobs.append(
                 lambda: self.dlq_state.apply(rejects, batch_id=batch_id)
             )
         if self.placeholder_cols:
@@ -208,18 +208,16 @@ class MergePipeline:
                     self.placeholder_cols,
                     placeholder=self.placeholder,
                 )
-                return self._apply_reduced(changelog, reduced, batch_id)
+                return self._apply_reduced(changelog, reduced, batch_id, jobs)
             finally:
                 pre.unpersist()
         reduced = reduce_latest(changelog, key=self.key)
-        return self._apply_reduced(changelog, reduced, batch_id)
+        return self._apply_reduced(changelog, reduced, batch_id, jobs)
 
     def _apply_reduced(
-        self, changelog: DataFrame, reduced: DataFrame, batch_id: int | None
+        self, changelog: DataFrame, reduced: DataFrame, batch_id: int | None,
+        jobs: list,
     ) -> CommitResult:
-        jobs = getattr(self, "_sidecar_jobs", None)
-        if jobs is None:
-            jobs = self._sidecar_jobs = []
         if self.dedup_state is not None:
             if batch_id is None:
                 raise ValueError(

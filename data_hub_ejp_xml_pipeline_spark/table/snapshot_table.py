@@ -21,8 +21,11 @@ Design for 100 TB:
   not the bucket. Untouched files are carried forward by reference (no
   data movement). ``files_per_bucket`` controls write fan-out so buckets
   are multi-file in the first place.
-* **One commit point.** A commit = write immutable data files → write
-  the whole manifest to a private, fsynced temp file in ``meta/`` →
+* **One commit point.** A commit = write immutable data files
+  (:meth:`SnapshotTable._write_buckets`) → :meth:`SnapshotTable._publish`,
+  the one step every commit after ``create`` takes: it builds the next
+  manifest, advances the ledger and writes the whole manifest to a
+  private, fsynced temp file in ``meta/`` →
   ``os.link`` it to ``meta/v{N}.json``. The link is atomic and fails if
   the name exists, so it is the CAS between racing writers, and no
   ``v{N}.json`` is ever torn: the manifest file IS the commit (Iceberg's
@@ -54,12 +57,12 @@ from __future__ import annotations
 
 import itertools
 import bisect
+import dataclasses
 import json
 import logging
 import os
 import time
 import uuid
-from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -97,7 +100,7 @@ def _snap_dir_name(version: int) -> str:
     return os.path.join("data", f"snap-v{version:08d}-{os.getpid()}-{next(_DIR_SEQ)}")
 
 
-@dataclass
+@dataclasses.dataclass
 class CommitResult:
     snapshot_id: str
     version: int
@@ -106,6 +109,10 @@ class CommitResult:
     n_events: int = 0  # events observed in the batch (from the stats job)
     max_event_ts: Any = None  # max event_ts in the batch, for lag metrics
     max_lsn: Any = None  # max lsn in the batch — the committed stream offset
+    # a multi-table epoch (plans.multi_table): each table's own result, and
+    # the events routed to no declared table
+    per_table: dict[str, "CommitResult"] | None = None
+    unrouted: int = 0
 
 
 class SnapshotTable:
@@ -712,18 +719,7 @@ class SnapshotTable:
         m = self.manifest()
         existing = T.StructType.fromJson(m["schema"])
         merged = _pin_key_type(merge_schemas(existing, new_schema), existing, m["key"])
-        version = m["version"] + 1
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": f"snap-{version:08d}-addcols",
-            "parent": m["snapshot_id"],
-            "operation": "add_columns",
-            "schema": json.loads(merged.json()),
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(manifest["snapshot_id"], version, applied=True)
+        return self._publish(m, "addcols", "add_columns", schema=json.loads(merged.json()))
 
     def append(
         self,
@@ -738,8 +734,7 @@ class SnapshotTable:
         the RAW batch here so the stats/lineage pre-pass aggregates a narrow
         projection instead of re-executing the transform — and lineage then
         covers the raw offsets, which is what resume wants."""
-        return self._commit(df, operation="append", batch_id=batch_id, merge=False,
-                            stats_df=stats_df)
+        return self._commit(df, operation="append", batch_id=batch_id, stats_df=stats_df)
 
     def truncate(self) -> CommitResult:
         """Metadata-only commit that empties the table: a new snapshot with
@@ -748,19 +743,7 @@ class SnapshotTable:
         which is exactly what a delta/staging table needs after compaction
         (plans.mor_pipeline). Old data files become orphans of prior
         snapshots; ``expire_snapshots`` reclaims them."""
-        m = self.manifest()
-        version = m["version"] + 1
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": f"snap-{version:08d}-truncate",
-            "parent": m["snapshot_id"],
-            "operation": "truncate",
-            "files": [],
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(manifest["snapshot_id"], version, applied=True)
+        return self._publish(self.manifest(), "truncate", "truncate", files=[])
 
     def replace(
         self,
@@ -778,8 +761,7 @@ class SnapshotTable:
         land in a fresh snapshot dir while the scan reads the old ones.
         The empty-batch guard applies: replacing with an EMPTY DataFrame
         is a no-op; use :meth:`truncate` to empty a table."""
-        return self._commit(df, operation="replace", batch_id=batch_id,
-                            merge=False, stats_df=stats_df, replace=True)
+        return self._commit(df, operation="replace", batch_id=batch_id, stats_df=stats_df)
 
     def merge(
         self,
@@ -787,7 +769,6 @@ class SnapshotTable:
         batch_id: int | None = None,
         op_col: str = "op",
         lsn_col: str = "lsn",
-        validate_unique: bool = False,
         stats_df: DataFrame | None = None,
         commit_retries: int = 0,
         retry_backoff_sec: float = 0.5,
@@ -802,8 +783,7 @@ class SnapshotTable:
 
         ``updates`` must be pre-reduced to one row per key (see
         ``operators.lww.reduce_latest``) — an un-reduced batch fans out the
-        outer join and duplicates keys. Pass ``validate_unique=True`` to pay
-        one extra aggregation and fail fast instead. Late rows
+        outer join and duplicates keys. Late rows
         (lsn ≤ applied) are dropped by the guard, making application
         order-insensitive.
 
@@ -851,19 +831,11 @@ class SnapshotTable:
         batch) do NOT invoke the hook — a caller owning a side thread
         must join it after merge() returns regardless.
         """
-        if validate_unique:
-            key = self.manifest()["key"]
-            dup = updates.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()
-            if dup:
-                raise ValueError(
-                    "merge() requires one row per key; got duplicates — "
-                    "run operators.lww.reduce_latest first"
-                )
         attempt = 0
         while True:
             try:
                 return self._commit(
-                    updates, operation="merge", batch_id=batch_id, merge=True,
+                    updates, operation="merge", batch_id=batch_id,
                     op_col=op_col, lsn_col=lsn_col, stats_df=stats_df,
                     inclusive_guard=inclusive_guard, pre_commit_hook=pre_commit_hook,
                 )
@@ -884,19 +856,18 @@ class SnapshotTable:
         updates: DataFrame,
         operation: str,
         batch_id: int | None,
-        merge: bool,
         op_col: str = "op",
         lsn_col: str = "lsn",
         stats_df: DataFrame | None = None,
-        replace: bool = False,
         inclusive_guard: bool = False,
         pre_commit_hook=None,
     ) -> CommitResult:
+        """The data commits: ``operation`` is ``merge``, ``append`` or
+        ``replace``."""
         m = self.manifest()
-        applied_snap = self._ledger_lookup(m, batch_id)
-        if applied_snap is not None:
-            # exactly-once: epoch already applied → metadata no-op
-            return CommitResult(applied_snap, m["version"], applied=False)
+        replayed = self._replayed(m, batch_id)
+        if replayed is not None:
+            return replayed
         # Without a caller-provided stats_df the SAME ``updates`` plan feeds
         # both the stats/lineage pre-pass and the write job — an expensive
         # upstream (LWW reduce, JSON decode, a join pipeline) would execute
@@ -912,8 +883,8 @@ class SnapshotTable:
             owned_cache = True
         try:
             return self._commit_inner(
-                updates, operation, batch_id, merge, op_col, lsn_col,
-                stats_df, replace, inclusive_guard, m, pre_commit_hook,
+                updates, operation, batch_id, op_col, lsn_col,
+                stats_df, inclusive_guard, m, pre_commit_hook,
             )
         finally:
             if owned_cache:
@@ -924,16 +895,14 @@ class SnapshotTable:
         updates: DataFrame,
         operation: str,
         batch_id: int | None,
-        merge: bool,
         op_col: str,
         lsn_col: str,
         stats_df: DataFrame | None,
-        replace: bool,
         inclusive_guard: bool,
         m: dict[str, Any],
         pre_commit_hook=None,
     ) -> CommitResult:
-
+        merge = operation == "merge"
         key = m["key"]
         existing_schema = T.StructType.fromJson(m["schema"])
 
@@ -950,11 +919,6 @@ class SnapshotTable:
         # value equality, not field count: nested additions and scalar
         # widening evolve the schema without changing the top-level arity
         schema_evolved = merged_schema != existing_schema
-
-        version = m["version"] + 1
-        snapshot_id = f"snap-{version:08d}-b{batch_id if batch_id is not None else 'x'}"
-        snap_rel = _snap_dir_name(version)
-        snap_dir = os.path.join(self.root, snap_rel)
 
         bucket = _bucket_col(key, m)
         payload_schema = T.StructType(
@@ -1004,7 +968,7 @@ class SnapshotTable:
                 key, payload_schema, inclusive_guard=inclusive_guard,
             )
         else:
-            carried = [] if replace else list(m["files"])
+            carried = [] if operation == "replace" else list(m["files"])
             est_rows = batch_stats["n_events"]
             # _lsn must be derived BEFORE the conforming projection — it
             # drops every non-payload column, including the lsn source
@@ -1031,68 +995,106 @@ class SnapshotTable:
         table_rows = sum(f["rows"] for f in m["files"])
         rows_per_file = max(1, -(-max(table_rows, est_rows) // max_parts))
         n_parts = min(max_parts, max(1, -(-est_rows // rows_per_file)))
-        if merge and n_parts == max_parts:
-            # FULL-fan-out merge (the streaming steady state): because the
-            # bucket function IS Spark's hash-partitioning function, a
-            # shuffle on the key into max_parts partitions is already
-            # bucket-aligned (partition p ↔ bucket p mod n_buckets) — the
-            # sort-merge join consumes it AND the write needs no third
-            # shuffle. Saves one full-data exchange per epoch.
-            writer = result.sortWithinPartitions("_bucket", key)
-        else:
+        if not (merge and n_parts == max_parts):
             # small pruned merges / appends: range-partition on
             # (bucket, key) so the few rows stay in few, range-tight files
             # (with files_per_bucket > 1 the sub-files get NON-overlapping
-            # key ranges — what the min/max pruning wants)
-            writer = result.repartitionByRange(
-                n_parts, F.col("_bucket"), F.col(key)
-            ).sortWithinPartitions("_bucket", key)
-        writer.write.mode("overwrite").partitionBy("_bucket").parquet(snap_dir)
-
-        new_files = _list_bucket_files(
-            snap_dir, snap_rel, key, m.get("stats_cols", ())
-        )
-        rows_written = sum(f["rows"] for f in new_files)
+            # key ranges — what the min/max pruning wants). A FULL-fan-out
+            # merge (the streaming steady state) keeps the join's layout:
+            # because the bucket function IS Spark's hash-partitioning
+            # function, the key shuffle into max_parts partitions is already
+            # bucket-aligned (partition p ↔ bucket p mod n_buckets), so the
+            # write needs no third shuffle — one full-data exchange saved
+            # per epoch.
+            result = result.repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
+        new_files = self._write_buckets(result, m)
 
         if pre_commit_hook is not None:
             # barrier: sidecar work overlapped with the write above must be
             # durably committed before THIS table's manifest lands (a
-            # raise here leaves the written snap_dir an unreferenced orphan
+            # raise here leaves the written data dir an unreferenced orphan
             # for expire_snapshots — never a visible snapshot)
             pre_commit_hook()
 
+        res = self._publish(
+            m, f"b{batch_id if batch_id is not None else 'x'}",
+            operation + ("+evolve" if schema_evolved else ""),
+            batch_id=batch_id, lineage=lineage_rows,
+            schema=json.loads(merged_schema.json()), files=carried + new_files,
+        )
+        return dataclasses.replace(
+            res,
+            n_events=batch_stats["n_events"],
+            max_event_ts=batch_stats["max_event_ts"],
+            max_lsn=batch_stats["max_lsn"],
+        )
+
+    def _write_buckets(
+        self, df: DataFrame, m: dict[str, Any], sort_by: str | None = None
+    ) -> list[dict[str, Any]]:
+        """The one data write of every commit: ``df`` — ``_bucket``-tagged
+        and already partitioned by the caller, which owns only that choice
+        — lands as the next version's files, one ``_bucket=`` dir per
+        bucket, each task's rows sorted by ``(_bucket, sort_by)`` (default:
+        the key). Returns the new files' manifest entries, read off their
+        footers."""
+        key = m["key"]
+        snap_rel = _snap_dir_name(m["version"] + 1)
+        snap_dir = os.path.join(self.root, snap_rel)
+        (
+            df.sortWithinPartitions("_bucket", sort_by or key)
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(snap_dir)
+        )
+        return _list_bucket_files(snap_dir, snap_rel, key, m.get("stats_cols", ()))
+
+    def _publish(
+        self,
+        m: dict[str, Any],
+        tag: str,
+        operation: str,
+        batch_id: int | None = None,
+        lineage: list[dict[str, Any]] | None = None,
+        **changes: Any,
+    ) -> CommitResult:
+        """The one publish step of every commit after ``create``: the
+        successor of manifest ``m`` — ``changes`` applied, snapshot id
+        ``snap-{version}-{tag}``, the ledger advanced by ``batch_id`` (None
+        carries it unchanged) and THIS commit's ``lineage`` rows — goes
+        through the CAS in :meth:`_write_manifest`. ``rows_written`` counts
+        the rows of the files the new manifest adds."""
+        version = m["version"] + 1
+        snapshot_id = f"snap-{version:08d}-{tag}"
         ledger, pre_versions, evicted_below = self._advance_ledger(
             m, batch_id, snapshot_id
         )
         manifest = {
+            **m,
             "version": version,
             "snapshot_id": snapshot_id,
             "parent": m["snapshot_id"],
-            "operation": operation + ("+evolve" if schema_evolved else ""),
-            "key": key,
-            "n_buckets": m["n_buckets"],
-            "files_per_bucket": m.get("files_per_bucket", 1),
-            "bucket_hash": m["bucket_hash"],
-            "stats_cols": m.get("stats_cols", []),
-            "schema": json.loads(merged_schema.json()),
-            "files": carried + new_files,
+            "operation": operation,
             "ledger": ledger,
             "ledger_pre_versions": pre_versions,
             "ledger_evicted_below": evicted_below,
             "ts": time.time(),
+            **changes,
         }
-        self._write_manifest(manifest, expected_parent_version=m["version"], lineage=lineage_rows)
+        self._write_manifest(manifest, expected_parent_version=m["version"], lineage=lineage)
+        old = {f["path"] for f in m["files"]}
         return CommitResult(
-            snapshot_id,
-            version,
-            applied=True,
-            rows_written=rows_written,
-            n_events=batch_stats["n_events"],
-            max_event_ts=batch_stats["max_event_ts"],
-            max_lsn=batch_stats.get("max_lsn"),
+            snapshot_id, version, applied=True,
+            rows_written=sum(f["rows"] for f in manifest["files"] if f["path"] not in old),
         )
 
     # ------------------------------------------------------------- ledger
+    def _replayed(self, m: dict[str, Any], batch_id: int | None) -> CommitResult | None:
+        """Exactly-once: the metadata no-op result of an epoch the ledger
+        already holds, else None."""
+        snap = self._ledger_lookup(m, batch_id)
+        return None if snap is None else CommitResult(snap, m["version"], applied=False)
+
     def _ledger_lookup(self, m: dict[str, Any], batch_id: int | None) -> str | None:
         if batch_id is None:
             return None
@@ -1294,36 +1296,13 @@ class SnapshotTable:
         df = self._read_file_entries(m["files"], schema).withColumn(
             "_bucket", _bucket_col(key, {**m, "n_buckets": n_buckets})
         )
-        version = m["version"] + 1
-        snap_rel = _snap_dir_name(version)
-        snap_dir = os.path.join(self.root, snap_rel)
-        (
-            df.repartitionByRange(
-                max(n_buckets * fpb, 1), F.col("_bucket"), F.col(key)
-            )
-            .sortWithinPartitions("_bucket", key)
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(snap_dir)
+        new_files = self._write_buckets(
+            df.repartitionByRange(max(n_buckets * fpb, 1), F.col("_bucket"), F.col(key)),
+            m,
         )
-        new_files = _list_bucket_files(
-            snap_dir, snap_rel, key, m.get("stats_cols", ())
-        )
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": f"snap-{version:08d}-rebucket",
-            "parent": m["snapshot_id"],
-            "operation": f"rebucket({m['n_buckets']}->{n_buckets})",
-            "n_buckets": n_buckets,
-            "files_per_bucket": fpb,
-            "files": new_files,
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(
-            manifest["snapshot_id"], version, applied=True,
-            rows_written=sum(f["rows"] for f in new_files),
+        return self._publish(
+            m, "rebucket", f"rebucket({m['n_buckets']}->{n_buckets})",
+            n_buckets=n_buckets, files_per_bucket=fpb, files=new_files,
         )
 
     def set_stats_cols(self, cols: list[str]) -> CommitResult:
@@ -1334,18 +1313,7 @@ class SnapshotTable:
         m = self.manifest()
         if list(cols) == m.get("stats_cols", []):
             return CommitResult(m["snapshot_id"], m["version"], applied=False)
-        version = m["version"] + 1
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": f"snap-{version:08d}-stats",
-            "parent": m["snapshot_id"],
-            "operation": "set_stats_cols",
-            "stats_cols": list(cols),
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(manifest["snapshot_id"], version, applied=True)
+        return self._publish(m, "stats", "set_stats_cols", stats_cols=list(cols))
 
     def compact_files(
         self,
@@ -1397,41 +1365,14 @@ class SnapshotTable:
         df = self._read_file_entries(victim_entries, schema).withColumn(
             "_bucket", _bucket_col(key, m)
         )
-        version = m["version"] + 1
-        snap_rel = _snap_dir_name(version)
-        snap_dir = os.path.join(self.root, snap_rel)
-        (
-            # fan out to the EFFECTIVE threshold (the override, when given)
-            # so a caller-requested tighter file count actually converges
-            df.repartitionByRange(
-                max(len(victims) * fpb, 1),
-                F.col("_bucket"),
-                F.col(cluster_by if cluster_by is not None else key),
-            )
-            .sortWithinPartitions(
-                "_bucket", cluster_by if cluster_by is not None else key
-            )
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(snap_dir)
+        order = cluster_by if cluster_by is not None else key
+        # fan out to the EFFECTIVE threshold (the override, when given)
+        # so a caller-requested tighter file count actually converges
+        new_files = self._write_buckets(
+            df.repartitionByRange(max(len(victims) * fpb, 1), F.col("_bucket"), F.col(order)),
+            m, sort_by=order,
         )
-        new_files = _list_bucket_files(
-            snap_dir, snap_rel, key, m.get("stats_cols", ())
-        )
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": f"snap-{version:08d}-compact",
-            "parent": m["snapshot_id"],
-            "operation": "compact_files",
-            "files": carried + new_files,
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(
-            manifest["snapshot_id"], version, applied=True,
-            rows_written=sum(f["rows"] for f in new_files),
-        )
+        return self._publish(m, "compact", "compact_files", files=carried + new_files)
 
     def vacuum_tombstones(self, older_than_lsn: int) -> CommitResult:
         """Drop delete tombstones whose LSN is at or below a watermark the
@@ -1598,9 +1539,9 @@ class SnapshotTable:
         from urllib.parse import urlparse
 
         m = self.manifest()
-        applied_snap = self._ledger_lookup(m, batch_id)
-        if applied_snap is not None:
-            return CommitResult(applied_snap, m["version"], applied=False)
+        replayed = self._replayed(m, batch_id)
+        if replayed is not None:
+            return replayed
         key = m["key"]
         schema = T.StructType.fromJson(m["schema"])
         if prune_range is not None:
@@ -1659,42 +1600,16 @@ class SnapshotTable:
         touched_paths = {f["path"] for f in touched}
         carried = [f for f in m["files"] if f["path"] not in touched_paths]
 
-        version = m["version"] + 1
-        snapshot_id = f"snap-{version:08d}-{operation}"
-        snap_rel = _snap_dir_name(version)
-        snap_dir = os.path.join(self.root, snap_rel)
         out = transform(self._read_file_entries(touched, schema), match)
         n_parts = max(len(touched), 1)  # preserve the rewritten files' fan-out
-        (
-            out.withColumn("_bucket", _bucket_col(key, m))
-            .repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
-            .sortWithinPartitions("_bucket", key)
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(snap_dir)
+        new_files = self._write_buckets(
+            out.withColumn("_bucket", _bucket_col(key, m)).repartitionByRange(
+                n_parts, F.col("_bucket"), F.col(key)
+            ),
+            m,
         )
-        new_files = _list_bucket_files(
-            snap_dir, snap_rel, key, m.get("stats_cols", ())
-        )
-        ledger, pre_versions, evicted_below = self._advance_ledger(
-            m, batch_id, snapshot_id
-        )
-        manifest = {
-            **m,
-            "version": version,
-            "snapshot_id": snapshot_id,
-            "parent": m["snapshot_id"],
-            "operation": operation,
-            "files": carried + new_files,
-            "ledger": ledger,
-            "ledger_pre_versions": pre_versions,
-            "ledger_evicted_below": evicted_below,
-            "ts": time.time(),
-        }
-        self._write_manifest(manifest, expected_parent_version=m["version"])
-        return CommitResult(
-            snapshot_id, version, applied=True,
-            rows_written=sum(f["rows"] for f in new_files),
+        return self._publish(
+            m, operation, operation, batch_id=batch_id, files=carried + new_files
         )
 
     # ----------------------------------------------------------------- clone

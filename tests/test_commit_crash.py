@@ -1,7 +1,9 @@
-"""A crash at each boundary inside a merge, then a replay of the same
-epoch through a fresh handle: state, ledger and lineage all end
-exactly-once, and the table never wedges — nor does one whose create or
-clone died before its first ``VERSION`` hint."""
+"""A crash at each boundary inside a merge — and inside a compaction and
+a ledgered DML commit, which share its write and publish steps — then a
+replay through a fresh handle: state, ledger and lineage all end
+exactly-once, every version is published once, and the table never
+wedges — nor does one whose create or clone died before its first
+``VERSION`` hint."""
 
 from __future__ import annotations
 
@@ -76,12 +78,24 @@ def _arm(point: str, table: SnapshotTable, monkeypatch) -> dict:
     return {}
 
 
+MERGE_POINTS = ["after_profile", "after_write", "in_hook", "torn_temp_manifest",
+                "after_link", "after_hint"]
+# commits that share the merge's bucketed write and manifest publish
+REWRITES = {
+    "compact_files": lambda t: t.compact_files(cluster_by="n_tok"),
+    "delete_where": lambda t: t.delete_where("n_tok % 2 = 0", batch_id=2),
+}
+
+
 @pytest.mark.parametrize(
-    "point",
-    ["after_profile", "after_write", "in_hook", "torn_temp_manifest",
-     "after_link", "after_hint"],
+    "op,point",
+    [pytest.param("merge", p, id=p) for p in MERGE_POINTS]
+    + [pytest.param(op, p, id=f"{op}-{p}")
+       for op in REWRITES for p in ("after_write", "after_link")],
 )
-def test_crash_inside_merge_then_replay(spark, tmp_path, changelog_pdf, monkeypatch, point):
+def test_crash_inside_merge_then_replay(
+    spark, tmp_path, changelog_pdf, monkeypatch, op, point
+):
     files = sorted(changelog_pdf["source_file"].unique())
     # epochs split by source file, so each file belongs to exactly one epoch
     epochs = [
@@ -96,20 +110,38 @@ def test_crash_inside_merge_then_replay(spark, tmp_path, changelog_pdf, monkeypa
         return t.merge(reduce_latest(raw), batch_id=batch_id, stats_df=raw, **kwargs)
 
     merge(table, 0)
+    if op == "merge":
+        def commit(t, **kwargs):
+            return merge(t, 1, **kwargs)
+    else:
+        merge(table, 1)
+
+        def commit(t, **kwargs):
+            return REWRITES[op](t)
     kwargs = _arm(point, table, monkeypatch)
     with pytest.raises(Crash):
-        merge(table, 1, **kwargs)
+        commit(table, **kwargs)
     monkeypatch.undo()
 
     # the replay: no ConcurrentCommitError; a crash after the manifest
-    # link is a committed epoch, so its replay is a ledger no-op
-    res = merge(SnapshotTable(spark, root), 1)
-    assert res.applied == (point not in ("after_link", "after_hint"))
+    # link is a committed epoch, so a ledgered replay is a no-op (a
+    # compaction has no ledger slot and rewrites again)
+    committed = point in ("after_link", "after_hint")
+    res = commit(SnapshotTable(spark, root))
+    assert res.applied == (op == "compact_files" or not committed)
 
     fresh = SnapshotTable(spark, root)
+    expected = expected_final_state_pandas(changelog_pdf)
+    if op == "delete_where":
+        expected = expected[expected["n_tok"] % 2 != 0]
     actual = fresh.read().selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn")
-    assert_final_state_equal(actual.toPandas(), expected_final_state_pandas(changelog_pdf))
+    assert_final_state_equal(actual.toPandas(), expected)
     assert sorted(r["source_file"] for r in fresh.lineage()) == files
+    # every version was published once, on top of its parent
+    snaps = [fresh.manifest(v) for v in range(fresh.current_version() + 1)]
+    assert [m["version"] for m in snaps] == list(range(len(snaps)))
+    assert len(snaps) == 3 + (op != "merge") + (op == "compact_files" and committed)
+    assert all(b["parent"] == a["snapshot_id"] for a, b in zip(snaps, snaps[1:]))
 
 
 def test_crash_before_first_hint(spark, tmp_path, changelog_pdf, monkeypatch):

@@ -121,10 +121,12 @@ def test_requires_batch_id_and_tables(spark, tmp_path):
 
 
 def test_streams_through_tailer(spark, tmp_path):
-    """The duck-typed MultiCommitResult satisfies the tailer's metrics
-    row; a two-file stream lands both tables correctly."""
+    """The multi-table CommitResult satisfies the tailer's metrics row and
+    its maintenance watermark (the epoch's max LSN over the tables); a
+    two-file stream lands both tables correctly."""
     import os
 
+    from data_hub_ejp_xml_pipeline_spark.plans.maintenance import MaintenancePolicy
     from data_hub_ejp_xml_pipeline_spark.streaming.tailer import ChangelogTailer
 
     import pyarrow as pa
@@ -139,7 +141,8 @@ def test_streams_through_tailer(spark, tmp_path):
     root = str(tmp_path / "mt")
     p = MultiTablePipeline(spark, root, SCHEMAS, keys=KEYS, n_buckets=2)
     tailer = ChangelogTailer(
-        spark, pipeline=p, metrics_path=str(tmp_path / "metrics.jsonl")
+        spark, pipeline=p, metrics_path=str(tmp_path / "metrics.jsonl"),
+        maintenance=MaintenancePolicy(p.pipes["orders"].table), maintenance_every=1,
     )
     tailer.run_to_completion(
         chg, str(tmp_path / "ckpt"),
@@ -149,3 +152,4 @@ def test_streams_through_tailer(spark, tmp_path):
     assert _orders(p) == {("o1", 25), ("o2", 7)}
     assert _users(p) == set()
     assert len(tailer.metrics) >= 1
+    assert all("maintenance" in row for row in tailer.metrics)

@@ -563,3 +563,43 @@ def test_metadata_tables_history_and_files(spark, tmp_path, changelog_pdf):
     # time travel: an older snapshot's inventory is reachable too
     v0 = hist[0].version
     assert table.files_df(version=v0).count() >= 0
+
+
+def test_every_commit_publishes_the_create_manifest_shape(spark, tmp_path, changelog_pdf):
+    """Every commit kind after ``create`` goes through the one publish
+    step: each manifest has exactly the key set ``create`` publishes, and
+    the snapshot id and operation strings keep their on-disk format."""
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "shape"), PAYLOAD_SCHEMA, n_buckets=2
+    )
+    keys = set(table.manifest())
+    batch = reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:800]))
+    steps = [
+        (lambda: table.merge(batch, batch_id=0), "b0", "merge"),
+        (lambda: table.merge(batch.withColumn("extra", F.lit(1)), batch_id=1),
+         "b1", "merge+evolve"),
+        (lambda: table.append(batch.filter("op != 'D'")), "bx", "append"),
+        (lambda: table.delete_where("n_tok % 2 = 0", batch_id=2),
+         "delete_where", "delete_where"),
+        (lambda: table.delete_where("n_tok % 3 = 0", hard=True),
+         "delete_where_hard", "delete_where_hard"),
+        (lambda: table.update_where("n_tok % 5 = 0", {"source": "fixed"}),
+         "update_where", "update_where"),
+        (lambda: table.vacuum_tombstones(older_than_lsn=10**12),
+         "vacuum_tombstones", "vacuum_tombstones"),
+        (lambda: table.compact_files(cluster_by="n_tok"), "compact", "compact_files"),
+        (lambda: table.rebucket(4), "rebucket", "rebucket(2->4)"),
+        (lambda: table.set_stats_cols(["n_tok"]), "stats", "set_stats_cols"),
+        (lambda: table.add_columns(T.StructType([T.StructField("note", T.StringType())])),
+         "addcols", "add_columns"),
+        (lambda: table.truncate(), "truncate", "truncate"),
+        (lambda: table.replace(batch.filter("op != 'D'"), batch_id=3), "b3", "replace"),
+    ]
+    for version, (commit, tag, operation) in enumerate(steps, start=1):
+        res = commit()
+        m = table.manifest()
+        assert res.applied and res.version == m["version"] == version, operation
+        assert (res.snapshot_id, m["snapshot_id"], m["operation"]) == (
+            f"snap-{version:08d}-{tag}", f"snap-{version:08d}-{tag}", operation
+        )
+        assert set(m) == keys, (operation, set(m) ^ keys)
