@@ -15,7 +15,9 @@ loop; watermark state at ``etl_state.py:26-76``) with one streaming query:
   byte-identical table state;
 * per-batch **metrics** (events applied, events/sec, lag) mirror the
   reference's log counters (``etl.py:174-176``,
-  ``ejp_person_xml.py:239-255``) as structured rows.
+  ``ejp_person_xml.py:239-255``) as structured rows, each with the
+  commit's own record (``CommitResult.record``: phase times, files,
+  rows and bytes written and carried) under ``"commit"``.
 """
 
 from __future__ import annotations
@@ -94,6 +96,11 @@ class ChangelogTailer:
             "lag_sec": (time.time() - result.max_event_ts.timestamp())
             if result.max_event_ts
             else None,
+            # the engine's commit record (phase times, files/rows/bytes),
+            # keyed by table for a multi-table epoch
+            "commit": {t: r.record for t, r in result.per_table.items()}
+            if result.per_table is not None
+            else result.record,
         }
         dlq = getattr(self.pipeline, "dlq_state", None)
         if dlq is not None:

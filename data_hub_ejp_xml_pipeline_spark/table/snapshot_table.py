@@ -51,6 +51,23 @@ Design for 100 TB:
   ranges (for the file pruning) and batch stats all come out of a single
   ``GROUPING SETS ((source_file), (_bucket))`` aggregation over a narrow
   projection — one extra Spark job per epoch, not three.
+* **Commit record.** Every applied commit times itself and returns the
+  account in ``CommitResult.record``, one flat dict that is never
+  persisted. A data commit (merge, append, replace) has contiguous
+  phases that sum to its wall time: ``prepass_s`` (:meth:`_batch_profile`),
+  ``plan_s`` (the driver-side rest before the write: manifest read,
+  ledger check, schema evolution, file pruning, plan building),
+  ``write_s`` (the parquet write job, which runs the reduce and join)
+  and ``footers_s`` (footer reads of the new files), both timed in
+  :meth:`_write_buckets`, ``hook_s`` (the pre-commit barrier) and
+  ``commit_s`` (:meth:`_publish`); plus ``files_read``,
+  ``files_carried``, ``files_written``, ``rows_carried`` and
+  ``bytes_written``. A rewrite (DML, compaction, rebucket) carries the
+  keys of :meth:`_write_buckets` and :meth:`_publish`, a metadata-only
+  commit ``commit_s``, a replayed or empty batch nothing. The counts
+  come from the pre-pass, the manifests and one ``stat`` per new file:
+  no Spark job. ``ChangelogTailer`` writes the record into each
+  ``metrics.jsonl`` row.
 """
 
 from __future__ import annotations
@@ -113,6 +130,10 @@ class CommitResult:
     # the events routed to no declared table
     per_table: dict[str, "CommitResult"] | None = None
     unrouted: int = 0
+    # the engine's own account of THIS commit — phase wall times (``*_s``)
+    # and file/row/byte counts; never persisted. Empty for replayed and
+    # empty batches. See the module docstring ("Commit record").
+    record: dict[str, Any] = dataclasses.field(default_factory=dict)
 
 
 class SnapshotTable:
@@ -298,43 +319,12 @@ class SnapshotTable:
         removed between the versions are read. Returns
         ``(key..., _change_type, _from_lsn, _to_lsn)`` plus the to-side
         payload columns (from-side payload for deletes)."""
-        m_from = self.manifest(from_version)
-        m_to = self.manifest(to_version)
-        key = m_to["key"]
-        from_paths = {f["path"] for f in m_from["files"]}
-        to_paths = {f["path"] for f in m_to["files"]}
-        only_from = [f for f in m_from["files"] if f["path"] not in to_paths]
-        only_to = [f for f in m_to["files"] if f["path"] not in from_paths]
-        schema_from = T.StructType.fromJson(m_from["schema"])
-        schema_to = T.StructType.fromJson(m_to["schema"])
-        a = self._read_file_entries(only_from, schema_from)
-        b = self._read_file_entries(only_to, schema_to)
-        payload_cols = [
-            f.name for f in schema_to.fields if f.name not in INTERNAL_COLS
-        ]
-        live = lambda df: df.filter(  # noqa: E731
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        )
-        j = live(a).alias("a").join(
-            live(b).alias("b"),
-            on=F.col(f"a.{key}") == F.col(f"b.{key}"),
-            how="full_outer",
-        )
+        j, key, _, out_cols = self._changed_rows_join(from_version, to_version, True)
         change = (
             F.when(F.col(f"a.{key}").isNull(), F.lit("insert"))
             .when(F.col(f"b.{key}").isNull(), F.lit("delete"))
             .when(F.col(f"a.{LSN_COL}") != F.col(f"b.{LSN_COL}"), F.lit("update"))
         )
-        # pick the to-side row WHOLESALE when it exists (per-column coalesce
-        # would resurrect a stale value for an update that legitimately sets
-        # a column to NULL); from-side only for deletes
-        b_exists = F.col(f"b.{key}").isNotNull()
-        out_cols = [
-            F.when(b_exists, F.col(f"b.{c}") if c in b.columns else F.lit(None))
-            .otherwise(F.col(f"a.{c}") if c in a.columns else F.lit(None))
-            .alias(c)
-            for c in payload_cols
-        ]
         return (
             j.select(
                 *out_cols,
@@ -344,6 +334,48 @@ class SnapshotTable:
             )
             .filter(F.col("_change_type").isNotNull())
         )
+
+    def _changed_rows_join(
+        self, from_version: int, to_version: int | None, live_only: bool
+    ) -> tuple[DataFrame, str, dict[str, Column], list[Column]]:
+        """The pruned core of :meth:`diff` and :meth:`changelog_between`:
+        files carried UNCHANGED between the two manifests (same path)
+        cancel out, so only the files one side alone holds are read — as
+        ``a`` (from) and ``b`` (to), tombstones dropped first when
+        ``live_only`` — and full-outer-joined on the key. Returns
+        ``(joined, key, a_side, out_cols)``: ``a_side`` maps each to-side
+        payload column to its from-side value (NULL where the older schema
+        lacks it); ``out_cols`` projects the to-side row WHOLESALE when it
+        exists — a per-column coalesce would resurrect a stale value for
+        an update that sets a column to NULL — else the from-side row."""
+        m_from = self.manifest(from_version)
+        m_to = self.manifest(to_version)
+        key = m_to["key"]
+        from_paths = {f["path"] for f in m_from["files"]}
+        to_paths = {f["path"] for f in m_to["files"]}
+        only_from = [f for f in m_from["files"] if f["path"] not in to_paths]
+        only_to = [f for f in m_to["files"] if f["path"] not in from_paths]
+        schema_to = T.StructType.fromJson(m_to["schema"])
+        a = self._read_file_entries(only_from, T.StructType.fromJson(m_from["schema"]))
+        b = self._read_file_entries(only_to, schema_to)
+        if live_only:
+            a, b = (df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))) for df in (a, b))
+        j = a.alias("a").join(
+            b.alias("b"),
+            on=F.col(f"a.{key}") == F.col(f"b.{key}"),
+            how="full_outer",
+        )
+        a_side = {
+            f.name: F.col(f"a.{f.name}") if f.name in a.columns else F.lit(None)
+            for f in schema_to.fields
+            if f.name not in INTERNAL_COLS
+        }
+        b_exists = F.col(f"b.{key}").isNotNull()
+        out_cols = [
+            F.when(b_exists, F.col(f"b.{c}")).otherwise(ac).alias(c)
+            for c, ac in a_side.items()
+        ]
+        return j, key, a_side, out_cols
 
     def snapshots(self) -> list[dict[str, Any]]:
         return [
@@ -603,29 +635,7 @@ class SnapshotTable:
         replay protection. For pure WAL-fed tables nothing changes: rows
         whose LSN and content did not move are not emitted, and applying
         the same feed twice through the strict guard stays a no-op."""
-        m_from = self.manifest(from_version)
-        m_to = self.manifest(to_version)
-        key = m_to["key"]
-        from_paths = {f["path"] for f in m_from["files"]}
-        to_paths = {f["path"] for f in m_to["files"]}
-        only_from = [f for f in m_from["files"] if f["path"] not in to_paths]
-        only_to = [f for f in m_to["files"] if f["path"] not in from_paths]
-        a = self._read_file_entries(
-            only_from, T.StructType.fromJson(m_from["schema"])
-        )
-        b = self._read_file_entries(
-            only_to, T.StructType.fromJson(m_to["schema"])
-        )
-        payload_cols = [
-            f.name
-            for f in T.StructType.fromJson(m_to["schema"]).fields
-            if f.name not in INTERNAL_COLS
-        ]
-        j = a.alias("a").join(
-            b.alias("b"),
-            on=F.col(f"a.{key}") == F.col(f"b.{key}"),
-            how="full_outer",
-        )
+        j, key, a_side, out_cols = self._changed_rows_join(from_version, to_version, False)
         a_exists = F.col(f"a.{key}").isNotNull()
         b_exists = F.col(f"b.{key}").isNotNull()
         b_deleted = F.coalesce(F.col(f"b.{DELETED_COL}"), F.lit(False))
@@ -646,8 +656,7 @@ class SnapshotTable:
         # missing columns read as NULL — schema evolution): catches
         # update_where, which rewrites values at an unchanged LSN
         same_content = F.lit(True)
-        for c in payload_cols:
-            ac = F.col(f"a.{c}") if c in a.columns else F.lit(None)
+        for c, ac in a_side.items():
             same_content = same_content & ac.eqNullSafe(F.col(f"b.{c}"))
         changed = (
             (~a_exists)
@@ -656,12 +665,6 @@ class SnapshotTable:
             | (a_deleted != b_deleted)
             | ~same_content
         )
-        out_cols = [
-            F.when(b_exists, F.col(f"b.{c}") if c in b.columns else F.lit(None))
-            .otherwise(F.col(f"a.{c}") if c in a.columns else F.lit(None))
-            .alias(c)
-            for c in payload_cols
-        ]
         return j.filter(changed).select(
             *out_cols, op.alias("op"), lsn.cast("long").alias("lsn")
         )
@@ -864,6 +867,7 @@ class SnapshotTable:
     ) -> CommitResult:
         """The data commits: ``operation`` is ``merge``, ``append`` or
         ``replace``."""
+        t0 = time.perf_counter()  # plan_s starts here: manifest read, ledger check
         m = self.manifest()
         replayed = self._replayed(m, batch_id)
         if replayed is not None:
@@ -884,7 +888,7 @@ class SnapshotTable:
         try:
             return self._commit_inner(
                 updates, operation, batch_id, op_col, lsn_col,
-                stats_df, inclusive_guard, m, pre_commit_hook,
+                stats_df, inclusive_guard, m, pre_commit_hook, t0,
             )
         finally:
             if owned_cache:
@@ -900,7 +904,8 @@ class SnapshotTable:
         stats_df: DataFrame | None,
         inclusive_guard: bool,
         m: dict[str, Any],
-        pre_commit_hook=None,
+        pre_commit_hook,
+        t0: float,
     ) -> CommitResult:
         merge = operation == "merge"
         key = m["key"]
@@ -935,7 +940,9 @@ class SnapshotTable:
         stats_src = (
             stats_df.withColumn("_bucket", bucket) if stats_df is not None else src
         )
+        t_prepass = time.perf_counter()
         lineage_rows, bucket_ranges, batch_stats = self._batch_profile(stats_src, key)
+        t_plan = time.perf_counter()
         if batch_stats["n_events"] == 0:
             # empty batch (reference F4): no data files, no new snapshot, no
             # ledger advance, no count toward a MOR compaction trigger
@@ -968,6 +975,7 @@ class SnapshotTable:
                 key, payload_schema, inclusive_guard=inclusive_guard,
             )
         else:
+            touched_entries = []
             carried = [] if operation == "replace" else list(m["files"])
             est_rows = batch_stats["n_events"]
             # _lsn must be derived BEFORE the conforming projection — it
@@ -1007,19 +1015,29 @@ class SnapshotTable:
             # write needs no third shuffle — one full-data exchange saved
             # per epoch.
             result = result.repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
-        new_files = self._write_buckets(result, m)
+        t_write = time.perf_counter()
+        new_files, written = self._write_buckets(result, m)
 
+        t_hook = time.perf_counter()
         if pre_commit_hook is not None:
             # barrier: sidecar work overlapped with the write above must be
             # durably committed before THIS table's manifest lands (a
             # raise here leaves the written data dir an unreferenced orphan
             # for expire_snapshots — never a visible snapshot)
             pre_commit_hook()
-
+        record = {
+            "prepass_s": t_plan - t_prepass,
+            "plan_s": (t_prepass - t0) + (t_write - t_plan),
+            **written,
+            "hook_s": time.perf_counter() - t_hook,
+            "files_read": len(touched_entries),
+            "files_carried": len(carried),
+            "rows_carried": sum(f["rows"] for f in carried),
+        }
         res = self._publish(
             m, f"b{batch_id if batch_id is not None else 'x'}",
             operation + ("+evolve" if schema_evolved else ""),
-            batch_id=batch_id, lineage=lineage_rows,
+            batch_id=batch_id, lineage=lineage_rows, record=record,
             schema=json.loads(merged_schema.json()), files=carried + new_files,
         )
         return dataclasses.replace(
@@ -1031,13 +1049,16 @@ class SnapshotTable:
 
     def _write_buckets(
         self, df: DataFrame, m: dict[str, Any], sort_by: str | None = None
-    ) -> list[dict[str, Any]]:
+    ) -> tuple[list[dict[str, Any]], dict[str, Any]]:
         """The one data write of every commit: ``df`` — ``_bucket``-tagged
         and already partitioned by the caller, which owns only that choice
         — lands as the next version's files, one ``_bucket=`` dir per
         bucket, each task's rows sorted by ``(_bucket, sort_by)`` (default:
         the key). Returns the new files' manifest entries, read off their
-        footers."""
+        footers, and the write's record: ``write_s`` (the parquet write
+        job), ``footers_s`` (footer reads + one ``stat`` per new file),
+        ``files_written`` and ``bytes_written``."""
+        t0 = time.perf_counter()
         key = m["key"]
         snap_rel = _snap_dir_name(m["version"] + 1)
         snap_dir = os.path.join(self.root, snap_rel)
@@ -1047,7 +1068,15 @@ class SnapshotTable:
             .partitionBy("_bucket")
             .parquet(snap_dir)
         )
-        return _list_bucket_files(snap_dir, snap_rel, key, m.get("stats_cols", ()))
+        t1 = time.perf_counter()
+        files = _list_bucket_files(snap_dir, snap_rel, key, m.get("stats_cols", ()))
+        nbytes = sum(os.path.getsize(os.path.join(self.root, f["path"])) for f in files)
+        return files, {
+            "write_s": t1 - t0,
+            "footers_s": time.perf_counter() - t1,
+            "files_written": len(files),
+            "bytes_written": nbytes,
+        }
 
     def _publish(
         self,
@@ -1056,6 +1085,7 @@ class SnapshotTable:
         operation: str,
         batch_id: int | None = None,
         lineage: list[dict[str, Any]] | None = None,
+        record: dict[str, Any] | None = None,
         **changes: Any,
     ) -> CommitResult:
         """The one publish step of every commit after ``create``: the
@@ -1063,7 +1093,9 @@ class SnapshotTable:
         ``snap-{version}-{tag}``, the ledger advanced by ``batch_id`` (None
         carries it unchanged) and THIS commit's ``lineage`` rows — goes
         through the CAS in :meth:`_write_manifest`. ``rows_written`` counts
-        the rows of the files the new manifest adds."""
+        the rows of the files the new manifest adds; the result's record is
+        the caller's ``record`` plus this step's ``commit_s``."""
+        t0 = time.perf_counter()
         version = m["version"] + 1
         snapshot_id = f"snap-{version:08d}-{tag}"
         ledger, pre_versions, evicted_below = self._advance_ledger(
@@ -1086,6 +1118,7 @@ class SnapshotTable:
         return CommitResult(
             snapshot_id, version, applied=True,
             rows_written=sum(f["rows"] for f in manifest["files"] if f["path"] not in old),
+            record={**(record or {}), "commit_s": time.perf_counter() - t0},
         )
 
     # ------------------------------------------------------------- ledger
@@ -1296,12 +1329,12 @@ class SnapshotTable:
         df = self._read_file_entries(m["files"], schema).withColumn(
             "_bucket", _bucket_col(key, {**m, "n_buckets": n_buckets})
         )
-        new_files = self._write_buckets(
+        new_files, written = self._write_buckets(
             df.repartitionByRange(max(n_buckets * fpb, 1), F.col("_bucket"), F.col(key)),
             m,
         )
         return self._publish(
-            m, "rebucket", f"rebucket({m['n_buckets']}->{n_buckets})",
+            m, "rebucket", f"rebucket({m['n_buckets']}->{n_buckets})", record=written,
             n_buckets=n_buckets, files_per_bucket=fpb, files=new_files,
         )
 
@@ -1368,11 +1401,13 @@ class SnapshotTable:
         order = cluster_by if cluster_by is not None else key
         # fan out to the EFFECTIVE threshold (the override, when given)
         # so a caller-requested tighter file count actually converges
-        new_files = self._write_buckets(
+        new_files, written = self._write_buckets(
             df.repartitionByRange(max(len(victims) * fpb, 1), F.col("_bucket"), F.col(order)),
             m, sort_by=order,
         )
-        return self._publish(m, "compact", "compact_files", files=carried + new_files)
+        return self._publish(
+            m, "compact", "compact_files", record=written, files=carried + new_files
+        )
 
     def vacuum_tombstones(self, older_than_lsn: int) -> CommitResult:
         """Drop delete tombstones whose LSN is at or below a watermark the
@@ -1602,14 +1637,15 @@ class SnapshotTable:
 
         out = transform(self._read_file_entries(touched, schema), match)
         n_parts = max(len(touched), 1)  # preserve the rewritten files' fan-out
-        new_files = self._write_buckets(
+        new_files, written = self._write_buckets(
             out.withColumn("_bucket", _bucket_col(key, m)).repartitionByRange(
                 n_parts, F.col("_bucket"), F.col(key)
             ),
             m,
         )
         return self._publish(
-            m, operation, operation, batch_id=batch_id, files=carried + new_files
+            m, operation, operation, batch_id=batch_id, record=written,
+            files=carried + new_files,
         )
 
     # ----------------------------------------------------------------- clone

@@ -153,3 +153,19 @@ def test_streams_through_tailer(spark, tmp_path):
     assert _users(p) == set()
     assert len(tailer.metrics) >= 1
     assert all("maintenance" in row for row in tailer.metrics)
+    # metrics.jsonl: one row per epoch, the engine's record keyed by table
+    with open(tmp_path / "metrics.jsonl") as fh:
+        rows = [json.loads(line) for line in fh]
+    assert len(rows) == len(tailer.metrics)
+    for row in rows:
+        assert set(row) == {
+            "batch_id", "snapshot_id", "applied", "events_applied", "events_sec",
+            "lag_sec", "commit", "maintenance",
+        }
+        assert set(row["commit"]) == {"users", "orders"}
+        for record in row["commit"].values():
+            assert set(record) == {
+                "prepass_s", "plan_s", "write_s", "footers_s", "hook_s", "commit_s",
+                "files_read", "files_carried", "files_written", "rows_carried",
+                "bytes_written",
+            }

@@ -565,37 +565,51 @@ def test_metadata_tables_history_and_files(spark, tmp_path, changelog_pdf):
     assert table.files_df(version=v0).count() >= 0
 
 
+# CommitResult.record keys per commit kind: a data commit (merge, append,
+# replace) times every phase; a rewrite (DML, compaction, rebucket) carries
+# its write and publish; a metadata-only commit its publish
+PUBLISH_RECORD = {"commit_s"}
+WRITE_RECORD = PUBLISH_RECORD | {"write_s", "footers_s", "files_written", "bytes_written"}
+DATA_RECORD = WRITE_RECORD | {
+    "prepass_s", "plan_s", "hook_s", "files_read", "files_carried", "rows_carried"
+}
+
+
 def test_every_commit_publishes_the_create_manifest_shape(spark, tmp_path, changelog_pdf):
     """Every commit kind after ``create`` goes through the one publish
     step: each manifest has exactly the key set ``create`` publishes, and
-    the snapshot id and operation strings keep their on-disk format."""
+    the snapshot id and operation strings keep their on-disk format. Each
+    result's record has exactly its kind's keys and is never persisted."""
     table = SnapshotTable.create(
         spark, str(tmp_path / "shape"), PAYLOAD_SCHEMA, n_buckets=2
     )
     keys = set(table.manifest())
     batch = reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:800]))
     steps = [
-        (lambda: table.merge(batch, batch_id=0), "b0", "merge"),
+        (lambda: table.merge(batch, batch_id=0), "b0", "merge", DATA_RECORD),
         (lambda: table.merge(batch.withColumn("extra", F.lit(1)), batch_id=1),
-         "b1", "merge+evolve"),
-        (lambda: table.append(batch.filter("op != 'D'")), "bx", "append"),
+         "b1", "merge+evolve", DATA_RECORD),
+        (lambda: table.append(batch.filter("op != 'D'")), "bx", "append", DATA_RECORD),
         (lambda: table.delete_where("n_tok % 2 = 0", batch_id=2),
-         "delete_where", "delete_where"),
+         "delete_where", "delete_where", WRITE_RECORD),
         (lambda: table.delete_where("n_tok % 3 = 0", hard=True),
-         "delete_where_hard", "delete_where_hard"),
+         "delete_where_hard", "delete_where_hard", WRITE_RECORD),
         (lambda: table.update_where("n_tok % 5 = 0", {"source": "fixed"}),
-         "update_where", "update_where"),
+         "update_where", "update_where", WRITE_RECORD),
         (lambda: table.vacuum_tombstones(older_than_lsn=10**12),
-         "vacuum_tombstones", "vacuum_tombstones"),
-        (lambda: table.compact_files(cluster_by="n_tok"), "compact", "compact_files"),
-        (lambda: table.rebucket(4), "rebucket", "rebucket(2->4)"),
-        (lambda: table.set_stats_cols(["n_tok"]), "stats", "set_stats_cols"),
+         "vacuum_tombstones", "vacuum_tombstones", WRITE_RECORD),
+        (lambda: table.compact_files(cluster_by="n_tok"), "compact", "compact_files",
+         WRITE_RECORD),
+        (lambda: table.rebucket(4), "rebucket", "rebucket(2->4)", WRITE_RECORD),
+        (lambda: table.set_stats_cols(["n_tok"]), "stats", "set_stats_cols",
+         PUBLISH_RECORD),
         (lambda: table.add_columns(T.StructType([T.StructField("note", T.StringType())])),
-         "addcols", "add_columns"),
-        (lambda: table.truncate(), "truncate", "truncate"),
-        (lambda: table.replace(batch.filter("op != 'D'"), batch_id=3), "b3", "replace"),
+         "addcols", "add_columns", PUBLISH_RECORD),
+        (lambda: table.truncate(), "truncate", "truncate", PUBLISH_RECORD),
+        (lambda: table.replace(batch.filter("op != 'D'"), batch_id=3), "b3", "replace",
+         DATA_RECORD),
     ]
-    for version, (commit, tag, operation) in enumerate(steps, start=1):
+    for version, (commit, tag, operation, record_keys) in enumerate(steps, start=1):
         res = commit()
         m = table.manifest()
         assert res.applied and res.version == m["version"] == version, operation
@@ -603,3 +617,42 @@ def test_every_commit_publishes_the_create_manifest_shape(spark, tmp_path, chang
             f"snap-{version:08d}-{tag}", f"snap-{version:08d}-{tag}", operation
         )
         assert set(m) == keys, (operation, set(m) ^ keys)
+        assert set(res.record) == record_keys, (operation, set(res.record) ^ record_keys)
+
+
+def test_commit_record_phases_partition_merge_wall_time(spark, tmp_path, changelog_pdf):
+    """The data commit's phases are contiguous: they sum to the merge's
+    wall time (within 5%, never above it) — with and without a slow
+    pre-commit hook, whose wait lands in ``hook_s``. Its counts agree
+    with the manifests before and after."""
+    import os
+    import time
+
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "phases"), PAYLOAD_SCHEMA, n_buckets=2
+    )
+    changes = spark_changelog_from_pandas(spark, changelog_pdf)
+    hooks = [None, None, lambda: time.sleep(0.2)]
+    for batch_id, hook in enumerate(hooks):
+        before = table.manifest()
+        batch = reduce_latest(changes.filter(F.col("lsn") % 3 == batch_id))
+        t0 = time.perf_counter()
+        res = table.merge(batch, batch_id=batch_id, pre_commit_hook=hook)
+        wall = time.perf_counter() - t0
+        phases = {k: v for k, v in res.record.items() if k.endswith("_s")}
+        assert set(res.record) == DATA_RECORD
+        assert all(v >= 0 for v in phases.values()), phases
+        assert 0.95 * wall <= sum(phases.values()) <= wall, (wall, phases)
+        if hook is not None:
+            assert phases["hook_s"] >= 0.2, phases
+        after = table.manifest()
+        old = {f["path"] for f in before["files"]}
+        added = [f for f in after["files"] if f["path"] not in old]
+        carried = [f for f in after["files"] if f["path"] in old]
+        assert res.record["files_written"] == len(added)
+        assert res.record["bytes_written"] == sum(
+            os.path.getsize(os.path.join(table.root, f["path"])) for f in added
+        )
+        assert res.record["files_carried"] == len(carried)
+        assert res.record["rows_carried"] == sum(f["rows"] for f in carried)
+        assert res.record["files_read"] == len(before["files"]) - len(carried)

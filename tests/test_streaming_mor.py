@@ -98,7 +98,8 @@ def test_tailer_metrics_row_survives_torn_line(spark, tmp_path):
 
     class Stub:
         def apply(self, batch_df, batch_id=None):
-            return CommitResult("snap-x", 1, applied=True, n_events=3)
+            return CommitResult("snap-x", 1, applied=True, n_events=3,
+                                record={"commit_s": 0.5})
 
     metrics = tmp_path / "metrics.jsonl"
     metrics.write_text(json.dumps({"batch_id": 0}) + "\n" + '{"batch_id": 1, "snap')
@@ -107,3 +108,8 @@ def test_tailer_metrics_row_survives_torn_line(spark, tmp_path):
     assert lines[1] == '{"batch_id": 1, "snap'  # the torn line, left as is
     rows = [json.loads(x) for x in lines if x != lines[1]]
     assert [r["batch_id"] for r in rows] == [0, 2]
+    assert set(rows[1]) == {
+        "batch_id", "snapshot_id", "applied", "events_applied", "events_sec",
+        "lag_sec", "commit",
+    }
+    assert rows[1]["commit"] == {"commit_s": 0.5}  # the engine's record
