@@ -19,7 +19,8 @@ salted shapes live on as ``lww_*`` queries in ``queries.py``.
 Ordering ties: replayed events are identical full-row images (reference
 replays whole files, ``dags/s3_xml_import_pipeline.py:149-170``), so a
 max-LSN tie always resolves to identical bytes. For full determinism the
-order key is ``struct(lsn, offset, source_file)``.
+order key is ``struct(lsn, offset, source_file)`` (``schemas.LWW_ORDER``,
+the columns of it the batch has).
 """
 
 from __future__ import annotations
@@ -27,20 +28,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_ORDER_COLS = ["lsn", "offset", "source_file"]
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, LWW_ORDER
 
 
-def _order_struct(df: DataFrame, lsn_col: str) -> F.Column:
-    cols = [lsn_col] + [c for c in _ORDER_COLS[1:] if c in df.columns]
-    return F.struct(*[F.col(c) for c in cols])
+def _order_cols(df: DataFrame) -> list[str]:
+    """The LWW order: ``lsn`` (required), then the tie-breaks ``df`` has."""
+    return [LSN] + [c for c in LWW_ORDER[1:] if c in df.columns]
 
 
-def reduce_latest(
-    df: DataFrame, key: str = "doc_id", lsn_col: str = "lsn"
-) -> DataFrame:
+def _order_struct(df: DataFrame) -> F.Column:
+    return F.struct(*[F.col(c) for c in _order_cols(df)])
+
+
+def reduce_latest(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Collapse a changelog to the latest event per key (schema preserved)."""
     payload = [c for c in df.columns if c != key]
     reduced = df.groupBy(key).agg(
-        F.max_by(F.struct(*payload), _order_struct(df, lsn_col)).alias("_latest")
+        F.max_by(F.struct(*payload), _order_struct(df)).alias("_latest")
     )
     return reduced.select(key, *[F.col(f"_latest.{c}").alias(c) for c in payload])

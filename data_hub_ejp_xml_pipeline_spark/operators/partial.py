@@ -53,7 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_hub_ejp_xml_pipeline_spark.operators.lww import _ORDER_COLS, _order_struct
+from data_hub_ejp_xml_pipeline_spark.operators.lww import _order_cols, _order_struct
+from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, OP
 
 # the engine's neutral sentinel; decode Debezium feeds with
 # placeholder=DEBEZIUM_UNAVAILABLE to consume the wire value unchanged
@@ -64,8 +65,6 @@ DEBEZIUM_UNAVAILABLE = "__debezium_unavailable_value"
 def reduce_latest_partial(
     df: DataFrame,
     key: str = "doc_id",
-    lsn_col: str = "lsn",
-    op_col: str = "op",
     cols: list[str] | None = None,
     placeholder: str = UNAVAILABLE,
 ) -> DataFrame:
@@ -84,20 +83,21 @@ def reduce_latest_partial(
             f.name
             for f in df.schema.fields
             if f.dataType.simpleString() == "string"
-            and f.name not in (key, op_col, *_ORDER_COLS)
+            and f.name != key
+            and f.name not in ENVELOPE
         ]
     if not cols:
         raise ValueError("no resolvable string payload columns")
-    order = _order_struct(df, lsn_col)
+    order = _order_struct(df)
     # segment counter: +1 at every I/D, so rows after the key's last
     # boundary share the max segment id; boundary-free keys sit at 0
     w = (
         Window.partitionBy(key)
-        .orderBy(*[F.col(c) for c in [lsn_col] + [x for x in _ORDER_COLS[1:] if x in df.columns]])
+        .orderBy(*[F.col(c) for c in _order_cols(df)])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     seg = F.sum(
-        F.when(F.col(op_col).isin("I", "D"), F.lit(1)).otherwise(F.lit(0))
+        F.when(F.col(OP).isin("I", "D"), F.lit(1)).otherwise(F.lit(0))
     ).over(w)
     staged = df.withColumn("_seg", seg)
 
@@ -109,7 +109,7 @@ def reduce_latest_partial(
     for c in cols:
         # a D event's payload must never be a fill source; NULL is a real
         # value (condition true), only the sentinel is skipped
-        usable = (F.col(op_col) != "D") & F.coalesce(
+        usable = (F.col(OP) != "D") & F.coalesce(
             F.col(c) != placeholder, F.lit(True)
         )
         aggs.append(
@@ -147,7 +147,6 @@ def fill_unavailable(
     reduced: DataFrame,
     table,
     cols: list[str],
-    op_col: str = "op",
     placeholder: str = UNAVAILABLE,
     lookup_max_keys: int | None = None,
 ) -> DataFrame:
@@ -172,7 +171,7 @@ def fill_unavailable(
     needs = F.lit(False)
     for c in cols:
         needs = needs | (F.col(c) == placeholder)
-    needs = needs & (F.col(op_col) != "D")
+    needs = needs & (F.col(OP) != "D")
     fill_keys_df = reduced.filter(needs).select(key).distinct()
     if lookup_max_keys is not None:
         cap = lookup_max_keys

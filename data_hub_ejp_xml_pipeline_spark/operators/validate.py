@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, OP
+
 VALID_OPS = ("I", "U", "D")
 REASON_COL = "reject_reason"
 
@@ -40,13 +42,11 @@ REASON_COL = "reject_reason"
 def reject_reason(
     df: DataFrame,
     key: str = "doc_id",
-    lsn_col: str = "lsn",
-    op_col: str = "op",
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
 ) -> Column:
     """CASE expression: the first failed rule's reason, null when valid."""
-    kc, lc, oc = F.col(key), F.col(lsn_col), F.col(op_col)
+    kc, lc, oc = F.col(key), F.col(LSN), F.col(OP)
     expr = F.when(kc.isNull() | (kc.cast("string") == ""), F.lit("null_key"))
     expr = expr.when(lc.isNull(), F.lit("null_lsn"))
     expr = expr.when(oc.isNull() | ~oc.isin(*VALID_OPS), F.lit("bad_op"))
@@ -64,8 +64,6 @@ def reject_reason(
 def split_changelog(
     df: DataFrame,
     key: str = "doc_id",
-    lsn_col: str = "lsn",
-    op_col: str = "op",
     tokens_col: str = "tokens",
     ntok_col: str = "n_tok",
 ) -> tuple[DataFrame, DataFrame]:
@@ -73,7 +71,7 @@ def split_changelog(
     ``reject_reason``; valid rows are byte-identical to the input (no
     added columns, so downstream plans are unchanged when nothing is
     invalid)."""
-    reason = reject_reason(df, key, lsn_col, op_col, tokens_col, ntok_col)
+    reason = reject_reason(df, key, tokens_col, ntok_col)
     valid = df.filter(reason.isNull())
     rejects = df.withColumn(REASON_COL, reason).filter(F.col(REASON_COL).isNotNull())
     return valid, rejects

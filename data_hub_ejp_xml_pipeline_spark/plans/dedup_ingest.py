@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.operators import dedup
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, LWW_ORDER, OP
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import SnapshotTable
 
 _LOG = logging.getLogger(__name__)
@@ -151,14 +152,15 @@ class DedupIngestState:
         # double emission; only a crash-window recompute can see drift)
         self.last_replay_drift = None
         self.last_replay_drift_count = 0
-        if self.texthash is not None and _applied(self.bands, batch_id):
+        if (self.texthash is not None
+                and self.bands.replayed(batch_id) is not None):
             self._check_provider_drift(id_col, text_col)
 
         # replay fast path: flags commit LAST, so a ledgered flags append
         # proves the whole epoch is durable — the stored flags ARE the
         # deterministic recompute (and stay available after the pre-epoch
         # manifests expire)
-        if _applied(self.flags, batch_id):
+        if self.flags.replayed(batch_id) is not None:
             return _epoch_flags(self.flags, batch_id)
 
         pre_bands_v = _version_before(self.bands, batch_id)
@@ -403,7 +405,7 @@ class TokenDedupState:
         # is durable — return the stored flags instead of re-probing
         # (also the path that stays correct after expire_snapshots has
         # reclaimed the pre-epoch manifests the recompute would need)
-        if _applied(self.flags, batch_id):
+        if self.flags.replayed(batch_id) is not None:
             return _epoch_flags(self.flags, batch_id)
         # persisted for the epoch: fps feeds the corpus probe, the
         # batch-internal self-join, the state append, and the flags append
@@ -480,8 +482,7 @@ class TokenDedupState:
         return cand_corpus.unionByName(cand_batch).distinct()
 
     def apply_changelog(self, changelog: DataFrame, batch_id: int,
-                        id_col: str = "doc_id", tokens_col: str = "tokens",
-                        lsn_col: str = "lsn", op_col: str = "op") -> DataFrame:
+                        id_col: str = "doc_id", tokens_col: str = "tokens") -> DataFrame:
         """Fingerprint-then-reduce entry point for a RAW changelog batch:
         the md5 prefix fingerprint is computed per row in whole-stage
         codegen, then the per-key LWW winner is picked over
@@ -492,19 +493,17 @@ class TokenDedupState:
         (a key whose winner is a delete must not enter the corpus).
 
         Tie-break on equal (doc_id, lsn): the SAME lineage columns the
-        main reduce uses (operators.lww._ORDER_COLS: offset, source_file
+        main reduce uses (``schemas.LWW_ORDER``: offset, source_file
         — when present), so the dedup winner and the table's winner are
         the same row; an equal-lsn update/delete sibling pair cannot make
         the table keep the update while the dedup path drops the key as
         deleted. Without lineage columns, falls back to (fp, op)."""
-        from data_hub_ejp_xml_pipeline_spark.operators.lww import _ORDER_COLS
-
-        tie = [c for c in _ORDER_COLS[1:] if c in changelog.columns]
+        tie = [c for c in LWW_ORDER[1:] if c in changelog.columns]
         rows = changelog.select(
             F.col(id_col).cast("string").alias("doc_id"),
-            F.col(lsn_col).alias("_l"),
+            F.col(LSN).alias("_l"),
             self.fingerprint(tokens_col).alias("fp"),
-            F.col(op_col).alias("_o"),
+            F.col(OP).alias("_o"),
             *[F.col(c) for c in tie],
         )
         order = (
@@ -568,18 +567,6 @@ def _epoch_flags(flags_table: SnapshotTable, batch_id: int) -> DataFrame:
         .filter(F.col("epoch") == F.lit(batch_id).cast("long"))
         .drop("_lsn")
     )
-
-
-def _applied(table: SnapshotTable, batch_id: int | None) -> bool:
-    """Whether ``batch_id`` is provably applied to ``table`` — in the
-    ledger, or below its eviction watermark (monotone streaming ids)."""
-    if batch_id is None:
-        return False
-    m = table.manifest()
-    if m["ledger"].get(str(batch_id)) is not None:
-        return True
-    evicted_below = m.get("ledger_evicted_below")
-    return evicted_below is not None and batch_id < evicted_below
 
 
 def _open_table(spark: SparkSession, root: str, schema: T.StructType,

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.operators.validate import REASON_COL
-from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _applied, _open_table
+from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _open_table
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     CommitResult,
     SnapshotTable,
@@ -142,13 +142,10 @@ class DlqState:
                 "DlqState.apply requires a monotone batch_id; without one "
                 "the quarantine append is not exactly-once"
             )
-        if _applied(self.table, batch_id):
+        replayed = self.table.replayed(batch_id)
+        if replayed is not None:
             self.last_reject_count = 0
-            return CommitResult(
-                self.table.manifest()["snapshot_id"],
-                self.table.current_version(),
-                applied=False,
-            )
+            return replayed
         # the surrogate spreads buckets uniformly AND is deterministic in
         # the row content, so a replayed epoch (crash after commit) hashes
         # to identical rows — the ledger is the idempotency guard, the rid

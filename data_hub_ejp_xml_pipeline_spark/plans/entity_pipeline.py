@@ -31,6 +31,7 @@ from data_hub_ejp_xml_pipeline_spark.config import ENTITY_TYPES, PipelineConfig
 from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
 from data_hub_ejp_xml_pipeline_spark.plans.pipeline import run_table_branches
 from data_hub_ejp_xml_pipeline_spark.table import SnapshotTable
+from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import _NON_PAYLOAD
 from data_hub_ejp_xml_pipeline_spark.table.schema_evolution import merge_schemas
 
 ENTITY_PAYLOAD_SCHEMA = T.StructType(
@@ -52,12 +53,9 @@ TYPED_BASE_SCHEMA = T.StructType(
     ]
 )
 
-# never promoted from a payload JSON into a table column: engine-internal
-# names and the changelog envelope
-_RESERVED = {
-    "doc_id", "modified_timestamp", "payload", "lsn", "op",
-    "source", "source_file", "offset", "_lsn", "_deleted", "_bucket",
-}
+# never promoted from a payload JSON into a table column: the entity
+# changelog's own columns, the changelog envelope and engine-internal names
+_RESERVED = {"doc_id", "modified_timestamp", "payload", "source"} | _NON_PAYLOAD
 
 
 def infer_payload_schema(
@@ -171,12 +169,7 @@ class EntityPipeline:
         previously-known column AND surfaces new ones; the merge commit
         then evolves the table schema additively (K3)."""
         existing = T.StructType(
-            [
-                f
-                for f in table.schema().fields
-                if f.name.lower() not in ("doc_id", "modified_timestamp",
-                                          "_lsn", "_deleted")
-            ]
+            [f for f in table.schema().fields if f.name.lower() not in _RESERVED]
         )
         merged = merge_schemas(existing, inferred)
         if not merged.fields:
@@ -233,12 +226,10 @@ class EntityPipeline:
                     "lsn", "op", "doc_id", "payload", "modified_timestamp",
                     "source_file", "offset",
                 )
-                # reduce WITH the lineage cols (they are the deterministic
-                # tie-break), then drop them from the written payload — they
-                # feed the lineage/stats pre-pass via stats_df only, so the
-                # table keeps exactly ENTITY_PAYLOAD_SCHEMA (no surprise
-                # schema-evolution commit, smaller files)
-                reduced = reduce_latest(slice_df).drop("source_file", "offset")
+                # the lineage cols are the reduce's deterministic tie-break;
+                # the commit strips them with the rest of the envelope, so
+                # the table keeps exactly its payload schema
+                reduced = reduce_latest(slice_df)
                 if self.payload_mode == "typed":
                     reduced = self._typed_batch(table, inferred[entity], reduced)
                 return table.merge(reduced, batch_id=batch_id, stats_df=slice_df).n_events

@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _applied, _open_table
+from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _open_table
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, OP
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     DELETED_COL,
     LSN_COL,
@@ -150,8 +151,6 @@ class IncrementalAggState:
         reduced_batch: DataFrame,
         base: SnapshotTable,
         batch_id: int,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         inclusive_guard: bool = False,
     ) -> CommitResult:
         """Fold one epoch's LWW-reduced changelog (the same frame the
@@ -174,12 +173,9 @@ class IncrementalAggState:
                 "IncrementalAggState.apply requires a monotone batch_id; "
                 "without one the totals replace is not exactly-once"
             )
-        if _applied(self.totals, batch_id):
-            return CommitResult(
-                self.totals.manifest()["snapshot_id"],
-                self.totals.current_version(),
-                applied=False,
-            )
+        replayed = self.totals.replayed(batch_id)
+        if replayed is not None:
+            return replayed
         key = base.manifest()["key"]
         # the reduced batch feeds two jobs (the bucket-range collect and
         # the totals rewrite); without a cache the upstream reduce would
@@ -192,14 +188,12 @@ class IncrementalAggState:
             # the caller (e.g. MergePipeline's shared narrow reduce)
             # owns the cache lifecycle
             return self._apply_cached(
-                reduced_batch, base, key, batch_id, op_col, lsn_col,
-                inclusive_guard,
+                reduced_batch, base, key, batch_id, inclusive_guard,
             )
         reduced_batch = reduced_batch.persist()
         try:
             return self._apply_cached(
-                reduced_batch, base, key, batch_id, op_col, lsn_col,
-                inclusive_guard,
+                reduced_batch, base, key, batch_id, inclusive_guard,
             )
         finally:
             reduced_batch.unpersist()
@@ -210,12 +204,10 @@ class IncrementalAggState:
         base: SnapshotTable,
         key: str,
         batch_id: int,
-        op_col: str,
-        lsn_col: str,
         inclusive_guard: bool = False,
     ) -> CommitResult:
         old = self._old_rows(reduced_batch, base, key)
-        new_lsn, old_lsn = F.col(lsn_col), F.col("_old_lsn")
+        new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
         # mirror the merge's stale guard EXACTLY — including its
         # inclusive (>=) replication form: a winner the merge applies
         # must move the totals, one it ignores must not
@@ -237,7 +229,7 @@ class IncrementalAggState:
             else F.lit(0.0)
         )
         new_side = (
-            joined.filter((F.col(op_col) != "D") & grp.isNotNull())
+            joined.filter((F.col(OP) != "D") & grp.isNotNull())
             .select(grp.alias("_g"), F.lit(1).alias("_dc"), val.alias("_dv"))
         )
         old_side = (

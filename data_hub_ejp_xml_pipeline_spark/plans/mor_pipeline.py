@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
 from data_hub_ejp_xml_pipeline_spark.plans.pipeline import PAYLOAD_SCHEMA
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, OP
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     DELETED_COL,
     LSN_COL,
@@ -210,7 +211,8 @@ class MorPipeline:
                 # fingerprint-then-reduce over the RAW batch (deleted keys'
                 # winners never enter the corpus state); the dedup shuffle
                 # carries fingerprints, not token payloads
-                self.dedup_state.apply_changelog(changelog, batch_id=batch_id)
+                self.dedup_state.apply_changelog(changelog, batch_id=batch_id,
+                                                 id_col=self.key)
             # raw batch feeds the stats/lineage pre-pass (narrow, no
             # reduce); the LWW reduce then executes exactly once, in the
             # append's write
@@ -231,17 +233,16 @@ class MorPipeline:
             # those must keep no-opping replays, so they are NOT the guard)
             self._since_compact = 0
             return None
-        staged = self.delta.read()
+        # staged rows carry their event's lsn as the delta table's _lsn;
+        # as ``lsn`` they are a changelog again
+        staged = self.delta.read().withColumnRenamed(LSN_COL, LSN)
         ledger = self.delta.ledger()
         # one row per key across all staged epochs; the compaction's
         # exactly-once id is the highest staged epoch id (monotone)
         compact_id = max(int(b) for b in ledger)
-        changes = reduce_latest(staged, key=self.key, lsn_col=LSN_COL)
         res = self.base.merge(
-            changes,
+            reduce_latest(staged, key=self.key),
             batch_id=compact_id,
-            op_col="op",
-            lsn_col=LSN_COL,
             stats_df=staged,
         )
         self.delta.truncate()
@@ -359,8 +360,11 @@ class MorPipeline:
             .otherwise(F.lit("U")),
         ).drop(DELETED_COL)
         latest = reduce_latest(
-            base.unionByName(delta, allowMissingColumns=True),
+            base.unionByName(delta, allowMissingColumns=True)
+            .withColumnRenamed(LSN_COL, LSN),
             key=self.key,
-            lsn_col=LSN_COL,
         )
-        return latest.filter(F.col("op") != "D").drop("op")
+        return (
+            latest.filter(F.col(OP) != "D").drop(OP)
+            .withColumnRenamed(LSN, LSN_COL)
+        )

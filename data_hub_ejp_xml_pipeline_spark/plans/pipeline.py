@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
-from data_hub_ejp_xml_pipeline_spark.operators.lww import reduce_latest
-from data_hub_ejp_xml_pipeline_spark.schemas import TARGET_SCHEMA
+from data_hub_ejp_xml_pipeline_spark.operators.lww import _order_cols, reduce_latest
+from data_hub_ejp_xml_pipeline_spark.schemas import OP, TARGET_SCHEMA
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import CommitResult, SnapshotTable
 
 PAYLOAD_SCHEMA = T.StructType([f for f in TARGET_SCHEMA.fields if f.name != "_lsn"])
@@ -165,13 +165,13 @@ class MergePipeline:
         # max(base write, sidecar work) wall clock instead of the sum
         # (guide-§2.6 overlap: FIFO scheduling backfills straggler-idle
         # cores with the sidecar jobs).
+        if batch_id is None and self._attached_states():
+            raise ValueError(
+                "attached states require a monotone batch_id — each state "
+                "table commits exactly-once per epoch on its own ledger"
+            )
         jobs: list = []
         if self.dlq_state is not None:
-            if batch_id is None:
-                raise ValueError(
-                    "dead-letter quarantine requires a monotone batch_id — "
-                    "the rejects append commits exactly-once per epoch"
-                )
             # FIRST: invalid events must reach none of the downstream
             # consumers (a null key would coalesce into a junk LWW group,
             # a null lsn poisons the max-LSN guard). The split is two
@@ -219,28 +219,15 @@ class MergePipeline:
         jobs: list,
     ) -> CommitResult:
         if self.dedup_state is not None:
-            if batch_id is None:
-                raise ValueError(
-                    "dedup-on-ingest requires a monotone batch_id — the "
-                    "fingerprint/flags state commits exactly-once per epoch"
-                )
             # fingerprint-then-reduce over the RAW batch: the dedup shuffle
             # carries (doc_id, lsn, fp, op) only — never the token payload,
             # and never a second execution of the merge's LWW reduce
             jobs.append(
                 lambda: self.dedup_state.apply_changelog(
-                    changelog, batch_id=batch_id
+                    changelog, batch_id=batch_id, id_col=self.key
                 )
             )
         if self.ivm_state is not None or self.index_state is not None:
-            if batch_id is None:
-                what = ("incremental view maintenance"
-                        if self.ivm_state is not None
-                        else "secondary-index maintenance")
-                raise ValueError(
-                    f"{what} requires a monotone batch_id — the state "
-                    "commits exactly-once per epoch"
-                )
             # BEFORE the merge: both states' old-side reads must observe
             # the pre-epoch base (crash between commits converges on
             # replay — ledgered sides no-op, the rest applies). They
@@ -251,8 +238,6 @@ class MergePipeline:
             # arrays) never enters their jobs — measured ~2x cheaper per
             # epoch at 1M events; with both attached the reduce shuffle
             # happens once, not twice
-            from data_hub_ejp_xml_pipeline_spark.operators.lww import _ORDER_COLS
-
             narrow = [self.key]
             if self.ivm_state is not None:
                 narrow.append(self.ivm_state.group_col)
@@ -260,7 +245,7 @@ class MergePipeline:
                     narrow.append(self.ivm_state.value_col)
             if self.index_state is not None:
                 narrow.append(self.index_state.index_col)
-            narrow += ["op"] + [c for c in _ORDER_COLS if c in changelog.columns]
+            narrow += [OP] + _order_cols(changelog)
             aux_reduced = reduce_latest(
                 changelog.select(*dict.fromkeys(narrow)), key=self.key
             )
@@ -292,11 +277,6 @@ class MergePipeline:
         else:
             both = False
         if self.scd2_state is not None:
-            if batch_id is None:
-                raise ValueError(
-                    "scd2 history requires a monotone batch_id — the "
-                    "history merge commits exactly-once per epoch"
-                )
             # the history merge and the base merge consume the SAME
             # reduced frame; cache it so the LWW reduce still executes
             # once (Scd2State sees the cache and leaves its lifecycle to

@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _applied, _open_table
+from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _open_table
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, OP
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     DELETED_COL,
     LSN_COL,
@@ -69,12 +70,12 @@ def _history_schema(key: str, payload: T.StructType) -> T.StructType:
     return T.StructType(fields)
 
 
-def _surrogate(key_col: F.Column, lsn_col: F.Column) -> F.Column:
+def _surrogate(key: F.Column, lsn: F.Column) -> F.Column:
     """Injective for non-negative int64 LSNs: the encoded string always
     ends with '@' + exactly 19 digits, so (key, lsn) decodes uniquely
     even when the key itself contains '@' or digit runs."""
-    return F.concat_ws("@", key_col.cast("string"),
-                       F.lpad(lsn_col.cast("string"), _LSN_PAD, "0"))
+    return F.concat_ws("@", key.cast("string"),
+                       F.lpad(lsn.cast("string"), _LSN_PAD, "0"))
 
 
 class Scd2State:
@@ -171,8 +172,6 @@ class Scd2State:
         reduced_batch: DataFrame,
         base: SnapshotTable,
         batch_id: int,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         inclusive_guard: bool = False,
     ) -> CommitResult:
         """Fold one epoch's LWW-reduced changelog into the history —
@@ -191,12 +190,9 @@ class Scd2State:
                 "Scd2State.apply requires a monotone batch_id; without one "
                 "the history merge is not exactly-once"
             )
-        if _applied(self.history, batch_id):
-            return CommitResult(
-                self.history.manifest()["snapshot_id"],
-                self.history.current_version(),
-                applied=False,
-            )
+        replayed = self.history.replayed(batch_id)
+        if replayed is not None:
+            return replayed
         key = base.manifest()["key"]
         # two jobs read the batch (bucket-range collect + history merge);
         # if the CALLER already persisted it (MergePipeline does, so the
@@ -205,11 +201,11 @@ class Scd2State:
             reduced_batch.storageLevel.useDisk
         if already_cached:
             return self._apply_cached(reduced_batch, base, key, batch_id,
-                                      op_col, lsn_col, inclusive_guard)
+                                      inclusive_guard)
         reduced_batch = reduced_batch.persist()
         try:
             return self._apply_cached(reduced_batch, base, key, batch_id,
-                                      op_col, lsn_col, inclusive_guard)
+                                      inclusive_guard)
         finally:
             reduced_batch.unpersist()
 
@@ -219,12 +215,10 @@ class Scd2State:
         base: SnapshotTable,
         key: str,
         batch_id: int,
-        op_col: str,
-        lsn_col: str,
         inclusive_guard: bool = False,
     ) -> CommitResult:
         old = self._old_rows(reduced_batch, base, key)
-        new_lsn, old_lsn = F.col(lsn_col), F.col("_old_lsn")
+        new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
         fresher = (new_lsn >= old_lsn) if inclusive_guard else (new_lsn > old_lsn)
         joined = (
             reduced_batch.join(old, key, "left")
@@ -254,35 +248,34 @@ class Scd2State:
             seal = seal | (
                 (F.col("_old_live") == F.lit(True))
                 & (new_lsn == old_lsn)
-                & (F.col(op_col) == F.lit("D"))
+                & (F.col(OP) == F.lit("D"))
             )
         close = joined.filter(seal).select(
             _surrogate(kc, F.col("_old_lsn")).alias(_SK_COL),
             kc.alias(key),
             F.col("_old_lsn").alias("valid_from_lsn"),
-            F.col(lsn_col).alias("valid_to_lsn"),
+            F.col(LSN).alias("valid_to_lsn"),
             F.lit(False).alias("is_current"),
             *[F.col(f"_old_{c}").alias(c) for c in self.payload_cols],
-            F.lit("U").alias(op_col),
-            F.col(lsn_col),
+            F.lit("U").alias(OP),
+            F.col(LSN),
         )
-        opens = joined.filter(F.col(op_col) != "D").select(
-            _surrogate(kc, F.col(lsn_col)).alias(_SK_COL),
+        opens = joined.filter(F.col(OP) != "D").select(
+            _surrogate(kc, F.col(LSN)).alias(_SK_COL),
             kc.alias(key),
-            F.col(lsn_col).alias("valid_from_lsn"),
+            F.col(LSN).alias("valid_from_lsn"),
             F.lit(None).cast("long").alias("valid_to_lsn"),
             F.lit(True).alias("is_current"),
             *self.payload_cols,
-            F.lit("U").alias(op_col),
-            F.col(lsn_col),
+            F.lit("U").alias(OP),
+            F.col(LSN),
         )
         rows = close.unionByName(opens)
         # ONE ledgered merge: close + open are atomic; crash before the
         # commit leaves no trace, replay after it no-ops on the ledger.
         # Inclusive mode rides through: the equal-LSN in-place rewrite of
         # an open version needs the history merge's own guard relaxed too.
-        return self.history.merge(rows, batch_id=batch_id, op_col=op_col,
-                                  lsn_col=lsn_col,
+        return self.history.merge(rows, batch_id=batch_id,
                                   inclusive_guard=inclusive_guard)
 
     def _old_rows(

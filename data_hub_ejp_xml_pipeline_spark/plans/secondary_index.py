@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _applied, _open_table
+from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import _open_table
+from data_hub_ejp_xml_pipeline_spark.schemas import LSN, OP
 from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     DELETED_COL,
     LSN_COL,
@@ -181,8 +182,6 @@ class SecondaryIndexState:
         reduced_batch: DataFrame,
         base: SnapshotTable,
         batch_id: int,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         inclusive_guard: bool = False,
     ) -> CommitResult:
         """Fold one epoch's LWW-reduced changelog into the postings —
@@ -214,12 +213,9 @@ class SecondaryIndexState:
                 "into a freshly-created state) before attaching it to a "
                 "replication consumer"
             )
-        if _applied(self.postings, batch_id):
-            return CommitResult(
-                self.postings.manifest()["snapshot_id"],
-                self.postings.current_version(),
-                applied=False,
-            )
+        replayed = self.postings.replayed(batch_id)
+        if replayed is not None:
+            return replayed
         # two jobs consume the batch (the bucket-range collect and the
         # postings append) — cache unless the caller already did (the
         # shared-reduce path in MergePipeline owns the lifecycle then)
@@ -229,8 +225,7 @@ class SecondaryIndexState:
             reduced_batch = reduced_batch.persist()
         try:
             return self._apply_cached(reduced_batch, base, batch_id,
-                                      op_col, lsn_col, inclusive_guard,
-                                      has_seq)
+                                      inclusive_guard, has_seq)
         finally:
             if not already_cached:
                 reduced_batch.unpersist()
@@ -240,8 +235,6 @@ class SecondaryIndexState:
         reduced_batch: DataFrame,
         base: SnapshotTable,
         batch_id: int,
-        op_col: str,
-        lsn_col: str,
         inclusive_guard: bool = False,
         has_seq: bool = True,
     ) -> CommitResult:
@@ -256,8 +249,8 @@ class SecondaryIndexState:
             reduced_batch.select(
                 F.col(key).cast("string").alias(key),
                 F.col(vcol).cast("string").alias("_new_v"),
-                F.col(op_col).alias("_op"),
-                F.col(lsn_col).alias("_lsn_new"),
+                F.col(OP).alias("_op"),
+                F.col(LSN).alias("_lsn_new"),
             )
             .join(old, key, "left")
             # mirror the merge's stale guard (incl. its inclusive form)

@@ -10,6 +10,16 @@ the north-rule shape: monotonic ``lsn`` + op + tokenized payload.
 ``(doc_id string, tokens array<int32>, n_tok int32, source string)``;
 the engine appends ``_lsn`` (last applied LSN per key — the merge guard,
 analog of the reference watermark in ``etl_state.py:26-76``).
+
+The changelog contract is written down here once: every change event
+carries its key, its payload and the ENVELOPE — ``lsn`` (its log
+position: the per-key last-writer-wins order and the merge guard),
+``op`` (insert/update/delete), ``offset`` and ``source_file`` (where it
+sits in its source: the LWW tie-break and the lineage) and ``event_ts``
+(its event time, for lag). The engine's sets of these names (the LWW
+order, the columns a commit never writes, the names a payload never
+promotes) are built from the constants below, and no envelope column
+ever becomes a table column.
 """
 
 from __future__ import annotations
@@ -20,9 +30,15 @@ OP_INSERT = "I"
 OP_UPDATE = "U"
 OP_DELETE = "D"
 
+LSN = "lsn"
+OP = "op"
+# the last-writer-wins order: max ``lsn``, ties broken by source position
+LWW_ORDER = (LSN, "offset", "source_file")
+ENVELOPE = frozenset((*LWW_ORDER, OP, "event_ts"))
+
 CHANGELOG_FIELDS = [
-    T.StructField("lsn", T.LongType(), False),
-    T.StructField("op", T.StringType(), False),
+    T.StructField(LSN, T.LongType(), False),
+    T.StructField(OP, T.StringType(), False),
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("tokens", T.ArrayType(T.IntegerType()), True),
     T.StructField("n_tok", T.IntegerType(), True),

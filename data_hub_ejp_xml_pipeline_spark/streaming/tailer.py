@@ -151,14 +151,14 @@ class ChangelogTailer:
         available_now: bool = True,
         processing_time: str | None = None,
         max_files_per_trigger: int | None = None,
-        fmt: str = "parquet",
     ):
-        """Start the streaming query. ``available_now`` drains the backlog
-        and stops (replay mode); ``processing_time`` tails continuously."""
+        """Start the streaming query over a directory of parquet changelog
+        files. ``available_now`` drains the backlog and stops (replay
+        mode); ``processing_time`` tails continuously."""
         reader = self.spark.readStream.schema(schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.format(fmt).load(changelog_path)
+        stream = reader.parquet(changelog_path)
 
         return self.attach(
             stream,

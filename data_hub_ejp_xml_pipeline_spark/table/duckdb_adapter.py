@@ -37,6 +37,8 @@ from typing import Any
 
 from pyspark.sql import types as T
 
+from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, LSN, OP
+
 LSN_COL = "_lsn"
 DELETED_COL = "_deleted"
 
@@ -85,8 +87,6 @@ def merge_sql(
     name: str,
     payload_cols: list[str],
     key: str = "doc_id",
-    op_col: str = "op",
-    lsn_col: str = "lsn",
     source_view: str = "updates",
     inclusive_guard: bool = False,
 ) -> list[str]:
@@ -103,16 +103,16 @@ def merge_sql(
     guard = ">=" if inclusive_guard else ">"
     sets = ", ".join(
         [f"{c} = s.{c}" for c in payload_cols if c != key]
-        + [f"{LSN_COL} = s.{lsn_col}", f"{DELETED_COL} = (s.{op_col} = 'D')"]
+        + [f"{LSN_COL} = s.{LSN}", f"{DELETED_COL} = (s.{OP} = 'D')"]
     )
     ins_cols = ", ".join(payload_cols + [LSN_COL, DELETED_COL])
     ins_vals = ", ".join(
         [f"s.{c}" for c in payload_cols]
-        + [f"s.{lsn_col}", f"(s.{op_col} = 'D')"]
+        + [f"s.{LSN}", f"(s.{OP} = 'D')"]
     )
     return [
         f"UPDATE {name} SET {sets} FROM {source_view} s "
-        f"WHERE {name}.{key} = s.{key} AND s.{lsn_col} {guard} {name}.{LSN_COL}",
+        f"WHERE {name}.{key} = s.{key} AND s.{LSN} {guard} {name}.{LSN_COL}",
         f"INSERT INTO {name} ({ins_cols}) SELECT {ins_vals} FROM {source_view} s "
         f"WHERE NOT EXISTS (SELECT 1 FROM {name} t WHERE t.{key} = s.{key})",
     ]
@@ -228,22 +228,16 @@ class DuckDBSnapshotTable:
             self.con.execute(s)
         return stmts
 
-    def merge(
-        self,
-        reduced,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
-        inclusive_guard: bool = False,
-    ) -> None:
+    def merge(self, reduced, inclusive_guard: bool = False) -> None:
         """``reduced``: a pandas frame, one row per key."""
         payload_cols = [
             c for c in reduced.columns
-            if c not in (op_col, lsn_col, LSN_COL, DELETED_COL)
+            if c not in ENVELOPE and c not in (LSN_COL, DELETED_COL)
         ]
         self.con.register("_duck_merge_src", reduced)
         try:
             for stmt in merge_sql(
-                self.name, payload_cols, self.key, op_col, lsn_col,
+                self.name, payload_cols, self.key,
                 source_view="_duck_merge_src",
                 inclusive_guard=inclusive_guard,
             ):

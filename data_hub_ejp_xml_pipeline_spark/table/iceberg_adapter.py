@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, LSN, OP
+
 LSN_COL = "_lsn"
 DELETED_COL = "_deleted"
 
@@ -71,8 +73,6 @@ def merge_sql(
     identifier: str,
     payload_cols: list[str],
     key: str = "doc_id",
-    op_col: str = "op",
-    lsn_col: str = "lsn",
     source_view: str = "updates",
 ) -> str:
     """The engine's merge contract as one Iceberg MERGE INTO, with the
@@ -91,17 +91,17 @@ def merge_sql(
     """
     sets = ", ".join(
         [f"t.{c} = s.{c}" for c in payload_cols if c != key]
-        + [f"t.{LSN_COL} = s.{lsn_col}",
-           f"t.{DELETED_COL} = (s.{op_col} = 'D')"]
+        + [f"t.{LSN_COL} = s.{LSN}",
+           f"t.{DELETED_COL} = (s.{OP} = 'D')"]
     )
     ins_cols = ", ".join(payload_cols + [LSN_COL, DELETED_COL])
     ins_vals = ", ".join(
         [f"s.{c}" for c in payload_cols]
-        + [f"s.{lsn_col}", f"(s.{op_col} = 'D')"]
+        + [f"s.{LSN}", f"(s.{OP} = 'D')"]
     )
     return (
         f"MERGE INTO {identifier} t USING {source_view} s ON t.{key} = s.{key} "
-        f"WHEN MATCHED AND s.{lsn_col} > t.{LSN_COL} THEN UPDATE SET {sets} "
+        f"WHEN MATCHED AND s.{LSN} > t.{LSN_COL} THEN UPDATE SET {sets} "
         f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
     )
 
@@ -309,21 +309,16 @@ class IcebergSnapshotTable:
         (``SnapshotTable.vacuum_tombstones`` parity)."""
         self.spark.sql(vacuum_sql(self.identifier, older_than_lsn))
 
-    def merge(
-        self,
-        updates: DataFrame,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
-    ) -> None:
+    def merge(self, updates: DataFrame) -> None:
         payload_cols = [
             c
             for c in updates.columns
-            if c not in (op_col, lsn_col, LSN_COL, DELETED_COL)
+            if c not in ENVELOPE and c not in (LSN_COL, DELETED_COL)
         ]
         view = f"updates_{abs(hash(self.identifier)) % 10**8}"
         updates.createOrReplaceTempView(view)
         self.spark.sql(
             merge_sql(
-                self.identifier, payload_cols, self.key, op_col, lsn_col, view
+                self.identifier, payload_cols, self.key, view
             )
         )

@@ -40,7 +40,15 @@ Design for 100 TB:
   window of recent ``{batch_id → snapshot_id}`` entries plus an
   ``evicted_below`` watermark: replays inside the window hit the map,
   older (monotone streaming) replays hit the watermark — O(window), not
-  O(history), per commit.
+  O(history), per commit. :meth:`SnapshotTable.replayed` is that rule,
+  and the only copy of it: every ledgered commit and every state built
+  on a table (``plans.dlq``, ``ivm``, ``scd2``, ``secondary_index``,
+  ``dedup_ingest``) asks it.
+* **The changelog contract.** A batch is the ``schemas`` changelog:
+  key, payload and the envelope (``lsn``, ``op``, ``offset``,
+  ``source_file``, ``event_ts``). ``lsn`` feeds ``_lsn`` and the guard,
+  ``op`` the tombstone, the rest the pre-pass; no envelope column is
+  ever a table column.
 * **Lineage in the manifest.** Per-source-file offset ranges
   (FIXTURES.md §5, generalizing the reference's provenance struct
   ``ejp_zip.py:66-69``) of THIS epoch only ride in the manifest the
@@ -86,6 +94,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, LSN, OP
 from data_hub_ejp_xml_pipeline_spark.table.schema_evolution import (
     conform_to_schema,
     merge_schemas,
@@ -93,11 +102,11 @@ from data_hub_ejp_xml_pipeline_spark.table.schema_evolution import (
 
 _LOG = logging.getLogger(__name__)
 
-_NON_PAYLOAD = {"op", "lsn", "source_file", "offset", "event_ts", "_bucket", "_salt",
-                "_lsn", "_deleted"}
 LSN_COL = "_lsn"
 DELETED_COL = "_deleted"
 INTERNAL_COLS = (LSN_COL, DELETED_COL)
+# never a table column: the changelog envelope and the engine's own columns
+_NON_PAYLOAD = ENVELOPE | {"_bucket", *INTERNAL_COLS}
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -143,7 +152,7 @@ class SnapshotTable:
         self.spark = spark
         self.root = root
         # fail fast (instead of warn + skip) when a batch_id below the
-        # ledger eviction watermark arrives — see _ledger_lookup
+        # ledger eviction watermark arrives — see replayed
         self.strict_ledger = strict_ledger
 
     # ---------------------------------------------------------------- setup
@@ -666,7 +675,7 @@ class SnapshotTable:
             | ~same_content
         )
         return j.filter(changed).select(
-            *out_cols, op.alias("op"), lsn.cast("long").alias("lsn")
+            *out_cols, op.alias(OP), lsn.cast("long").alias(LSN)
         )
 
     def subscribe(self, cursor: int | None = None) -> tuple[DataFrame, int]:
@@ -770,8 +779,6 @@ class SnapshotTable:
         self,
         updates: DataFrame,
         batch_id: int | None = None,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         stats_df: DataFrame | None = None,
         commit_retries: int = 0,
         retry_backoff_sec: float = 0.5,
@@ -793,9 +800,10 @@ class SnapshotTable:
         ``batch_id`` exactly-once relies on streaming batch ids being
         MONOTONE per checkpoint: an id already in the ledger — or below its
         eviction watermark — is treated as a replay and skipped
-        (``applied=False``). Resetting/recreating the checkpoint restarts
-        ids at 0, so against a table with ``> ledger_window`` commits every
-        new epoch would be silently swallowed: pair a fresh checkpoint with
+        (``applied=False``; :meth:`replayed`). Resetting/recreating the
+        checkpoint restarts ids at 0, so against a table with ``>
+        ledger_window`` commits every new epoch would be silently
+        swallowed: pair a fresh checkpoint with
         a fresh table, or construct with ``strict_ledger=True`` to raise on
         sub-watermark ids instead (a warning is logged either way).
 
@@ -838,8 +846,7 @@ class SnapshotTable:
         while True:
             try:
                 return self._commit(
-                    updates, operation="merge", batch_id=batch_id,
-                    op_col=op_col, lsn_col=lsn_col, stats_df=stats_df,
+                    updates, operation="merge", batch_id=batch_id, stats_df=stats_df,
                     inclusive_guard=inclusive_guard, pre_commit_hook=pre_commit_hook,
                 )
             except ConcurrentCommitError:
@@ -859,8 +866,6 @@ class SnapshotTable:
         updates: DataFrame,
         operation: str,
         batch_id: int | None,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         stats_df: DataFrame | None = None,
         inclusive_guard: bool = False,
         pre_commit_hook=None,
@@ -869,7 +874,7 @@ class SnapshotTable:
         ``replace``."""
         t0 = time.perf_counter()  # plan_s starts here: manifest read, ledger check
         m = self.manifest()
-        replayed = self._replayed(m, batch_id)
+        replayed = self.replayed(batch_id, m)
         if replayed is not None:
             return replayed
         # Without a caller-provided stats_df the SAME ``updates`` plan feeds
@@ -887,7 +892,7 @@ class SnapshotTable:
             owned_cache = True
         try:
             return self._commit_inner(
-                updates, operation, batch_id, op_col, lsn_col,
+                updates, operation, batch_id,
                 stats_df, inclusive_guard, m, pre_commit_hook, t0,
             )
         finally:
@@ -899,8 +904,6 @@ class SnapshotTable:
         updates: DataFrame,
         operation: str,
         batch_id: int | None,
-        op_col: str,
-        lsn_col: str,
         stats_df: DataFrame | None,
         inclusive_guard: bool,
         m: dict[str, Any],
@@ -953,8 +956,8 @@ class SnapshotTable:
         if merge:
             src_full = src.select(
                 *[conform_col(src, f).alias(f.name) for f in payload_schema.fields],
-                F.col(lsn_col).cast("long").alias(LSN_COL),
-                F.col(op_col).alias("_op"),
+                F.col(LSN).cast("long").alias(LSN_COL),
+                F.col(OP).alias("_op"),
                 F.col("_bucket"),
             )
             # file-level pruning: only files whose key range can contain a
@@ -981,8 +984,8 @@ class SnapshotTable:
             # _lsn must be derived BEFORE the conforming projection — it
             # drops every non-payload column, including the lsn source
             lsn_expr = (
-                F.col(lsn_col).cast("long")
-                if lsn_col in updates.columns
+                F.col(LSN).cast("long")
+                if LSN in updates.columns
                 else F.lit(0).cast("long")
             )
             result = (
@@ -1122,18 +1125,21 @@ class SnapshotTable:
         )
 
     # ------------------------------------------------------------- ledger
-    def _replayed(self, m: dict[str, Any], batch_id: int | None) -> CommitResult | None:
-        """Exactly-once: the metadata no-op result of an epoch the ledger
-        already holds, else None."""
-        snap = self._ledger_lookup(m, batch_id)
-        return None if snap is None else CommitResult(snap, m["version"], applied=False)
-
-    def _ledger_lookup(self, m: dict[str, Any], batch_id: int | None) -> str | None:
+    def replayed(
+        self, batch_id: int | None, m: dict[str, Any] | None = None
+    ) -> CommitResult | None:
+        """The applied-epoch rule, for this table and every state built on
+        one: the no-op result of an epoch ``batch_id`` already applied,
+        else None. Applied means in the ledger, or below its eviction
+        watermark (streaming batch ids are monotone). ``m`` is a manifest
+        the caller already read (default: the current one)."""
         if batch_id is None:
             return None
+        if m is None:
+            m = self.manifest()
         snap = m["ledger"].get(str(batch_id))
         if snap is not None:
-            return snap
+            return CommitResult(snap, m["version"], applied=False)
         evicted_below = m.get("ledger_evicted_below")
         if (
             evicted_below is not None
@@ -1160,7 +1166,7 @@ class SnapshotTable:
                     f"eviction watermark {evicted_below}; refusing to treat a "
                     "possibly-reset checkpoint epoch as a replay"
                 )
-            return m["snapshot_id"]
+            return CommitResult(m["snapshot_id"], m["version"], applied=False)
         return None
 
     def _advance_ledger(
@@ -1574,7 +1580,7 @@ class SnapshotTable:
         from urllib.parse import urlparse
 
         m = self.manifest()
-        replayed = self._replayed(m, batch_id)
+        replayed = self.replayed(batch_id, m)
         if replayed is not None:
             return replayed
         key = m["key"]
@@ -1824,7 +1830,7 @@ class SnapshotTable:
         groupings in one shuffle; ``grouping(col)`` flags tell the rows
         apart (NULL group values are ambiguous)."""
         has_ts = "event_ts" in src.columns
-        has_lsn = "lsn" in src.columns
+        has_lsn = LSN in src.columns
         has_lineage = "source_file" in src.columns and "offset" in src.columns
         aggs = [
             F.count(F.lit(1)).alias("n_events"),
@@ -1833,7 +1839,7 @@ class SnapshotTable:
             (F.max("event_ts") if has_ts else F.lit(None)).alias("max_ts"),
             # the batch's max LSN rides the same job — the stream offset a
             # tailer-driven MaintenancePolicy vacuums against
-            (F.max("lsn") if has_lsn else F.lit(None)).alias("max_lsn"),
+            (F.max(LSN) if has_lsn else F.lit(None)).alias("max_lsn"),
         ]
         if has_lineage:
             aggs += [

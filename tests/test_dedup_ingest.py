@@ -437,3 +437,30 @@ def test_minhash_state_expire(spark, tmp_path):
     ex = s.expire(keep_last=1)
     assert set(ex) == {"bands", "flags", "docs"}
     assert s.all_flags().count() == before  # current state untouched
+
+
+def test_pipelines_fingerprint_on_their_own_key(spark, tmp_path):
+    """Both pipelines hand TokenDedupState their key: on a table keyed by
+    ``k`` (no ``doc_id`` column anywhere) the state dedups on ``k``."""
+    from pyspark.sql import types as T
+
+    from data_hub_ejp_xml_pipeline_spark.plans.dedup_ingest import TokenDedupState
+    from data_hub_ejp_xml_pipeline_spark.plans.mor_pipeline import MorPipeline
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+
+    payload = T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+    ])
+    batch = spark.createDataFrame(
+        [(1, "I", "a", [1, 2, 3]), (2, "I", "b", [1, 2, 3]), (3, "I", "c", [4])],
+        "lsn long, op string, k string, tokens array<int>",
+    )
+    for kind, cls in (("cow", MergePipeline), ("mor", MorPipeline)):
+        state = TokenDedupState(spark, str(tmp_path / f"dd-{kind}"), n_buckets=2)
+        pipe = cls(spark, str(tmp_path / kind), key="k", n_buckets=2,
+                   payload_schema=payload, dedup_state=state)
+        pipe.apply(batch, batch_id=0)
+        flags = {(r.new_doc, r.matched_doc) for r in state.all_flags().collect()}
+        assert flags == {("b", "a")}, kind
+        assert {r.k for r in pipe.final_state().collect()} == {"a", "b", "c"}, kind

@@ -6,6 +6,8 @@ failures to an errors output; the e2e tier asserts the artifacts)."""
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -169,6 +171,24 @@ def test_dlq_requires_batch_id(spark, tmp_path, changelog_df):
     pipe = MergePipeline(spark, str(tmp_path / "tbl"), dlq_state=dlq)
     with pytest.raises(ValueError, match="batch_id"):
         pipe.apply(changelog_df)
+
+
+def test_state_replay_below_watermark_warns_like_its_table(spark, tmp_path, caplog):
+    """A state's applied-epoch check IS its table's: a batch_id under the
+    ledger eviction watermark no-ops with the table's data-loss warning
+    (a reset checkpoint must not be swallowed silently)."""
+    dlq = DlqState(spark, str(tmp_path / "dlq"), payload_schema=CHANGELOG_SCHEMA)
+    dlq.table.ledger_window = 1
+    _, rejects = split_changelog(_dirty_df(spark, _dirty_pdf(n_events=200)))
+    for bid in range(3):
+        assert dlq.apply(rejects, batch_id=bid).applied
+    assert dlq.table.manifest()["ledger_evicted_below"] == 1
+    n = dlq.read().count()
+    with caplog.at_level(logging.WARNING):
+        res = dlq.apply(rejects, batch_id=0)
+    assert not res.applied
+    assert "below the ledger eviction watermark" in caplog.text
+    assert dlq.read().count() == n
 
 
 def test_dlq_schema_identity(spark, tmp_path):

@@ -426,3 +426,38 @@ def test_typed_entity_tables_evolve_and_query_nested(spark, tmp_path):
     assert list(got.person_tags) == ["editor"]
     # LWW kept the newer batch's row
     assert p1.select("modified_timestamp").first()[0] == "2020-01-05T08:04:05Z"
+
+
+def test_no_envelope_column_becomes_a_table_column(spark, tmp_path, changelog_df):
+    """The changelog envelope (``schemas.ENVELOPE``) rides through the LWW
+    reduce into the commit, which keeps all of it out of the table: a
+    ``MergePipeline`` batch and a json-mode ``EntityPipeline`` epoch
+    commit without a schema-evolution step and with no envelope column."""
+    from pyspark.sql import functions as F
+
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+    from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE
+
+    assert ENVELOPE <= set(changelog_df.columns)
+    pipe = MergePipeline(spark, str(tmp_path / "tbl"), n_buckets=2)
+    pipe.apply(changelog_df, batch_id=0)
+
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    f = zips / "b0.zip"
+    f.write_bytes(_zip())
+    os.utime(f, (time.time() - 50, time.time() - 50))
+    cfg = PipelineConfig.from_dict(
+        {"zipPath": str(zips), "warehouseRoot": str(tmp_path / "wh")}, "x"
+    )
+    epipe = EntityPipeline(spark, cfg, n_buckets=2)
+    changelog = entities_to_changelog(read_zip_entities(spark, str(zips))).withColumn(
+        "event_ts", F.current_timestamp()
+    )
+    assert ENVELOPE <= set(changelog.columns)
+    epipe.apply(changelog, batch_id=0)
+
+    for name, t in {"merge": pipe.table, **epipe.tables}.items():
+        assert t.manifest()["operation"] == "merge", name
+        assert not ENVELOPE & set(t.schema().names), name
+        assert not ENVELOPE & set(t.read().columns), name
