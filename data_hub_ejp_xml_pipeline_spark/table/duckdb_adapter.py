@@ -38,9 +38,7 @@ from typing import Any
 from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, LSN, OP
-
-LSN_COL = "_lsn"
-DELETED_COL = "_deleted"
+from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import DELETED_COL, LSN_COL
 
 _SCALARS: dict[type, str] = {
     T.StringType: "VARCHAR",

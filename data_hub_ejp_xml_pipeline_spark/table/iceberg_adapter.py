@@ -25,9 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from data_hub_ejp_xml_pipeline_spark.schemas import ENVELOPE, LSN, OP
-
-LSN_COL = "_lsn"
-DELETED_COL = "_deleted"
+from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import DELETED_COL, LSN_COL
 
 _ICEBERG_EXTENSION = "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
 

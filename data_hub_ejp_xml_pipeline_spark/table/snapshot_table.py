@@ -21,6 +21,14 @@ Design for 100 TB:
   not the bucket. Untouched files are carried forward by reference (no
   data movement). ``files_per_bucket`` controls write fan-out so buckets
   are multi-file in the first place.
+* **Tasks sized by the rewrite, files by the layout.** A merge shuffles
+  its join inputs on the key into the smallest divisor of ``n_buckets``
+  partitions that gives each task about 1 MiB of the bytes it rewrites.
+  Because the bucket function is Spark's hash partitioning, each bucket
+  still lands whole in one task, and the write needs no third shuffle:
+  a small epoch into a 16-bucket table writes the same 16 files in one
+  task where it ran 16. Tables with ``files_per_bucket > 1`` keep
+  ``n_buckets * files_per_bucket`` tasks.
 * **One commit point.** A commit = write immutable data files
   (:meth:`SnapshotTable._write_buckets`) → :meth:`SnapshotTable._publish`,
   the one step every commit after ``create`` takes: it builds the next
@@ -69,8 +77,10 @@ Design for 100 TB:
   and ``footers_s`` (footer reads of the new files), both timed in
   :meth:`_write_buckets`, ``hook_s`` (the pre-commit barrier) and
   ``commit_s`` (:meth:`_publish`); plus ``files_read``,
-  ``files_carried``, ``files_written``, ``rows_carried`` and
-  ``bytes_written``. A rewrite (DML, compaction, rebucket) carries the
+  ``files_carried``, ``files_written``, ``rows_carried``,
+  ``bytes_written`` and ``write_tasks`` (the write's task count: the
+  join's partitions on a merge's bucket-aligned write, else the
+  range-partition count). A rewrite (DML, compaction, rebucket) carries the
   keys of :meth:`_write_buckets` and :meth:`_publish`, a metadata-only
   commit ``commit_s``, a replayed or empty batch nothing. The counts
   come from the pre-pass, the manifests and one ``stat`` per new file:
@@ -85,6 +95,7 @@ import bisect
 import dataclasses
 import json
 import logging
+import math
 import os
 import time
 import uuid
@@ -711,9 +722,10 @@ class SnapshotTable:
     def _bucket_expr(self, key: str) -> F.Column:
         """bucket = pmod(murmur3(key), n) — deliberately THE SAME function
         Spark's HashPartitioning uses, so a merge result that was shuffled
-        on the key into n_buckets*files_per_bucket partitions is already
-        bucket-aligned: each write task lands in exactly one bucket dir and
-        the final write needs NO extra exchange. (partitionBy routes rows
+        on the key into n_buckets*files_per_bucket partitions, or into a
+        divisor of n_buckets, is already bucket-aligned: each bucket's rows
+        sit in one write task (or files_per_bucket of them) and the final
+        write needs NO extra exchange. (partitionBy routes rows
         by VALUE, so a misalignment can only cost extra files, never
         correctness.)
 
@@ -932,13 +944,15 @@ class SnapshotTable:
         payload_schema = T.StructType(
             [f for f in merged_schema.fields if f.name not in INTERNAL_COLS]
         )
-        # Two jobs per commit: the single grouping-sets pre-pass (lineage +
-        # touched buckets + per-bucket key ranges + stats) and the write.
-        # ``stats_df`` lets callers pass the RAW (un-reduced) batch for the
-        # pre-pass — a narrow projection with no reduce — so the expensive
-        # LWW reduce executes exactly once (in the write job). Recomputing
-        # beats caching: persisting array<int> payloads costs more in
-        # columnar cache serialization than the re-aggregation.
+        # One pre-pass per commit: a single grouping-sets aggregation gives
+        # lineage, touched buckets, per-bucket key ranges and the stats;
+        # every other job of the commit belongs to the write (its shuffle
+        # stages and the parquet write). ``stats_df`` lets callers pass the
+        # RAW (un-reduced) batch for the pre-pass — a narrow projection with
+        # no reduce — so the expensive LWW reduce executes exactly once (in
+        # the write). Recomputing beats caching: persisting array<int>
+        # payloads costs more in columnar cache serialization than the
+        # re-aggregation.
         src = updates.withColumn("_bucket", bucket)
         stats_src = (
             stats_df.withColumn("_bucket", bucket) if stats_df is not None else src
@@ -964,17 +978,25 @@ class SnapshotTable:
             # batch key are read and rewritten; the rest carry forward
             touched_entries, carried = _split_touched_files(m["files"], bucket_ranges)
             est_rows = sum(f["rows"] for f in touched_entries) + batch_stats["n_events"]
+            join_parts = _join_partitions(
+                m,
+                [(f["rows"], os.path.getsize(os.path.join(self.root, f["path"])))
+                 for f in touched_entries],
+                batch_stats["n_events"],
+                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+            )
             target = self._read_file_entries(touched_entries, existing_schema)
             target = conform_to_schema(target, merged_schema).withColumn("_bucket", bucket)
-            # pre-shuffle both join inputs on the key into exactly max_parts
-            # partitions: the join reuses this exchange (ENSURE_REQUIREMENTS
-            # is satisfied) and — because the bucket function is the
-            # hash-partitioning function — the join output is bucket-aligned
-            # for the shuffle-free write below. REPARTITION_BY_NUM also stops
-            # AQE from coalescing the layout.
+            # pre-shuffle both join inputs on the key into join_parts
+            # partitions, a divisor of n_buckets (or max_parts): the join
+            # reuses this exchange (ENSURE_REQUIREMENTS is satisfied) and —
+            # because the bucket function is the hash-partitioning function
+            # — every bucket lands whole in one join task, so the join output
+            # is bucket-aligned for the shuffle-free write below.
+            # REPARTITION_BY_NUM also stops AQE from coalescing the layout.
             result = _merge_rows(
-                target.repartition(max_parts, F.col(key)),
-                src_full.repartition(max_parts, F.col(key)),
+                target.repartition(join_parts, F.col(key)),
+                src_full.repartition(join_parts, F.col(key)),
                 key, payload_schema, inclusive_guard=inclusive_guard,
             )
         else:
@@ -1006,17 +1028,19 @@ class SnapshotTable:
         table_rows = sum(f["rows"] for f in m["files"])
         rows_per_file = max(1, -(-max(table_rows, est_rows) // max_parts))
         n_parts = min(max_parts, max(1, -(-est_rows // rows_per_file)))
-        if not (merge and n_parts == max_parts):
+        aligned = merge and n_parts == max_parts
+        if not aligned:
             # small pruned merges / appends: range-partition on
             # (bucket, key) so the few rows stay in few, range-tight files
             # (with files_per_bucket > 1 the sub-files get NON-overlapping
             # key ranges — what the min/max pruning wants). A FULL-fan-out
             # merge (the streaming steady state) keeps the join's layout:
             # because the bucket function IS Spark's hash-partitioning
-            # function, the key shuffle into max_parts partitions is already
-            # bucket-aligned (partition p ↔ bucket p mod n_buckets), so the
-            # write needs no third shuffle — one full-data exchange saved
-            # per epoch.
+            # function, the key shuffle is already bucket-aligned (with
+            # join_parts dividing n_buckets, partition p holds whole buckets
+            # b ≡ p mod join_parts; with join_parts == max_parts, a share of
+            # bucket p mod n_buckets), so the write needs no third shuffle —
+            # one full-data exchange saved per epoch.
             result = result.repartitionByRange(n_parts, F.col("_bucket"), F.col(key))
         t_write = time.perf_counter()
         new_files, written = self._write_buckets(result, m)
@@ -1036,6 +1060,7 @@ class SnapshotTable:
             "files_read": len(touched_entries),
             "files_carried": len(carried),
             "rows_carried": sum(f["rows"] for f in carried),
+            "write_tasks": join_parts if aligned else n_parts,
         }
         res = self._publish(
             m, f"b{batch_id if batch_id is not None else 'x'}",
@@ -2057,6 +2082,42 @@ def _conform_arrow(t, schema: T.StructType):
             for f in schema.fields
         ],
         names=schema.names,
+    )
+
+
+# bytes of rewrite per join/write task of a merge, below which it runs
+# fewer tasks (never fewer files): Spark's default
+# ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+_MIN_TASK_BYTES = 1 << 20
+
+
+def _join_partitions(
+    m: dict[str, Any], touched_sizes: list[tuple[int, int]], n_events: int,
+    shuffle_partitions: int,
+) -> int:
+    """The hash-partition count J of a merge's join, from the ``(rows,
+    bytes)`` of each touched file: the smallest divisor of ``n_buckets``
+    that gives each task at least :data:`_MIN_TASK_BYTES` of the estimated
+    rewrite (the touched bytes scaled by ``(touched rows + batch events) /
+    touched rows``). A divisor keeps every bucket inside one task —
+    ``pmod(h, J) == pmod(h, n_buckets) mod J`` — so the aligned write lands
+    the same one file per bucket in fewer tasks. J is 1 or at least
+    ``shuffle_partitions``: when both join inputs are shuffles, Spark
+    raises a smaller count to ``spark.sql.shuffle.partitions``, which need
+    not divide ``n_buckets``. ``max_parts`` when the table keeps several
+    files per bucket, or when no touched file has rows to size from (a
+    first commit)."""
+    n_buckets = m["n_buckets"]
+    fpb = m.get("files_per_bucket", 1)
+    touched_rows = sum(rows for rows, _ in touched_sizes)
+    if fpb > 1 or touched_rows == 0:
+        return n_buckets * fpb
+    est_bytes = sum(b for _, b in touched_sizes) * (touched_rows + n_events) / touched_rows
+    need = max(1, math.ceil(est_bytes / _MIN_TASK_BYTES))
+    return next(
+        (d for d in range(need, n_buckets + 1)
+         if n_buckets % d == 0 and (d == 1 or d >= shuffle_partitions)),
+        n_buckets,
     )
 
 

@@ -23,9 +23,10 @@ EXPECT = {
         "NOTE: the merges execute while the query builds, so this plan is "
         "the final-state READ only: a column-pruned typed scan of the "
         "bucketed table files + tombstone filter, single codegen stage. "
-        "The merge epoch's plan properties (map-side partial max_by, one "
-        "exchange on doc_id reused by the SMJ, bucket-aligned shuffle-free "
-        "write) are pinned by tests/test_merge_strategies.py"
+        "The merge epoch's jobs (the pre-pass, the map-side partial max_by "
+        "shuffle, one shuffle per join input, the bucket-aligned write with "
+        "no third shuffle) are pinned by "
+        "tests/test_merge_strategies.py::test_full_fan_out_epoch_runs_six_spark_jobs"
     ),
     "lww_latest_event": (
         "partial_max_by -> Exchange hashpartitioning(doc_id) -> final agg; "

@@ -184,9 +184,11 @@ def test_compact_files_binpacks_grown_buckets(spark, tmp_path, changelog_pdf):
         spark, str(tmp_path / "cf"), PAYLOAD_SCHEMA, n_buckets=2, files_per_bucket=1
     )
     table.merge(reduce_latest(spark_changelog_from_pandas(spark, changelog_pdf)), batch_id=0)
-    # many tiny single-key merges → file growth in touched buckets
+    # many tiny single-key merges of keys above the table's key range →
+    # each bucket's old file is range-pruned (carried) and one file added
     for i in range(6):
         one = changelog_pdf.iloc[[i * 7]].copy()
+        one["doc_id"] = f"doc-9{i:07d}"
         one["lsn"] = changelog_pdf["lsn"].max() + 1 + i
         one["op"] = "U"
         table.merge(reduce_latest(spark_changelog_from_pandas(spark, one)), batch_id=i + 1)

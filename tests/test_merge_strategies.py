@@ -1,7 +1,9 @@
 """The single merge plan (pruned sort-merge full outer join) on the edges
 the shared-fixture suites do not reach: the oracle over two merges, the
-refused round-1 bucket format, LSNs above 2^53, and a failing stats
-pre-pass."""
+refused round-1 bucket format, LSNs above 2^53, a failing stats
+pre-pass, the join's task count sized by the bytes a merge rewrites, and
+the Spark jobs of a full-fan-out epoch (no third shuffle before the
+bucket-aligned write)."""
 
 from __future__ import annotations
 
@@ -116,3 +118,103 @@ def test_stats_failure_leaves_no_visible_snapshot(spark, tmp_path):
     with pytest.raises(Exception):
         table.merge(good, batch_id=0, stats_df=bad_stats)
     assert table.current_version() == 0
+
+
+def _merged(spark, table, pdf, batch_id):
+    return table.merge(
+        reduce_latest(spark_changelog_from_pandas(spark, pdf)), batch_id=batch_id
+    )
+
+
+def test_small_merge_runs_fewer_tasks_but_writes_one_file_per_bucket(
+    spark, tmp_path, changelog_pdf
+):
+    """A small merge into a 16-bucket table runs its join and write in
+    fewer than 16 tasks (a divisor of 16, sized by the bytes it rewrites)
+    and still adds exactly one file per touched bucket, every row in its
+    bucket, ending at the oracle. An empty table's first merge (no rows to
+    size from) and a two-files-per-bucket table keep n_buckets *
+    files_per_bucket tasks."""
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "sized"), PAYLOAD_SCHEMA, n_buckets=16
+    )
+    first, small = changelog_pdf.iloc[:-400], changelog_pdf.iloc[-400:]
+    assert _merged(spark, table, first, 0).record["write_tasks"] == 16
+    before = {f["path"] for f in table.manifest()["files"]}
+    res = _merged(spark, table, small, 1)
+    # a full-fan-out merge: every file is rewritten, so the write keeps the
+    # join's bucket-aligned layout (no range repartition)
+    assert res.record["files_carried"] == 0
+    assert res.record["write_tasks"] < 16 and 16 % res.record["write_tasks"] == 0
+    touched = {
+        r.b for r in spark_changelog_from_pandas(spark, small)
+        .select(F.pmod(F.hash("doc_id"), F.lit(16)).alias("b")).distinct().collect()
+    }
+    added = [f for f in table.manifest()["files"] if f["path"] not in before]
+    assert sorted(f["bucket"] for f in added) == sorted(touched)
+    chk = table.verify(deep=True)
+    assert chk["ok"], chk["errors"]  # no misbucketed row, no row-count drift
+    actual = (
+        table.read().selectExpr("doc_id", "tokens", "n_tok", "source", "_lsn").toPandas()
+    )
+    assert_final_state_equal(actual, expected_final_state_pandas(changelog_pdf))
+
+    multi = SnapshotTable.create(
+        spark, str(tmp_path / "multi"), PAYLOAD_SCHEMA, n_buckets=4,
+        files_per_bucket=2,
+    )
+    _merged(spark, multi, first, 0)
+    res = _merged(spark, multi, small, 1)
+    assert res.record["files_carried"] == 0 and res.record["write_tasks"] == 8
+    assert sorted(f["bucket"] for f in multi.manifest()["files"]) == [0, 0, 1, 1, 2, 2, 3, 3]
+
+
+def test_join_partitions_divide_the_buckets():
+    """J is the smallest divisor of n_buckets giving each task >= 1 MiB of
+    the estimated rewrite, and 1 or at least the session's shuffle
+    partitions (Spark raises a smaller co-partitioned count to it);
+    max_parts for multi-file buckets and for a table with no rows."""
+    from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import _join_partitions
+
+    mib = 1 << 20
+    m16 = {"n_buckets": 16, "files_per_bucket": 1}
+    # 16 files of 1,000 rows; the batch adds a tenth
+    def j(file_bytes, shuffle_partitions=8, m=m16, n_events=1_600):
+        return _join_partitions(m, [(1_000, file_bytes)] * 16, n_events, shuffle_partitions)
+
+    assert j(4_000) == 1  # 70 KB rewrite: one task
+    assert j(mib // 32) == 1  # 0.55 MiB
+    assert j(mib // 8, shuffle_partitions=2) == 4  # 2.2 MiB -> 3 -> next divisor 4
+    assert j(mib // 8) == 8  # ... but 4 is below the 8 shuffle partitions
+    assert j(mib) == 16  # 17.6 MiB
+    assert j(64 * mib) == 16  # never more than the buckets
+    assert _join_partitions({"n_buckets": 12}, [(1, 10 * mib)], 0, 8) == 12  # 10 -> 12
+    assert _join_partitions({"n_buckets": 12}, [(1, 2 * mib)], 0, 8) == 12  # 2, 3, 4, 6 < 8
+    assert j(4_000, m={"n_buckets": 4, "files_per_bucket": 2}) == 8
+    assert _join_partitions(m16, [], 500, 8) == 16  # first commit
+    assert _join_partitions(m16, [(0, 600)], 500, 8) == 16  # only empty files
+
+
+def test_full_fan_out_epoch_runs_six_spark_jobs(spark, tmp_path, changelog_pdf):
+    """A MergePipeline epoch that rewrites every file runs six Spark jobs:
+    the pre-pass aggregation (its shuffle stage and result), the shuffle
+    stages of the LWW reduce and of both join inputs, and the parquet
+    write. A third shuffle before the write (a range repartition and its
+    sampling job) would add jobs here."""
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+
+    sc = spark.sparkContext
+    pipe = MergePipeline(spark, str(tmp_path / "jobs"), n_buckets=16)
+    pipe.apply(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:-400]), batch_id=0)
+    batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[-400:])
+    try:
+        sc.setJobGroup("full-fan-out-epoch", "epoch")
+        res = pipe.apply(batch, batch_id=1)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("full-fan-out-epoch")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert res.record["files_carried"] == 0
+    assert len(jobs) == 6, sorted(jobs)

@@ -167,5 +167,5 @@ def test_streams_through_tailer(spark, tmp_path):
             assert set(record) == {
                 "prepass_s", "plan_s", "write_s", "footers_s", "hook_s", "commit_s",
                 "files_read", "files_carried", "files_written", "rows_carried",
-                "bytes_written",
+                "bytes_written", "write_tasks",
             }

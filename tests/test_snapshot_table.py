@@ -571,7 +571,8 @@ def test_metadata_tables_history_and_files(spark, tmp_path, changelog_pdf):
 PUBLISH_RECORD = {"commit_s"}
 WRITE_RECORD = PUBLISH_RECORD | {"write_s", "footers_s", "files_written", "bytes_written"}
 DATA_RECORD = WRITE_RECORD | {
-    "prepass_s", "plan_s", "hook_s", "files_read", "files_carried", "rows_carried"
+    "prepass_s", "plan_s", "hook_s", "files_read", "files_carried", "rows_carried",
+    "write_tasks",
 }
 
 
