@@ -48,7 +48,7 @@ from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     LSN_COL,
     CommitResult,
     SnapshotTable,
-    _split_touched_files,
+    cached,
 )
 
 
@@ -156,11 +156,10 @@ class IncrementalAggState:
         """Fold one epoch's LWW-reduced changelog (the same frame the
         base merge consumes, BEFORE that merge commits) into the totals.
 
-        The old-side read is file-pruned with the merge's own
-        bucket-range rule (``_split_touched_files``), so it costs what
-        the merge's target read costs — O(touched files), never a full
-        base scan; the delta aggregation is O(batch); the totals rewrite
-        is O(groups).
+        The old-side read is the base merge's own pruned target read
+        (:meth:`SnapshotTable.touched_rows`), so it costs what the merge's
+        target read costs — O(touched files), never a full base scan; the
+        delta aggregation is O(batch); the totals rewrite is O(groups).
 
         ``inclusive_guard`` MUST match the base merge's setting: a
         replication feed (``changelog_between``) carries equal-LSN
@@ -177,137 +176,75 @@ class IncrementalAggState:
         if replayed is not None:
             return replayed
         key = base.manifest()["key"]
-        # the reduced batch feeds two jobs (the bucket-range collect and
-        # the totals rewrite); without a cache the upstream reduce would
-        # execute twice. Callers are expected to pass a NARROW frame
-        # (MergePipeline strips the payload), so the columnar cache is
-        # cheap.
-        already_cached = reduced_batch.storageLevel.useMemory or \
-            reduced_batch.storageLevel.useDisk
-        if already_cached:
-            # the caller (e.g. MergePipeline's shared narrow reduce)
-            # owns the cache lifecycle
-            return self._apply_cached(
-                reduced_batch, base, key, batch_id, inclusive_guard,
-            )
-        reduced_batch = reduced_batch.persist()
-        try:
-            return self._apply_cached(
-                reduced_batch, base, key, batch_id, inclusive_guard,
-            )
-        finally:
-            reduced_batch.unpersist()
-
-    def _apply_cached(
-        self,
-        reduced_batch: DataFrame,
-        base: SnapshotTable,
-        key: str,
-        batch_id: int,
-        inclusive_guard: bool = False,
-    ) -> CommitResult:
-        old = self._old_rows(reduced_batch, base, key)
-        new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
-        # mirror the merge's stale guard EXACTLY — including its
-        # inclusive (>=) replication form: a winner the merge applies
-        # must move the totals, one it ignores must not
-        fresher = (new_lsn >= old_lsn) if inclusive_guard else (new_lsn > old_lsn)
-        joined = reduced_batch.join(
-            old.select(
+        grp = F.col(self.group_col).cast("string")
+        val = (
+            F.coalesce(F.col(self.value_col).cast("double"), F.lit(0.0))
+            if self.value_col is not None
+            else F.lit(0.0)
+        )
+        # the reduced batch feeds two jobs (the touched-rows key ranges and
+        # the totals rewrite); callers are expected to pass a NARROW frame
+        # (MergePipeline strips the payload), so the columnar cache is cheap
+        with cached(reduced_batch) as reduced_batch:
+            # tombstones MUST be read: their _lsn feeds the stale guard (a
+            # late update against a deleted key would otherwise look like a
+            # fresh insert here while the merge ignores it). Their
+            # group/value are nulled so they never retract — a deleted row
+            # contributes nothing to the view, and its retraction already
+            # happened in the epoch that processed the delete.
+            live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+            old = base.touched_rows(reduced_batch).select(
                 F.col(key),
-                F.col("_old_grp"),
-                F.col("_old_val"),
-                F.col("_old_lsn"),
-            ),
-            key,
-            "left",
-        ).filter(F.col("_old_lsn").isNull() | fresher)
-        grp = F.col(self.group_col).cast("string")
-        val = (
-            F.coalesce(F.col(self.value_col).cast("double"), F.lit(0.0))
-            if self.value_col is not None
-            else F.lit(0.0)
-        )
-        new_side = (
-            joined.filter((F.col(OP) != "D") & grp.isNotNull())
-            .select(grp.alias("_g"), F.lit(1).alias("_dc"), val.alias("_dv"))
-        )
-        old_side = (
-            joined.filter(F.col("_old_grp").isNotNull())
-            .select(
-                F.col("_old_grp").alias("_g"),
-                F.lit(-1).alias("_dc"),
-                (-F.col("_old_val")).alias("_dv"),
+                F.when(live, grp).alias("_old_grp"),
+                F.when(live, val).alias("_old_val"),
+                F.col(LSN_COL).alias("_old_lsn"),
             )
-        )
-        deltas = (
-            new_side.unionByName(old_side)
-            .groupBy("_g")
-            .agg(F.sum("_dc").alias("_dc"), F.sum("_dv").alias("_dv"))
-        )
-        current = self.totals.read().select(self.group_col, "cnt", "total")
-        updated = (
-            current.join(
-                deltas, current[self.group_col] == deltas["_g"], "full_outer"
+            new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
+            # mirror the merge's stale guard EXACTLY — including its
+            # inclusive (>=) replication form: a winner the merge applies
+            # must move the totals, one it ignores must not
+            fresher = (new_lsn >= old_lsn) if inclusive_guard else (new_lsn > old_lsn)
+            joined = reduced_batch.join(old, key, "left").filter(
+                F.col("_old_lsn").isNull() | fresher
             )
-            .select(
-                F.coalesce(current[self.group_col], deltas["_g"]).alias(
-                    self.group_col
-                ),
-                (
-                    F.coalesce(F.col("cnt"), F.lit(0))
-                    + F.coalesce(F.col("_dc"), F.lit(0))
-                ).alias("cnt"),
-                (
-                    F.coalesce(F.col("total"), F.lit(0.0))
-                    + F.coalesce(F.col("_dv"), F.lit(0.0))
-                ).alias("total"),
+            new_side = (
+                joined.filter((F.col(OP) != "D") & grp.isNotNull())
+                .select(grp.alias("_g"), F.lit(1).alias("_dc"), val.alias("_dv"))
             )
-        )
-        # the replace's stats/lineage pre-pass would otherwise execute the
-        # whole join pipeline (old-side read included) a second time; the
-        # frame is O(groups) rows, so the cache is free
-        updated = updated.persist()
-        try:
-            return self.totals.replace(updated, batch_id=batch_id)
-        finally:
-            updated.unpersist()
-
-    def _old_rows(
-        self, reduced_batch: DataFrame, base: SnapshotTable, key: str
-    ) -> DataFrame:
-        """The live pre-epoch base rows for the batch's keys, read from
-        only the files the merge itself would touch (bucket ∩ key-range
-        prune off the manifest — O(buckets) driver rows, never a base
-        scan)."""
-        m = base.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        bucket_rows = (
-            reduced_batch.select(
-                base._bucket_expr(key).alias("_b"), F.col(key)
+            old_side = (
+                joined.filter(F.col("_old_grp").isNotNull())
+                .select(
+                    F.col("_old_grp").alias("_g"),
+                    F.lit(-1).alias("_dc"),
+                    (-F.col("_old_val")).alias("_dv"),
+                )
             )
-            .groupBy("_b")
-            .agg(F.min(key).alias("kmin"), F.max(key).alias("kmax"))
-            .collect()
-        )
-        bucket_ranges = {r["_b"]: (r["kmin"], r["kmax"]) for r in bucket_rows}
-        touched, _ = _split_touched_files(m["files"], bucket_ranges)
-        grp = F.col(self.group_col).cast("string")
-        val = (
-            F.coalesce(F.col(self.value_col).cast("double"), F.lit(0.0))
-            if self.value_col is not None
-            else F.lit(0.0)
-        )
-        # tombstones MUST be read: their _lsn feeds the stale guard (a
-        # late update against a deleted key would otherwise look like a
-        # fresh insert here while the merge ignores it). Their group/value
-        # are nulled so they never retract — a deleted row contributes
-        # nothing to the view, and its retraction already happened in the
-        # epoch that processed the delete.
-        live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        return base._read_file_entries(touched, schema).select(
-            F.col(key),
-            F.when(live, grp).alias("_old_grp"),
-            F.when(live, val).alias("_old_val"),
-            F.col(LSN_COL).alias("_old_lsn"),
-        )
+            deltas = (
+                new_side.unionByName(old_side)
+                .groupBy("_g")
+                .agg(F.sum("_dc").alias("_dc"), F.sum("_dv").alias("_dv"))
+            )
+            current = self.totals.read().select(self.group_col, "cnt", "total")
+            updated = (
+                current.join(
+                    deltas, current[self.group_col] == deltas["_g"], "full_outer"
+                )
+                .select(
+                    F.coalesce(current[self.group_col], deltas["_g"]).alias(
+                        self.group_col
+                    ),
+                    (
+                        F.coalesce(F.col("cnt"), F.lit(0))
+                        + F.coalesce(F.col("_dc"), F.lit(0))
+                    ).alias("cnt"),
+                    (
+                        F.coalesce(F.col("total"), F.lit(0.0))
+                        + F.coalesce(F.col("_dv"), F.lit(0.0))
+                    ).alias("total"),
+                )
+            )
+            # the replace's stats/lineage pre-pass would otherwise execute
+            # the whole join pipeline (old-side read included) a second
+            # time; the frame is O(groups) rows, so the cache is free
+            with cached(updated) as updated:
+                return self.totals.replace(updated, batch_id=batch_id)

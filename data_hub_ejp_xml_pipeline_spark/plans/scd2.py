@@ -49,7 +49,7 @@ from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     LSN_COL,
     CommitResult,
     SnapshotTable,
-    _split_touched_files,
+    cached,
 )
 
 _SK_COL = "_sk"
@@ -194,111 +194,75 @@ class Scd2State:
         if replayed is not None:
             return replayed
         key = base.manifest()["key"]
-        # two jobs read the batch (bucket-range collect + history merge);
-        # if the CALLER already persisted it (MergePipeline does, so the
-        # base merge reuses the same cache), don't own the lifecycle here
-        already_cached = reduced_batch.storageLevel.useMemory or \
-            reduced_batch.storageLevel.useDisk
-        if already_cached:
-            return self._apply_cached(reduced_batch, base, key, batch_id,
-                                      inclusive_guard)
-        reduced_batch = reduced_batch.persist()
-        try:
-            return self._apply_cached(reduced_batch, base, key, batch_id,
-                                      inclusive_guard)
-        finally:
-            reduced_batch.unpersist()
-
-    def _apply_cached(
-        self,
-        reduced_batch: DataFrame,
-        base: SnapshotTable,
-        key: str,
-        batch_id: int,
-        inclusive_guard: bool = False,
-    ) -> CommitResult:
-        old = self._old_rows(reduced_batch, base, key)
-        new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
-        fresher = (new_lsn >= old_lsn) if inclusive_guard else (new_lsn > old_lsn)
-        joined = (
-            reduced_batch.join(old, key, "left")
-            # mirror the merge's stale guard (incl. its inclusive
-            # replication form): a winner the base merge ignores
-            # writes no history either
-            .filter(F.col("_old_lsn").isNull() | fresher)
-        )
-        kc = F.col(key).cast("string")
-        # close: the replaced LIVE row, interval sealed at the new lsn.
-        # Tombstoned old rows have _old_live = false — their close
-        # happened in the epoch that processed the delete. Equal-LSN
-        # UPSERT winners (inclusive mode only) close nothing: the open
-        # version at that LSN is rewritten in place by the opens side
-        # below (same surrogate). An equal-LSN DELETE winner (a
-        # replication feed's rendering of delete_where — the tombstone
-        # keeps the row's LSN) opens nothing, so the in-place rewrite
-        # must come from THIS side: the open version at that LSN is
-        # rewritten as closed at its own LSN (same surrogate,
-        # is_current = false, the deliberately-empty [lsn, lsn)
-        # interval — the FINAL state at that LSN excludes the row, and
-        # an as-of read at it must agree with the base). Without it the
-        # base tombstones the row while the history's open version
-        # stays current forever.
-        seal = (F.col("_old_live") == F.lit(True)) & (new_lsn > old_lsn)
-        if inclusive_guard:
-            seal = seal | (
-                (F.col("_old_live") == F.lit(True))
-                & (new_lsn == old_lsn)
-                & (F.col(OP) == F.lit("D"))
+        # two jobs read the batch (the touched-rows key ranges + the history
+        # merge); MergePipeline passes it cached, so the base merge reuses
+        # the same cache
+        with cached(reduced_batch) as reduced_batch:
+            # the pre-epoch base rows for the batch's keys: payload + _lsn +
+            # liveness, off the files the merge itself reads
+            live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+            old = base.touched_rows(reduced_batch).select(
+                F.col(key),
+                F.col(LSN_COL).alias("_old_lsn"),
+                live.alias("_old_live"),
+                *[F.col(c).alias(f"_old_{c}") for c in self.payload_cols],
             )
-        close = joined.filter(seal).select(
-            _surrogate(kc, F.col("_old_lsn")).alias(_SK_COL),
-            kc.alias(key),
-            F.col("_old_lsn").alias("valid_from_lsn"),
-            F.col(LSN).alias("valid_to_lsn"),
-            F.lit(False).alias("is_current"),
-            *[F.col(f"_old_{c}").alias(c) for c in self.payload_cols],
-            F.lit("U").alias(OP),
-            F.col(LSN),
-        )
-        opens = joined.filter(F.col(OP) != "D").select(
-            _surrogate(kc, F.col(LSN)).alias(_SK_COL),
-            kc.alias(key),
-            F.col(LSN).alias("valid_from_lsn"),
-            F.lit(None).cast("long").alias("valid_to_lsn"),
-            F.lit(True).alias("is_current"),
-            *self.payload_cols,
-            F.lit("U").alias(OP),
-            F.col(LSN),
-        )
-        rows = close.unionByName(opens)
-        # ONE ledgered merge: close + open are atomic; crash before the
-        # commit leaves no trace, replay after it no-ops on the ledger.
-        # Inclusive mode rides through: the equal-LSN in-place rewrite of
-        # an open version needs the history merge's own guard relaxed too.
-        return self.history.merge(rows, batch_id=batch_id,
-                                  inclusive_guard=inclusive_guard)
-
-    def _old_rows(
-        self, reduced_batch: DataFrame, base: SnapshotTable, key: str
-    ) -> DataFrame:
-        """Pre-epoch base rows for the batch's keys — payload + _lsn +
-        liveness — read from only the files the merge itself touches
-        (bucket ∩ key-range prune off the manifest)."""
-        m = base.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        bucket_rows = (
-            reduced_batch.select(base._bucket_expr(key).alias("_b"), F.col(key))
-            .groupBy("_b")
-            .agg(F.min(key).alias("kmin"), F.max(key).alias("kmax"))
-            .collect()
-        )
-        bucket_ranges = {r["_b"]: (r["kmin"], r["kmax"]) for r in bucket_rows}
-        touched, _ = _split_touched_files(m["files"], bucket_ranges)
-        live = ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-        cols = [
-            F.col(key),
-            F.col(LSN_COL).alias("_old_lsn"),
-            live.alias("_old_live"),
-        ]
-        cols += [F.col(c).alias(f"_old_{c}") for c in self.payload_cols]
-        return base._read_file_entries(touched, schema).select(*cols)
+            new_lsn, old_lsn = F.col(LSN), F.col("_old_lsn")
+            fresher = (new_lsn >= old_lsn) if inclusive_guard else (new_lsn > old_lsn)
+            joined = (
+                reduced_batch.join(old, key, "left")
+                # mirror the merge's stale guard (incl. its inclusive
+                # replication form): a winner the base merge ignores
+                # writes no history either
+                .filter(F.col("_old_lsn").isNull() | fresher)
+            )
+            kc = F.col(key).cast("string")
+            # close: the replaced LIVE row, interval sealed at the new lsn.
+            # Tombstoned old rows have _old_live = false — their close
+            # happened in the epoch that processed the delete. Equal-LSN
+            # UPSERT winners (inclusive mode only) close nothing: the open
+            # version at that LSN is rewritten in place by the opens side
+            # below (same surrogate). An equal-LSN DELETE winner (a
+            # replication feed's rendering of delete_where — the tombstone
+            # keeps the row's LSN) opens nothing, so the in-place rewrite
+            # must come from THIS side: the open version at that LSN is
+            # rewritten as closed at its own LSN (same surrogate,
+            # is_current = false, the deliberately-empty [lsn, lsn)
+            # interval — the FINAL state at that LSN excludes the row, and
+            # an as-of read at it must agree with the base). Without it the
+            # base tombstones the row while the history's open version
+            # stays current forever.
+            seal = (F.col("_old_live") == F.lit(True)) & (new_lsn > old_lsn)
+            if inclusive_guard:
+                seal = seal | (
+                    (F.col("_old_live") == F.lit(True))
+                    & (new_lsn == old_lsn)
+                    & (F.col(OP) == F.lit("D"))
+                )
+            close = joined.filter(seal).select(
+                _surrogate(kc, F.col("_old_lsn")).alias(_SK_COL),
+                kc.alias(key),
+                F.col("_old_lsn").alias("valid_from_lsn"),
+                F.col(LSN).alias("valid_to_lsn"),
+                F.lit(False).alias("is_current"),
+                *[F.col(f"_old_{c}").alias(c) for c in self.payload_cols],
+                F.lit("U").alias(OP),
+                F.col(LSN),
+            )
+            opens = joined.filter(F.col(OP) != "D").select(
+                _surrogate(kc, F.col(LSN)).alias(_SK_COL),
+                kc.alias(key),
+                F.col(LSN).alias("valid_from_lsn"),
+                F.lit(None).cast("long").alias("valid_to_lsn"),
+                F.lit(True).alias("is_current"),
+                *self.payload_cols,
+                F.lit("U").alias(OP),
+                F.col(LSN),
+            )
+            rows = close.unionByName(opens)
+            # ONE ledgered merge: close + open are atomic; crash before the
+            # commit leaves no trace, replay after it no-ops on the ledger.
+            # Inclusive mode rides through: the equal-LSN in-place rewrite of
+            # an open version needs the history merge's own guard relaxed too.
+            return self.history.merge(rows, batch_id=batch_id,
+                                      inclusive_guard=inclusive_guard)

@@ -15,7 +15,7 @@ Layout — LSM-style postings, bucketed BY VALUE (the ann-index trick,
 ``plans/ann_index.py:80-82``): the postings table's SnapshotTable key
 is the (stringified) index value, so a value's postings land in ONE
 hash bucket and a lookup reads only that bucket's files
-(``read(buckets=...)`` file pruning); the key is deliberately
+(:meth:`SnapshotTable.lookup`'s pruning); the key is deliberately
 non-unique, the table append-only:
 
 * epoch winners append an OPEN posting ``(value, doc, lsn, live)``;
@@ -46,7 +46,7 @@ from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
     LSN_COL,
     CommitResult,
     SnapshotTable,
-    _split_touched_files,
+    cached,
 )
 
 _VALUE_COL = "value"
@@ -156,25 +156,14 @@ class SecondaryIndexState:
         return self._reduced(self.postings.read())
 
     def lookup(self, value) -> DataFrame:
-        """Keys whose current ``index_col`` equals ``value`` — reads ONLY
-        the value's hash bucket's files, then reduces the survivors.
-        O(bucket), independent of index size with uniform values."""
-        v = None if value is None else str(value)
-        if v is None:
+        """Keys whose current ``index_col`` equals ``value``: the value's
+        postings through :meth:`SnapshotTable.lookup` (only the files of
+        its hash bucket whose key range holds it, read on the driver into
+        a local relation), then reduced. O(bucket), independent of index
+        size with uniform values."""
+        if value is None:
             raise ValueError("NULL values are not indexed — nothing to look up")
-        vdf = self.spark.createDataFrame(
-            [(v,)], T.StructType([T.StructField(_VALUE_COL, T.StringType())])
-        )
-        # the table's OWN bucket expression (hash/format drift impossible)
-        bucket = {
-            r[0]
-            for r in vdf.select(
-                self.postings._bucket_expr(_VALUE_COL).alias("b")
-            ).collect()
-        }
-        return self._reduced(
-            self.postings.read(buckets=bucket).filter(F.col(_VALUE_COL) == v)
-        ).select(self.key)
+        return self._reduced(self.postings.lookup([str(value)])).select(self.key)
 
     # ------------------------------------------------------------- apply
     def apply(
@@ -216,97 +205,65 @@ class SecondaryIndexState:
         replayed = self.postings.replayed(batch_id)
         if replayed is not None:
             return replayed
-        # two jobs consume the batch (the bucket-range collect and the
-        # postings append) — cache unless the caller already did (the
-        # shared-reduce path in MergePipeline owns the lifecycle then)
-        already_cached = reduced_batch.storageLevel.useMemory or \
-            reduced_batch.storageLevel.useDisk
-        if not already_cached:
-            reduced_batch = reduced_batch.persist()
-        try:
-            return self._apply_cached(reduced_batch, base, batch_id,
-                                      inclusive_guard, has_seq)
-        finally:
-            if not already_cached:
-                reduced_batch.unpersist()
-
-    def _apply_cached(
-        self,
-        reduced_batch: DataFrame,
-        base: SnapshotTable,
-        batch_id: int,
-        inclusive_guard: bool = False,
-        has_seq: bool = True,
-    ) -> CommitResult:
         key, vcol = self.key, self.index_col
-        old = self._old_values(reduced_batch, base)
-        fresher = (
-            (F.col("_lsn_new") >= F.col("_old_lsn"))
-            if inclusive_guard
-            else (F.col("_lsn_new") > F.col("_old_lsn"))
-        )
-        joined = (
-            reduced_batch.select(
+        # two jobs consume the batch (the touched-rows key ranges and the
+        # postings append); MergePipeline's shared narrow reduce arrives
+        # cached and keeps its own lifecycle
+        with cached(reduced_batch) as reduced_batch:
+            # pre-epoch (key, old value, old lsn, liveness) for the batch's
+            # keys, off the files the merge itself reads
+            old = base.touched_rows(reduced_batch).select(
                 F.col(key).cast("string").alias(key),
-                F.col(vcol).cast("string").alias("_new_v"),
-                F.col(OP).alias("_op"),
-                F.col(LSN).alias("_lsn_new"),
+                F.col(vcol).cast("string").alias("_old_v"),
+                F.col(LSN_COL).alias("_old_lsn"),
+                (~F.coalesce(F.col(DELETED_COL), F.lit(False))).alias("_old_live"),
             )
-            .join(old, key, "left")
-            # mirror the merge's stale guard (incl. its inclusive form)
-            .filter(F.col("_old_lsn").isNull() | fresher)
-        )
-        old_live = F.coalesce(F.col("_old_live"), F.lit(False))
-        unchanged = (F.col("_op") != "D") & F.col("_new_v").eqNullSafe(
-            F.col("_old_v")
-        )
-        seq_cols = (
-            [F.lit(batch_id).cast("long").alias("seq")] if has_seq else []
-        )
-        close = joined.filter(
-            old_live & F.col("_old_v").isNotNull() & ~unchanged
-        ).select(
-            F.col("_old_v").alias(_VALUE_COL),
-            F.col(key),
-            F.col("_lsn_new").alias("lsn"),
-            *seq_cols,
-            F.lit(True).alias("tombstone"),
-        )
-        opens = joined.filter(
-            (F.col("_op") != "D")
-            & F.col("_new_v").isNotNull()
-            & ~(unchanged & old_live)
-        ).select(
-            F.col("_new_v").alias(_VALUE_COL),
-            F.col(key),
-            F.col("_lsn_new").alias("lsn"),
-            *seq_cols,
-            F.lit(False).alias("tombstone"),
-        )
-        return self.postings.append(close.unionByName(opens), batch_id=batch_id)
-
-    def _old_values(self, reduced_batch: DataFrame, base: SnapshotTable) -> DataFrame:
-        """Pre-epoch ``(key, old value, old lsn, liveness)`` for the
-        batch's keys — read from only the files the merge itself touches
-        (bucket ∩ key-range prune off the manifest, same as
-        ``plans/scd2.py::_old_rows``)."""
-        m = base.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        key = self.key
-        bucket_rows = (
-            reduced_batch.select(base._bucket_expr(key).alias("_b"), F.col(key))
-            .groupBy("_b")
-            .agg(F.min(key).alias("kmin"), F.max(key).alias("kmax"))
-            .collect()
-        )
-        bucket_ranges = {r["_b"]: (r["kmin"], r["kmax"]) for r in bucket_rows}
-        touched, _ = _split_touched_files(m["files"], bucket_ranges)
-        return base._read_file_entries(touched, schema).select(
-            F.col(key).cast("string").alias(key),
-            F.col(self.index_col).cast("string").alias("_old_v"),
-            F.col(LSN_COL).alias("_old_lsn"),
-            (~F.coalesce(F.col(DELETED_COL), F.lit(False))).alias("_old_live"),
-        )
+            fresher = (
+                (F.col("_lsn_new") >= F.col("_old_lsn"))
+                if inclusive_guard
+                else (F.col("_lsn_new") > F.col("_old_lsn"))
+            )
+            joined = (
+                reduced_batch.select(
+                    F.col(key).cast("string").alias(key),
+                    F.col(vcol).cast("string").alias("_new_v"),
+                    F.col(OP).alias("_op"),
+                    F.col(LSN).alias("_lsn_new"),
+                )
+                .join(old, key, "left")
+                # mirror the merge's stale guard (incl. its inclusive form)
+                .filter(F.col("_old_lsn").isNull() | fresher)
+            )
+            old_live = F.coalesce(F.col("_old_live"), F.lit(False))
+            unchanged = (F.col("_op") != "D") & F.col("_new_v").eqNullSafe(
+                F.col("_old_v")
+            )
+            seq_cols = (
+                [F.lit(batch_id).cast("long").alias("seq")] if has_seq else []
+            )
+            close = joined.filter(
+                old_live & F.col("_old_v").isNotNull() & ~unchanged
+            ).select(
+                F.col("_old_v").alias(_VALUE_COL),
+                F.col(key),
+                F.col("_lsn_new").alias("lsn"),
+                *seq_cols,
+                F.lit(True).alias("tombstone"),
+            )
+            opens = joined.filter(
+                (F.col("_op") != "D")
+                & F.col("_new_v").isNotNull()
+                & ~(unchanged & old_live)
+            ).select(
+                F.col("_new_v").alias(_VALUE_COL),
+                F.col(key),
+                F.col("_lsn_new").alias("lsn"),
+                *seq_cols,
+                F.lit(False).alias("tombstone"),
+            )
+            return self.postings.append(
+                close.unionByName(opens), batch_id=batch_id
+            )
 
     # ------------------------------------------------------------- maint
     def compact(self, batch_id: int | None = None) -> CommitResult:

@@ -681,9 +681,10 @@ FROM (
 
 
 def q_cdc_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The index's serve path: one value's keys through the bucket-pruned
-    read (``read(buckets=...)`` + per-value LWW reduce) — equal to the
-    final state filtered on the indexed column, without scanning it."""
+    """The index's serve path: one value's keys through the pruned
+    driver-side read (``SnapshotTable.lookup`` + per-value LWW reduce) —
+    equal to the final state filtered on the indexed column, without
+    scanning it."""
     _, idx = _secidx_pipeline(spark, sf_dir, "cdcidxl")
     return idx.lookup("purchase")
 

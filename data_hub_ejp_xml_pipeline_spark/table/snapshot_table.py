@@ -22,13 +22,18 @@ Design for 100 TB:
   data movement). ``files_per_bucket`` controls write fan-out so buckets
   are multi-file in the first place.
 * **Tasks sized by the rewrite, files by the layout.** A merge shuffles
-  its join inputs on the key into the smallest divisor of ``n_buckets``
-  partitions that gives each task about 1 MiB of the bytes it rewrites.
-  Because the bucket function is Spark's hash partitioning, each bucket
-  still lands whole in one task, and the write needs no third shuffle:
-  a small epoch into a 16-bucket table writes the same 16 files in one
-  task where it ran 16. Tables with ``files_per_bucket > 1`` keep
-  ``n_buckets * files_per_bucket`` tasks.
+  its join inputs on the key into J partitions: the smallest divisor of
+  ``n_buckets`` that gives each task about 1 MiB of the bytes it
+  rewrites (``n_buckets * files_per_bucket`` for multi-file buckets and
+  for a first commit). Because the bucket function is Spark's hash
+  partitioning, the write needs no third shuffle: a small epoch into a
+  16-bucket table writes the same 16 files in one task where it ran 16.
+  The layout's files per bucket hold only when J = 1 or J >= the
+  session's ``spark.sql.shuffle.partitions``. Below that Spark re-plans
+  both join inputs into that many partitions, and each bucket's rows
+  spread over several tasks and files (a 2-bucket table with
+  ``files_per_bucket=2`` under 8 shuffle partitions writes 4 files per
+  bucket).
 * **One commit point.** A commit = write immutable data files
   (:meth:`SnapshotTable._write_buckets`) → :meth:`SnapshotTable._publish`,
   the one step every commit after ``create`` takes: it builds the next
@@ -78,9 +83,8 @@ Design for 100 TB:
   :meth:`_write_buckets`, ``hook_s`` (the pre-commit barrier) and
   ``commit_s`` (:meth:`_publish`); plus ``files_read``,
   ``files_carried``, ``files_written``, ``rows_carried``,
-  ``bytes_written`` and ``write_tasks`` (the write's task count: the
-  join's partitions on a merge's bucket-aligned write, else the
-  range-partition count). A rewrite (DML, compaction, rebucket) carries the
+  ``bytes_written`` and ``write_tasks`` (the tasks that wrote the new
+  files, off their names). A rewrite (DML, compaction, rebucket) carries the
   keys of :meth:`_write_buckets` and :meth:`_publish`, a metadata-only
   commit ``commit_s``, a replayed or empty batch nothing. The counts
   come from the pre-pass, the manifests and one ``stat`` per new file:
@@ -92,6 +96,7 @@ from __future__ import annotations
 
 import itertools
 import bisect
+import contextlib
 import dataclasses
 import json
 import logging
@@ -445,6 +450,22 @@ class SnapshotTable:
         # explicit schema: old files lacking newly added columns → nulls
         return self.spark.read.schema(schema).parquet(*paths)
 
+    def touched_rows(self, batch: DataFrame) -> DataFrame:
+        """The stored rows (``_lsn`` and tombstones included) of the current
+        files a :meth:`merge` of ``batch`` would read: per-bucket key ranges
+        from the merge's own aggregation (:meth:`_batch_profile`, one job
+        over ``batch``'s key column), pruned by the same rule
+        (:func:`_split_touched_files`). States kept beside a table
+        (``plans.ivm``, ``plans.scd2``, ``plans.secondary_index``) read the
+        pre-epoch rows their epoch replaces through this before the merge
+        commits: O(touched files), never a table scan."""
+        m = self.manifest()
+        key = m["key"]
+        keys = batch.select(key).withColumn("_bucket", _bucket_col(key, m))
+        _, bucket_ranges, _ = self._batch_profile(keys, key)
+        touched, _ = _split_touched_files(m["files"], bucket_ranges)
+        return self._read_file_entries(touched, T.StructType.fromJson(m["schema"]))
+
     # --------------------------------------------------------------- lookup
     #: lookup() reads the pruned files and collects the matching rows on
     #: the driver; beyond this many keys that stops being a "point"
@@ -725,7 +746,11 @@ class SnapshotTable:
         on the key into n_buckets*files_per_bucket partitions, or into a
         divisor of n_buckets, is already bucket-aligned: each bucket's rows
         sit in one write task (or files_per_bucket of them) and the final
-        write needs NO extra exchange. (partitionBy routes rows
+        write needs NO extra exchange. That holds for the J partitions a
+        merge plans only when J = 1 or J >= the session's
+        ``spark.sql.shuffle.partitions``: below that Spark re-plans both
+        join inputs into that many partitions, and a bucket's rows spread
+        over several tasks, so several files. (partitionBy routes rows
         by VALUE, so a misalignment can only cost extra files, never
         correctness.)
 
@@ -892,24 +917,14 @@ class SnapshotTable:
         # Without a caller-provided stats_df the SAME ``updates`` plan feeds
         # both the stats/lineage pre-pass and the write job — an expensive
         # upstream (LWW reduce, JSON decode, a join pipeline) would execute
-        # TWICE per commit. Persist it across the two consumers (first
-        # action materializes, second reads the cache) unless the caller
-        # already owns a cache. Callers with a cheap raw batch pass
-        # ``stats_df`` and skip this entirely (see merge() docstring).
-        owned_cache = False
-        if stats_df is None and not (
-            updates.storageLevel.useMemory or updates.storageLevel.useDisk
-        ):
-            updates = updates.persist()
-            owned_cache = True
-        try:
+        # TWICE per commit. Callers with a cheap raw batch pass ``stats_df``
+        # and skip the cache (see merge() docstring).
+        keep = cached(updates) if stats_df is None else contextlib.nullcontext(updates)
+        with keep as updates:
             return self._commit_inner(
                 updates, operation, batch_id,
                 stats_df, inclusive_guard, m, pre_commit_hook, t0,
             )
-        finally:
-            if owned_cache:
-                updates.unpersist()
 
     def _commit_inner(
         self,
@@ -1028,8 +1043,7 @@ class SnapshotTable:
         table_rows = sum(f["rows"] for f in m["files"])
         rows_per_file = max(1, -(-max(table_rows, est_rows) // max_parts))
         n_parts = min(max_parts, max(1, -(-est_rows // rows_per_file)))
-        aligned = merge and n_parts == max_parts
-        if not aligned:
+        if not (merge and n_parts == max_parts):
             # small pruned merges / appends: range-partition on
             # (bucket, key) so the few rows stay in few, range-tight files
             # (with files_per_bucket > 1 the sub-files get NON-overlapping
@@ -1060,7 +1074,6 @@ class SnapshotTable:
             "files_read": len(touched_entries),
             "files_carried": len(carried),
             "rows_carried": sum(f["rows"] for f in carried),
-            "write_tasks": join_parts if aligned else n_parts,
         }
         res = self._publish(
             m, f"b{batch_id if batch_id is not None else 'x'}",
@@ -1085,7 +1098,10 @@ class SnapshotTable:
         the key). Returns the new files' manifest entries, read off their
         footers, and the write's record: ``write_s`` (the parquet write
         job), ``footers_s`` (footer reads + one ``stat`` per new file),
-        ``files_written`` and ``bytes_written``."""
+        ``files_written``, ``bytes_written`` and ``write_tasks``: the tasks
+        that wrote files, counted off the ``part-NNNNN`` task ids in the
+        new files' names (a caller's planned partition count need not be
+        what ran, see :func:`_join_partitions`)."""
         t0 = time.perf_counter()
         key = m["key"]
         snap_rel = _snap_dir_name(m["version"] + 1)
@@ -1104,6 +1120,7 @@ class SnapshotTable:
             "footers_s": time.perf_counter() - t1,
             "files_written": len(files),
             "bytes_written": nbytes,
+            "write_tasks": len({os.path.basename(f["path"]).split("-")[1] for f in files}),
         }
 
     def _publish(
@@ -2001,6 +2018,21 @@ def _bucket_col(key: str, m: dict[str, Any]) -> F.Column:
             "'murmur3' tables are read (rewrite a round-1 xxhash64 table into a fresh one)"
         )
     return F.pmod(F.hash(kcol), F.lit(m["n_buckets"])).cast("int")
+
+
+@contextlib.contextmanager
+def cached(df: DataFrame):
+    """``df`` persisted for the ``with`` block (a frame that feeds more
+    than one job) and released after it, unless the caller already cached
+    it and so owns the cache."""
+    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+        yield df
+        return
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def _write_temp(meta: str, text: str) -> str:

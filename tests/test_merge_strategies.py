@@ -1,9 +1,10 @@
 """The single merge plan (pruned sort-merge full outer join) on the edges
 the shared-fixture suites do not reach: the oracle over two merges, the
 refused round-1 bucket format, LSNs above 2^53, a failing stats
-pre-pass, the join's task count sized by the bytes a merge rewrites, and
+pre-pass, the join's task count sized by the bytes a merge rewrites, the
+tasks a write reports, the rows a merge's pruned target read returns, and
 the Spark jobs of a full-fan-out epoch (no third shuffle before the
-bucket-aligned write)."""
+bucket-aligned write) and of an epoch with sidecar states attached."""
 
 from __future__ import annotations
 
@@ -195,6 +196,80 @@ def test_join_partitions_divide_the_buckets():
     assert _join_partitions(m16, [(0, 600)], 500, 8) == 16  # only empty files
 
 
+def test_write_tasks_counts_the_tasks_that_wrote(spark, tmp_path, changelog_pdf):
+    """``write_tasks`` is the number of tasks whose files a commit added,
+    read off the part-file names. A 2-bucket, two-files-per-bucket table
+    plans its join in 4 partitions, but Spark raises the count of two
+    co-partitioned shuffles to the session's 8 shuffle partitions, so the
+    merge writes 8 files from 8 tasks, 4 per bucket."""
+    import os
+
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "fpb2"), PAYLOAD_SCHEMA, n_buckets=2,
+        files_per_bucket=2,
+    )
+    res = _merged(spark, table, changelog_pdf.iloc[:2_000], 0)
+    files = table.manifest()["files"]
+    tasks = {os.path.basename(f["path"]).split("-")[1] for f in files}
+    assert (len(files), len(tasks)) == (8, 8)
+    assert sorted(f["bucket"] for f in files) == [0] * 4 + [1] * 4
+    assert res.record["write_tasks"] == 8
+
+
+def test_touched_rows_are_the_rows_a_merge_reads(spark, tmp_path, changelog_pdf):
+    """``touched_rows(batch)`` returns the stored rows, tombstones included,
+    of exactly the files ``_split_touched_files`` keeps for the batch's
+    per-bucket key ranges: the target read of a merge of that batch."""
+    import os
+    from urllib.parse import urlparse
+
+    from data_hub_ejp_xml_pipeline_spark.table.snapshot_table import (
+        _split_touched_files,
+    )
+
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "touched"), PAYLOAD_SCHEMA, n_buckets=8
+    )
+    _merged(spark, table, changelog_pdf, 0)
+    keys = sorted(changelog_pdf["doc_id"].unique())[:3]
+    batch = spark.createDataFrame([(k, "x") for k in keys], "doc_id string, other string")
+    ranges: dict = {}
+    for b, k in batch.select(F.pmod(F.hash("doc_id"), F.lit(8)), "doc_id").collect():
+        lo, hi = ranges.get(b, (k, k))
+        ranges[b] = (min(lo, k), max(hi, k))
+    touched, carried = _split_touched_files(table.manifest()["files"], ranges)
+    assert touched and carried  # the prune has files to skip
+    paths = {os.path.join(table.root, f["path"]) for f in touched}
+
+    got = table.touched_rows(batch)
+    assert {urlparse(u).path for u in got.inputFiles()} == paths
+    every = table.read(include_tombstones=True)
+    assert got.columns == every.columns
+    want = {
+        r.doc_id: {c: r[c] for c in every.columns}
+        for r in every.withColumn("_f", F.input_file_name()).collect()
+        if urlparse(r._f).path in paths
+    }
+    rows = [r.asDict() for r in got.collect()]
+    assert any(r["_deleted"] for r in rows)  # tombstones are returned
+    assert len(rows) == len(want) and {r["doc_id"]: r for r in rows} == want
+
+
+def _epoch_jobs(spark, group, epoch):
+    """``epoch()``'s result and the ids of the Spark jobs it ran, those of
+    its driver threads included (they keep the caller's job group)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, "epoch")
+        res = epoch()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return res, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+
+
 def test_full_fan_out_epoch_runs_six_spark_jobs(spark, tmp_path, changelog_pdf):
     """A MergePipeline epoch that rewrites every file runs six Spark jobs:
     the pre-pass aggregation (its shuffle stage and result), the shuffle
@@ -203,18 +278,46 @@ def test_full_fan_out_epoch_runs_six_spark_jobs(spark, tmp_path, changelog_pdf):
     sampling job) would add jobs here."""
     from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
 
-    sc = spark.sparkContext
     pipe = MergePipeline(spark, str(tmp_path / "jobs"), n_buckets=16)
     pipe.apply(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:-400]), batch_id=0)
     batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[-400:])
-    try:
-        sc.setJobGroup("full-fan-out-epoch", "epoch")
-        res = pipe.apply(batch, batch_id=1)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = sc.statusTracker().getJobIdsForGroup("full-fan-out-epoch")
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
+    res, jobs = _epoch_jobs(
+        spark, "full-fan-out-epoch", lambda: pipe.apply(batch, batch_id=1)
+    )
     assert res.record["files_carried"] == 0
     assert len(jobs) == 6, sorted(jobs)
+
+
+def test_sidecar_epoch_runs_forty_spark_jobs(spark, tmp_path, changelog_pdf):
+    """The same epoch with the three states that read the pre-epoch base
+    attached (aggregate view, type-2 history, secondary index) runs 40
+    Spark jobs: the six of the base merge, and for each state one
+    key-range aggregation for its touched-rows read plus the jobs of its
+    own commit."""
+    from data_hub_ejp_xml_pipeline_spark.plans.ivm import IncrementalAggState
+    from data_hub_ejp_xml_pipeline_spark.plans.pipeline import MergePipeline
+    from data_hub_ejp_xml_pipeline_spark.plans.scd2 import Scd2State
+    from data_hub_ejp_xml_pipeline_spark.plans.secondary_index import (
+        SecondaryIndexState,
+    )
+
+    root = str(tmp_path)
+    pipe = MergePipeline(
+        spark, root + "/tbl", n_buckets=16,
+        ivm_state=IncrementalAggState(
+            spark, root + "/ivm", group_col="source", value_col="n_tok"
+        ),
+        scd2_state=Scd2State(
+            spark, root + "/scd2", payload_schema=PAYLOAD_SCHEMA, n_buckets=2
+        ),
+        index_state=SecondaryIndexState(
+            spark, root + "/idx", index_col="source", n_buckets=2
+        ),
+    )
+    pipe.apply(spark_changelog_from_pandas(spark, changelog_pdf.iloc[:-400]), batch_id=0)
+    batch = spark_changelog_from_pandas(spark, changelog_pdf.iloc[-400:])
+    res, jobs = _epoch_jobs(
+        spark, "sidecar-epoch", lambda: pipe.apply(batch, batch_id=1)
+    )
+    assert res.applied and res.record["files_carried"] == 0
+    assert len(jobs) == 40, sorted(jobs)

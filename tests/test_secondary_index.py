@@ -133,23 +133,28 @@ def test_index_compact_preserves_and_shrinks(spark, tmp_path):
 
 
 def test_index_lookup_prunes_to_one_bucket(spark, tmp_path):
+    """``lookup(value)`` returns the value's keys in the live index and
+    reads only the posting files of the value's hash bucket whose key
+    range holds it."""
     pdf = generate_changelog_pandas(n_events=1_500, seed=31)
     _, idx = _apply_epochs(
         spark, pdf, str(tmp_path / "tbl"), str(tmp_path / "idx")
     )
     m = idx.postings.manifest()
-    buckets_present = {f["bucket"] for f in m["files"]}
-    assert len(buckets_present) > 1  # the prune has something to skip
-    value = str(pdf["source"].dropna().iloc[0])
-    vdf = spark.createDataFrame([(value,)], "value string")
-    b = {
-        r[0]
-        for r in vdf.select(idx.postings._bucket_expr("value").alias("b")).collect()
-    }
-    assert len(b) == 1
-    # the pruned read touches strictly fewer files than the full scan
-    pruned_files = [f for f in m["files"] if f["bucket"] in b]
-    assert 0 < len(pruned_files) < len(m["files"])
+    assert len({f["bucket"] for f in m["files"]}) > 1  # the prune has something to skip
+    index = {(r[0], r[1]) for r in idx.read_index().collect()}
+    for value in sorted({str(v) for v in pdf["source"].dropna()})[:5]:
+        want = {k for v, k in index if v == value}
+        assert {r[0] for r in idx.lookup(value).collect()} == want, value
+        (b,) = spark.range(1).select(
+            F.pmod(F.hash(F.lit(value)), F.lit(m["n_buckets"]))
+        ).first()
+        pruned = [
+            f for f in m["files"]
+            if f["bucket"] == b and f["key_min"] <= value <= f["key_max"]
+        ]
+        assert idx.postings._lookup_entries([value], m) == pruned, value
+        assert 0 < len(pruned) < len(m["files"])
 
 
 def test_index_null_values_not_indexed(spark, tmp_path):

@@ -569,10 +569,11 @@ def test_metadata_tables_history_and_files(spark, tmp_path, changelog_pdf):
 # replace) times every phase; a rewrite (DML, compaction, rebucket) carries
 # its write and publish; a metadata-only commit its publish
 PUBLISH_RECORD = {"commit_s"}
-WRITE_RECORD = PUBLISH_RECORD | {"write_s", "footers_s", "files_written", "bytes_written"}
+WRITE_RECORD = PUBLISH_RECORD | {
+    "write_s", "footers_s", "files_written", "bytes_written", "write_tasks",
+}
 DATA_RECORD = WRITE_RECORD | {
     "prepass_s", "plan_s", "hook_s", "files_read", "files_carried", "rows_carried",
-    "write_tasks",
 }
 
 
